@@ -416,7 +416,7 @@ object AnalyticsQueries {
   // "Top 3 orders per priority" — the report every warehouse serves.
   // The standard row_number window + filter sorts every group's full
   // slice (and a 5-value partition key funnels the corpus through 5
-  // tasks); plans/TopKPairsLong instead carries k 16-byte pairs per
+  // tasks); plans/TopKPairs instead carries k 16-byte pairs per
   // group per task, combines MAP-SIDE, and merges as a bounded ordered
   // union — the shuffle moves |groups| x k pairs, not the table. The
   // oracle IS the window form, so the driver hash-checks the native

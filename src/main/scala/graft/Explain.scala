@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: inspect schemas and physical plans.
   *
@@ -9,16 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     args.toList match {
       case "read" :: path :: Nil =>
         val df = spark.read.parquet(path)
@@ -29,52 +19,7 @@ object Explain {
       case "run" :: name :: sfDir :: Nil =>
         Queries.queries(name)(spark, sfDir).show(20, truncate = false)
       case "sql" :: stmt :: Nil =>
-        graft.plans.GraftExtensions.register(spark)
         spark.sql(stmt).show(20, truncate = false)
-      case "kcenter" :: sfDir :: k :: Nil =>
-        // time the parameterized greedy k-center walk (VERDICT r9 #6):
-        // one warm-up, then min-of-2 — documents the k-knee of the
-        // driver-loop design in docs/SCALING.md
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          VectorQueries.kCenterCoreset(spark, sfDir, k.toInt)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once() // warm-up: codegen/JIT
-        val t = Seq(once(), once()).min
-        println(f"kcenter k=$k sf=$sfDir min_sec=$t%.2f")
-      case "bpetrain" :: sfDir :: rounds :: Nil =>
-        // time the parameterized BPE training walk — documents the
-        // rounds-knee of the driver-loop design (the q201 k-knee
-        // discipline) in docs/SCALING.md
-        def onceB(): Double = {
-          val t0 = System.nanoTime()
-          TextQueries.bpeTrain(spark, sfDir, rounds.toInt)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        onceB() // warm-up: codegen/JIT
-        val tB = Seq(onceB(), onceB()).min
-        println(f"bpetrain rounds=$rounds sf=$sfDir min_sec=$tB%.2f")
-      case "bpebatch" :: sfDir :: rounds :: p :: cap :: Nil =>
-        // time the BATCHED training walk at (rounds, p, topCap) —
-        // documents the p-knee of the batched driver-loop design
-        // (VERDICT r10 #4): equal-merge-budget sweeps hold rounds*p
-        // constant and vary p, so the knee is where compatible-
-        // candidate exhaustion stops p from buying fewer round-trips
-        var got = 0L
-        def onceP(): Double = {
-          val t0 = System.nanoTime()
-          val out = TextQueries.bpeTrainBatched(spark, sfDir,
-            rounds.toInt, p.toInt, cap.toInt)
-          got = out.count() // merge count: observes exhaustion
-          (System.nanoTime() - t0) / 1e9
-        }
-        onceP() // warm-up: codegen/JIT
-        val tP = Seq(onceP(), onceP()).min
-        println(f"bpebatch rounds=$rounds p=$p cap=$cap sf=$sfDir " +
-          f"merges=$got min_sec=$tP%.2f")
       case "planmany" :: sfDir :: outDir :: names :: Nil =>
         // Dump `.explain("formatted")` for a comma-separated query list
         // into <outDir>/<query>.txt in ONE session (the plans/r13

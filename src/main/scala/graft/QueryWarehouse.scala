@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** SQL serving over the pipeline's warehouse — the analog of the
   * reference's `scripts/query_duckdb.py` (SHOW TABLES + ad-hoc
   * ORDER BY ... LIMIT serving queries, query_duckdb.py:6-27), with
@@ -19,16 +17,7 @@ import org.apache.spark.sql.SparkSession
 object QueryWarehouse {
   def main(args: Array[String]): Unit = {
     val wh = args.headOption.getOrElse(sys.error("usage: QueryWarehouse <warehouseDir> [sql...]"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = GraftSession()
 
     val listing = java.nio.file.Files.list(java.nio.file.Paths.get(wh))
     try {

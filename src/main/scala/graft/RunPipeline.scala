@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.{Pipeline, RunConfig}
 import graft.sources.{FixtureFetcher, HttpJsonFetcher, BcbSource, IbgeSource}
 
@@ -22,16 +20,7 @@ object RunPipeline {
       case c :: s :: r :: f :: Nil => (c, s, r, Some(f))
       case other => sys.error(s"usage: RunPipeline <configJson> <seriesCsv> <rootDir> [fixtureDir]; got $other")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val cfg = RunConfig.fromFile(configPath)
     val fetcher = fixtureDir match {

@@ -2169,7 +2169,7 @@ object VectorQueries {
   //
   // Plan shape (VERDICT r9 #1): the Hamming scan carries ONLY
   // (qid, cid, hamming); per-query ranking is the bounded map-side-
-  // combining top-k aggregate (plans/TopKPairsLong — the q125
+  // combining top-k aggregate (plans/TopKPairs — the q125
   // discipline; hamming is negated because the aggregate's total order
   // is value DESC, id ASC), so no row_number window ever funnels the
   // corpus through |queries| partitions; and the exact integer-cosine
@@ -2398,7 +2398,7 @@ object VectorQueries {
           VectorOps.cosine(VectorOps.qdot(col("qq"), col("cq")),
             col("qn2"), col("cn2")).as("cos_sim"))
         .groupBy(col("qid"))
-        .agg(TopK.topKPairsDouble(col("cos_sim"), col("cid"), 10).as("tk"))
+        .agg(TopK.topKPairs(col("cos_sim"), col("cid"), 10).as("tk"))
         .select(col("qid"), explode(col("tk.id")).as("cid"))
       // Hamming top-10 at each signature width: 1 word (dims 1..64)
       // and the full 3 words; ties (hamming ASC, cid ASC)
@@ -2521,7 +2521,7 @@ object VectorQueries {
           VectorOps.cosine(VectorOps.qdot(col("qq"), col("cq")),
             col("qn2"), col("cn2")).as("cos_sim"))
         .groupBy(col("qid"))
-        .agg(TopK.topKPairsDouble(col("cos_sim"), col("cid"), 10).as("tk"))
+        .agg(TopK.topKPairs(col("cos_sim"), col("cid"), 10).as("tk"))
         .select(col("qid"), explode(col("tk.id")).as("cid"))
       def hammingTop(words: Int) = pairs
         .select(col("qid"), col("cid"),
@@ -2651,7 +2651,7 @@ object VectorQueries {
     shortlist.join(broadcast(srcs), Seq("cid"))
       .filter(col("source").isin(FilterSources: _*))
       .groupBy(col("qid"))
-      .agg(TopK.topKPairsDouble(col("cos_sim"), col("cid"), 3).as("tk"))
+      .agg(TopK.topKPairs(col("cos_sim"), col("cid"), 3).as("tk"))
       .select(col("qid"), posexplode(col("tk")))
       .select(col("qid"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("cid"), col("col.v").as("cos_sim"))

@@ -300,7 +300,7 @@ object IvfIndex {
         VectorOps.cosine(VectorOps.qdot(col("qq"), col("q")),
           col("qn2"), col("n2")).as("cos_sim"))
       .groupBy(col("qid"))
-      .agg(TopK.topKPairsDouble(col("cos_sim"), col("cid"), topk).as("tk"))
+      .agg(TopK.topKPairs(col("cos_sim"), col("cid"), topk).as("tk"))
       .select(col("qid"), posexplode(col("tk")))
       .select(col("qid"), col("col.id").as("cid"), col("col.v").as("cos_sim"))
   }

@@ -387,7 +387,7 @@ object IvfPqIndex {
     // once — no self-join, no re-scan of the codes table.
     scored
       .groupBy(col("qid"))
-      .agg(TopK.topKPairsDouble(col("cos_sim"), col("cid"), topk).as("tk"),
+      .agg(TopK.topKPairs(col("cos_sim"), col("cid"), topk).as("tk"),
         map_from_entries(collect_list(struct(col("cid"), col("adc_dot"))))
           .as("adcm"))
       .select(col("qid"), col("adcm"), posexplode(col("tk")))

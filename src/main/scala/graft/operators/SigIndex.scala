@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * BIT-IDENTICAL results to q202, which is what lets q203 reuse q202's
   * DuckDB oracle verbatim (the q196/q40 pattern). Ranking is the
   * bounded map-side-combining top-k aggregate
-  * ([[graft.plans.TopKPairsLong]]), never a row_number window — the
+  * ([[graft.plans.TopKPairs]]), never a row_number window — the
   * shuffle moves queries x topk pairs, not the candidate set.
   *
   * Atomic REPLACEMENT of a live index rides the pipeline tier-commit

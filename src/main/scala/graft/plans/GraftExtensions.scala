@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Session-extension registration for this library's custom expressions,
   * so SQL surfaces can use them too:
@@ -16,22 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.arrayDotLong)
-    ext.injectFunction(GraftExtensions.kmvSketchLong)
-    ext.injectFunction(GraftExtensions.quantilePairSketch)
-    ext.injectFunction(GraftExtensions.cellArgmaxCosineLong)
-    ext.injectFunction(GraftExtensions.imageDimsLong)
-    ext.injectFunction(GraftExtensions.audioMetaLong)
-    ext.injectFunction(GraftExtensions.misraGriesTerms)
-    ext.injectFunction(GraftExtensions.zorderLong)
-    ext.injectFunction(GraftExtensions.bmpDhashLong)
-    ext.injectFunction(GraftExtensions.bpeCountLong)
-    ext.injectFunction(GraftExtensions.bpeCountTextLong)
-    ext.injectFunction(GraftExtensions.bpeSegmentsArray)
-    ext.injectFunction(GraftExtensions.multiMatchPackLong)
-    ext.injectFunction(GraftExtensions.topKPairsLong)
-    ext.injectFunction(GraftExtensions.topKPairsDouble)
-    ext.injectFunction(GraftExtensions.videoMetaLong)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
   }
 }
@@ -50,119 +36,79 @@ object GraftExtensions {
       s"$what must be a literal, got $other")
   }
 
-  private val arrayDotLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("array_dot_long"),
-    new ExpressionInfo(classOf[ArrayDotLong].getName, "array_dot_long"),
-    (children: Seq[Expression]) => {
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  // both SQL names build the one TopKPairs; the name pins the value type
+  private def topKPairs(name: String, valueType: DataType) =
+    fn(name, classOf[TopKPairs]) { children =>
+      require(children.length == 3,
+        s"$name takes (value ${valueType.sql}, id BIGINT, k INT)")
+      require(!children(0).resolved || children(0).dataType == valueType,
+        s"$name needs a ${valueType.sql} value, got ${children(0).dataType.sql}")
+      // returned raw, like kmv_sketch_long: the analyzer wraps a bare
+      // AggregateFunction in its AggregateExpression during resolution
+      TopKPairs(children(0), children(1), literalInt(children(2), s"$name k"))
+    }
+
+  /** Every SQL function of this library — the one list both the session
+    * extension and [[register]] install. */
+  private val functions = Seq(
+    fn("array_dot_long", classOf[ArrayDotLong]) { children =>
       require(children.length == 2, "array_dot_long takes exactly 2 arguments")
       ArrayDotLong(children.head, children(1))
-    })
-
-  private val kmvSketchLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kmv_sketch_long"),
-    new ExpressionInfo(classOf[KmvSketchLong].getName, "kmv_sketch_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("kmv_sketch_long", classOf[KmvSketchLong]) { children =>
       require(children.length == 2, "kmv_sketch_long takes (hash BIGINT, k INT)")
       KmvSketchLong(children.head, literalInt(children(1), "kmv_sketch_long k"))
-    })
-
-  private val quantilePairSketch: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("quantile_pair_sketch"),
-    new ExpressionInfo(classOf[QuantilePairSketch].getName, "quantile_pair_sketch"),
-    (children: Seq[Expression]) => {
+    },
+    fn("quantile_pair_sketch", classOf[QuantilePairSketch]) { children =>
       require(children.length == 3,
         "quantile_pair_sketch takes (hash BIGINT, value DOUBLE, k INT)")
       QuantilePairSketch(children(0), children(1),
         literalInt(children(2), "quantile_pair_sketch k"))
-    })
-
-  private val cellArgmaxCosineLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cell_argmax_cosine_long"),
-    new ExpressionInfo(classOf[CellArgMaxCosineLong].getName, "cell_argmax_cosine_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("cell_argmax_cosine_long", classOf[CellArgMaxCosineLong]) { children =>
       require(children.length == 5,
         "cell_argmax_cosine_long takes (q, qn2, cells, cqs, cn2s)")
       CellArgMaxCosineLong(children(0), children(1), children(2), children(3), children(4))
-    })
-
-  private val bmpDhashLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_dhash_long"),
-    new ExpressionInfo(classOf[BmpDhashLong].getName, "bmp_dhash_long"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "bmp_dhash_long takes exactly 1 argument")
-      BmpDhashLong(children.head)
-    })
-
-  private val imageDimsLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("image_dims_long"),
-    new ExpressionInfo(classOf[ImageDimsLong].getName, "image_dims_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("image_dims_long", classOf[ImageDimsLong]) { children =>
       require(children.length == 1, "image_dims_long takes exactly 1 argument")
       ImageDimsLong(children.head)
-    })
-
-  private val audioMetaLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("audio_meta_long"),
-    new ExpressionInfo(classOf[AudioMetaLong].getName, "audio_meta_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("audio_meta_long", classOf[AudioMetaLong]) { children =>
       require(children.length == 1, "audio_meta_long takes exactly 1 argument")
       AudioMetaLong(children.head)
-    })
-
-  private val videoMetaLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("video_meta_long"),
-    new ExpressionInfo(classOf[VideoMetaLong].getName, "video_meta_long"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "video_meta_long takes exactly 1 argument")
-      VideoMetaLong(children.head)
-    })
-
-  private val zorderLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("zorder_long"),
-    new ExpressionInfo(classOf[ZOrderLong].getName, "zorder_long"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "zorder_long takes exactly 2 arguments")
-      ZOrderLong(children.head, children(1))
-    })
-
-  private val misraGriesTerms: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("misra_gries_terms"),
-    new ExpressionInfo(classOf[MisraGriesTerms].getName, "misra_gries_terms"),
-    (children: Seq[Expression]) => {
+    },
+    fn("misra_gries_terms", classOf[MisraGriesTerms]) { children =>
       require(children.length == 2, "misra_gries_terms takes (term STRING, k INT)")
       MisraGriesTerms(children.head, literalInt(children(1), "misra_gries_terms k"))
-    })
-
-  private val bpeCountLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bpe_count_long"),
-    new ExpressionInfo(classOf[BpeCountLong].getName, "bpe_count_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("zorder_long", classOf[ZOrderLong]) { children =>
+      require(children.length == 2, "zorder_long takes exactly 2 arguments")
+      ZOrderLong(children.head, children(1))
+    },
+    fn("bmp_dhash_long", classOf[BmpDhashLong]) { children =>
+      require(children.length == 1, "bmp_dhash_long takes exactly 1 argument")
+      BmpDhashLong(children.head)
+    },
+    fn("bpe_count_long", classOf[BpeCountLong]) { children =>
       require(children.length == 1, "bpe_count_long takes exactly 1 argument")
       BpeCountLong(children.head)
-    })
-
-  private val bpeCountTextLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bpe_count_text_long"),
-    new ExpressionInfo(classOf[BpeCountTextLong].getName, "bpe_count_text_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("bpe_count_text_long", classOf[BpeCountTextLong]) { children =>
       require(children.length == 1,
         "bpe_count_text_long takes exactly 1 argument")
       BpeCountTextLong(children.head)
-    })
-
-  private val bpeSegmentsArray: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bpe_segments_array"),
-    new ExpressionInfo(classOf[BpeSegmentsArray].getName, "bpe_segments_array"),
-    (children: Seq[Expression]) => {
+    },
+    fn("bpe_segments_array", classOf[BpeSegmentsArray]) { children =>
       require(children.length == 1,
         "bpe_segments_array takes exactly 1 argument")
       BpeSegmentsArray(children.head)
-    })
-
-  private val multiMatchPackLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("multi_match_pack_long"),
-    new ExpressionInfo(classOf[MultiMatchPackLong].getName, "multi_match_pack_long"),
-    (children: Seq[Expression]) => {
+    },
+    fn("multi_match_pack_long", classOf[MultiMatchPackLong]) { children =>
       require(children.length == 2,
         "multi_match_pack_long takes (text STRING, patterns ARRAY<STRING> literal)")
       // SQL callers pass an array literal; the expression wants the
@@ -189,37 +135,17 @@ object GraftExtensions {
       MultiMatchPackLong(children.head,
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           spec, org.apache.spark.sql.types.StringType))
-    })
-
-  private val topKPairsLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("top_k_pairs_long"),
-    new ExpressionInfo(classOf[TopKPairsLong].getName, "top_k_pairs_long"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3,
-        "top_k_pairs_long takes (value BIGINT, id BIGINT, k INT)")
-      // returned raw, like kmv_sketch_long: the analyzer wraps a bare
-      // AggregateFunction in its AggregateExpression during resolution
-      TopKPairsLong(children(0), children(1),
-        literalInt(children(2), "top_k_pairs_long k"))
-    })
-
-  private val topKPairsDouble: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("top_k_pairs_double"),
-    new ExpressionInfo(classOf[TopKPairsDouble].getName, "top_k_pairs_double"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3,
-        "top_k_pairs_double takes (value DOUBLE, id BIGINT, k INT)")
-      TopKPairsDouble(children(0), children(1),
-        literalInt(children(2), "top_k_pairs_double k"))
+    },
+    topKPairs("top_k_pairs_long", LongType),
+    topKPairs("top_k_pairs_double", DoubleType),
+    fn("video_meta_long", classOf[VideoMetaLong]) { children =>
+      require(children.length == 1, "video_meta_long takes exactly 1 argument")
+      VideoMetaLong(children.head)
     })
 
   /** Idempotent registration on an already-built session. */
-  def register(spark: SparkSession): Unit = {
-    for ((id, info, builder) <-
-           Seq(arrayDotLong, kmvSketchLong, quantilePairSketch, cellArgmaxCosineLong,
-             imageDimsLong, audioMetaLong, misraGriesTerms, zorderLong,
-             bmpDhashLong, bpeCountLong, bpeCountTextLong, bpeSegmentsArray,
-             multiMatchPackLong, topKPairsLong, topKPairsDouble, videoMetaLong))
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-  }
+    }
 }

@@ -17,18 +17,29 @@ import org.apache.spark.sql.types._
   * Why this exists: the standard "top-3 rows per group" is a
   * `row_number` window + filter — which SORTS every group's full slice
   * (and with a low-cardinality group key funnels the corpus through
-  * few partitions; the q63/q120 anti-pattern). This aggregate carries
-  * at most k 16-byte pairs per group per task, combines MAP-SIDE like
-  * any partial aggregate, and merges as a bounded ordered union — the
-  * shuffle moves |groups| x k pairs, not the table. The id tiebreaker
-  * makes the result a pure function of the input SET: deterministic on
-  * any partition layout, replayable by a `row_number` oracle.
+  * few partitions; the q63/q120 anti-pattern). The serving probes'
+  * final top-k (IVF / IVF-PQ / sign-hash, ranked by an exact cosine)
+  * had the same shape, with the per-qid window as the widest stage of
+  * the serving path. This aggregate carries at most k 16-byte pairs per
+  * group per task, combines MAP-SIDE like any partial aggregate, and
+  * merges as a bounded ordered union — the shuffle moves |groups| x k
+  * pairs, not the table. The id tiebreaker makes the result a pure
+  * function of the input SET: deterministic on any partition layout,
+  * replayable by a `row_number` oracle.
   *
-  * Returns a sorted ARRAY<STRUCT<v BIGINT, id BIGINT>> (best first,
-  * size ≤ k); callers posexplode to (rank, value, id) rows. Rows with
-  * a null value or id are ignored (SQL aggregate semantics).
+  * `value` is BIGINT (`top_k_pairs_long`) or DOUBLE
+  * (`top_k_pairs_double`); `id` is BIGINT. A DOUBLE value is held as
+  * the order-preserving long key of [[TopKPairs.encodeDouble]], so one
+  * buffer, comparator and serializer serve both: key order equals
+  * `java.lang.Double.compare` (-0.0 below 0.0, NaN above +Infinity),
+  * which is `desc_nulls_last` window order for non-null values.
+  *
+  * Returns a sorted ARRAY<STRUCT<v, id BIGINT>> with `v` of the value's
+  * type (best first, size ≤ k); callers posexplode to (rank, value, id)
+  * rows. Rows with a null value or id are ignored (SQL aggregate
+  * semantics).
   */
-case class TopKPairsLong(
+case class TopKPairs(
     value: Expression,
     id: Expression,
     k: Int,
@@ -42,22 +53,24 @@ case class TopKPairsLong(
 
   override def nullable: Boolean = false
 
+  private def isDouble: Boolean = value.dataType == DoubleType
+
   override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("v", LongType, nullable = false),
+    StructType(Seq(StructField("v", value.dataType, nullable = false),
       StructField("id", LongType, nullable = false))),
     containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (value.dataType, id.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
+      case (LongType | DoubleType, LongType) => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"top_k_pairs_long needs (BIGINT, BIGINT) inputs, got $other")
+        s"$prettyName needs (BIGINT or DOUBLE, BIGINT) inputs, got $other")
     }
 
   // best-first order: value DESC, then id ASC — buffer.last() is the
   // current worst, so trimming keeps the k best (a named Serializable
   // comparator: the aggregate ships to executors inside task closures)
-  private def ord: Comparator[(Long, Long)] = TopKPairsLong.BestFirst
+  private def ord: Comparator[(Long, Long)] = TopKPairs.BestFirst
 
   override def createAggregationBuffer(): java.util.TreeSet[(Long, Long)] =
     new java.util.TreeSet[(Long, Long)](ord)
@@ -67,8 +80,13 @@ case class TopKPairsLong(
       input: InternalRow): java.util.TreeSet[(Long, Long)] = {
     val v = value.eval(input)
     val i = id.eval(input)
-    if (v != null && i != null)
-      add(buffer, (v.asInstanceOf[Long], i.asInstanceOf[Long]))
+    if (v != null && i != null) {
+      val key = v match {
+        case d: Double => TopKPairs.encodeDouble(d)
+        case l => l.asInstanceOf[Long]
+      }
+      add(buffer, (key, i.asInstanceOf[Long]))
+    }
     buffer
   }
 
@@ -90,12 +108,14 @@ case class TopKPairsLong(
   }
 
   override def eval(buffer: java.util.TreeSet[(Long, Long)]): Any = {
+    val double = isDouble
     val out = new Array[Any](buffer.size())
     val it = buffer.iterator()
     var i = 0
     while (it.hasNext) {
       val p = it.next()
-      out(i) = new GenericInternalRow(Array[Any](p._1, p._2))
+      val v: Any = if (double) TopKPairs.decodeDouble(p._1) else p._1
+      out(i) = new GenericInternalRow(Array[Any](v, p._2))
       i += 1
     }
     new GenericArrayData(out) // TreeSet iterates best-first by ord
@@ -118,23 +138,39 @@ case class TopKPairsLong(
     buffer
   }
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKPairsLong =
+  override def withNewMutableAggBufferOffset(newOffset: Int): TopKPairs =
     copy(mutableAggBufferOffset = newOffset)
 
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKPairsLong =
+  override def withNewInputAggBufferOffset(newOffset: Int): TopKPairs =
     copy(inputAggBufferOffset = newOffset)
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(value = newChildren(0), id = newChildren(1))
 
-  override def prettyName: String = "top_k_pairs_long"
+  // the SQL name of the value type; an unresolved value (Column API,
+  // before analysis) has no type yet and prints as the BIGINT name
+  override def prettyName: String =
+    if (value.resolved && isDouble) "top_k_pairs_double" else "top_k_pairs_long"
 }
 
-object TopKPairsLong {
+object TopKPairs {
   object BestFirst extends Comparator[(Long, Long)] with Serializable {
     override def compare(a: (Long, Long), b: (Long, Long)): Int = {
       val byV = java.lang.Long.compare(b._1, a._1)
       if (byV != 0) byV else java.lang.Long.compare(a._2, b._2)
     }
   }
+
+  /** Long key whose signed order is `java.lang.Double.compare` order:
+    * negative doubles get their 63 magnitude bits flipped. NaN is the
+    * canonical `doubleToLongBits` NaN. */
+  def encodeDouble(d: Double): Long = {
+    val b = java.lang.Double.doubleToLongBits(d)
+    b ^ ((b >> 63) & Long.MaxValue)
+  }
+
+  /** Inverse of [[encodeDouble]] (the flip keeps the sign bit, so it is
+    * its own inverse). */
+  def decodeDouble(key: Long): Double =
+    java.lang.Double.longBitsToDouble(key ^ ((key >> 63) & Long.MaxValue))
 }

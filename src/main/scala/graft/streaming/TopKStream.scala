@@ -4,7 +4,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming bounded top-k per group — the incremental twin of q125's
-  * native aggregate (plans/TopKPairsLong): per group, keep the k best
+  * native aggregate (plans/TopKPairs): per group, keep the k best
   * (value, id) pairs under (value DESC, id ASC) as they arrive.
   *
   * State per group is ≤ k pairs — O(groups x k) total, O(log k) per

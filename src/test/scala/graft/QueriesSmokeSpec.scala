@@ -88,7 +88,7 @@ class QueriesSmokeSpec extends SparkSpec {
     // exists to avoid) must not be computed anywhere BELOW it
     val topkAggs = plan.collect {
       case a: Aggregate if a.aggregateExpressions.exists(_.exists {
-        case _: graft.plans.TopKPairsLong => true
+        case t: graft.plans.TopKPairs => t.prettyName == "top_k_pairs_long"
         case _ => false
       }) => a
     }

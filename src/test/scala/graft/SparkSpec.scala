@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test SparkSession (one per forked test JVM). Mirrors the
-  * harness session config: UTC, ANSI off (pandas coerce parity),
-  * nanos-as-long parquet reads. */
+/** Shared test SparkSession (one per forked test JVM): the mains'
+  * [[GraftSession]] at a fixed local[4], whatever SPARK_GRAFT_CPUS says. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def fixture(name: String): String =
@@ -16,13 +15,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession("4")
 }

@@ -60,19 +60,43 @@ class TopKSpec extends SparkSpec {
   test("double-ranked top-k equals the window reference on every layout (VERDICT r9 #3)") {
     val drows = Seq(
       ("a", 0.31, 1L), ("a", -0.75, 2L), ("a", 0.31, 3L), ("a", 0.99, 4L),
-      ("a", 0.0, 5L), ("b", -0.1, 6L), ("b", -0.1, 7L), ("c", 2.5, 8L))
-    def ref(k: Int) = drows.groupBy(_._1).toSeq.flatMap { case (g, rs) =>
-      rs.sortBy(r => (-r._2, r._3)).take(k).map(r => (g, r._2, r._3))
-    }.sortBy(r => (r._1, -r._2, r._3))
+      ("a", 0.0, 5L), ("b", -0.1, 6L), ("b", -0.1, 7L), ("c", 2.5, 8L),
+      // the edges of Double.compare order: -0.0 below 0.0, NaN above +Inf
+      ("d", -0.0, 9L), ("d", 0.0, 10L), ("d", Double.PositiveInfinity, 11L),
+      ("d", Double.NegativeInfinity, 12L), ("d", Double.NaN, 13L),
+      ("d", Double.MinPositiveValue, 14L), ("d", -Double.MaxValue, 15L),
+      ("d", -0.0, 16L), ("d", Double.NaN, 17L), ("d", 0.0, 18L))
+    val best: Ordering[(String, Double, Long)] = (a, b) => {
+      val byV = java.lang.Double.compare(b._2, a._2)
+      if (byV != 0) byV else java.lang.Long.compare(a._3, b._3)
+    }
+    val byGroup = Ordering.by[(String, Double, Long), String](_._1).orElse(best)
+    // values compared by their bits: tuple == holds -0.0 == 0.0 and NaN != NaN
+    def bits(rs: Seq[(String, Double, Long)]) =
+      rs.map(r => (r._1, java.lang.Double.doubleToLongBits(r._2), r._3))
+    def ref(k: Int) =
+      bits(drows.groupBy(_._1).values.flatMap(_.sorted(best).take(k)).toSeq.sorted(byGroup))
     for (parts <- Seq(1, 3, 8); k <- Seq(1, 2, 3, 10)) {
       val got = drows.toDF("g", "v", "id").repartition(parts)
         .groupBy(col("g"))
-        .agg(TopK.topKPairsDouble(col("v"), col("id"), k).as("top"))
+        .agg(TopK.topKPairs(col("v"), col("id"), k).as("top"))
         .select(col("g"), explode(col("top")).as("p"))
         .select(col("g"), col("p.v"), col("p.id"))
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-        .toSeq.sortBy(r => (r._1, -r._2, r._3))
-      assert(got == ref(k), s"parts=$parts k=$k")
+        .toSeq.sorted(byGroup)
+      assert(bits(got) == ref(k), s"parts=$parts k=$k")
+    }
+  }
+
+  test("both SQL names reject a STRING value, an INT id or the other name's value type") {
+    Seq(("x", 1L, 1.0, 7L, 7)).toDF("s", "l", "d", "id", "i")
+      .createOrReplaceTempView("tk_bad")
+    for ((name, v, other) <- Seq(("top_k_pairs_long", "l", "d"), ("top_k_pairs_double", "d", "l"));
+         args <- Seq("s, id", s"$v, i", s"$other, id")) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT $name($args, 2) AS top FROM tk_bad")
+      }
+      assert(e.getMessage.contains(name), s"$name($args): ${e.getMessage}")
     }
   }
 

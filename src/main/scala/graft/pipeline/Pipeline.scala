@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -42,11 +42,24 @@ object RunConfig {
 
 /** Incremental state document (reference state/state.json — a stub there;
   * real here, SURVEY §7.2-5): per-source high-water marks that become
-  * pushdown predicates on the next run. */
+  * pushdown predicates on the next run.
+  *
+  * BCB keeps one mark per series (`bcb_series_last_date`): series publish
+  * on their own calendars (a monthly IPCA beside a daily SELIC), so one
+  * global `max(date)` would filter out a lagging series' new rows at
+  * `date > mark`. `bcb_last_date` (the max over series) is still written
+  * for existing readers, and a state file that predates the per-series
+  * marks keeps applying it to every series. */
 final case class IncrementalState(
     bcbLastDate: Option[String],
     anpLastPeriod: Option[String],
-    ibgeLastSync: Option[String])
+    ibgeLastSync: Option[String],
+    bcbSeriesLastDate: Map[Long, String] = Map.empty) {
+
+  /** The mark filtering series `seriesId`'s next BCB extract. */
+  def bcbMark(seriesId: Long): Option[String] =
+    if (bcbSeriesLastDate.nonEmpty) bcbSeriesLastDate.get(seriesId) else bcbLastDate
+}
 
 object IncrementalState {
   import org.json4s._
@@ -54,26 +67,42 @@ object IncrementalState {
 
   val empty: IncrementalState = IncrementalState(None, None, None)
 
-  def fromFile(path: String): IncrementalState = {
-    if (!Files.exists(Paths.get(path))) empty
-    else {
-      val m = JsonMethods.parse(Files.readString(Paths.get(path)))
-        .asInstanceOf[JObject].obj.toMap
-      def opt(k: String): Option[String] = m.get(k).collect { case JString(s) => s }
-      IncrementalState(opt("bcb_last_date"), opt("anp_last_period"), opt("ibge_last_sync"))
-    }
+  def fromJson(json: String): IncrementalState = {
+    val m = JsonMethods.parse(json).asInstanceOf[JObject].obj.toMap
+    def opt(k: String): Option[String] = m.get(k).collect { case JString(s) => s }
+    val perSeries = m.get("bcb_series_last_date").collect { case JObject(kv) =>
+      kv.collect { case (id, JString(d)) => id.toLong -> d }.toMap
+    }.getOrElse(Map.empty[Long, String])
+    IncrementalState(opt("bcb_last_date"), opt("anp_last_period"), opt("ibge_last_sync"),
+      perSeries)
   }
 
-  def write(path: String, s: IncrementalState): Unit = {
+  def fromFile(path: String): IncrementalState =
+    if (!Files.exists(Paths.get(path))) empty
+    else fromJson(Files.readString(Paths.get(path)))
+
+  def toJson(s: IncrementalState): String = {
     def j(v: Option[String]) = v.map("\"" + _ + "\"").getOrElse("null")
-    val json =
-      s"""{
-         |  "bcb_last_date": ${j(s.bcbLastDate)},
-         |  "anp_last_period": ${j(s.anpLastPeriod)},
-         |  "ibge_last_sync": ${j(s.ibgeLastSync)}
-         |}""".stripMargin
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    Files.write(Paths.get(path), json.getBytes(StandardCharsets.UTF_8))
+    val perSeries = s.bcbSeriesLastDate.toSeq.sorted
+      .map { case (id, d) => "\"" + id + "\": " + j(Some(d)) }.mkString("{", ", ", "}")
+    s"""{
+       |  "bcb_last_date": ${j(s.bcbLastDate)},
+       |  "bcb_series_last_date": $perSeries,
+       |  "anp_last_period": ${j(s.anpLastPeriod)},
+       |  "ibge_last_sync": ${j(s.ibgeLastSync)}
+       |}""".stripMargin
+  }
+
+  /** Write via a sibling tmp file and an atomic rename: a crash mid-write
+    * leaves the previous document intact (and at worst a stale tmp that
+    * [[fromFile]] never reads and the next write replaces), never a
+    * truncated state.json that would fail every later run. */
+  def write(path: String, s: IncrementalState): Unit = {
+    val target = Paths.get(path)
+    Option(target.getParent).foreach(Files.createDirectories(_))
+    val tmp = target.resolveSibling(target.getFileName.toString + ".__tmp")
+    Files.write(tmp, toJson(s).getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }
 
@@ -283,13 +312,40 @@ object TierCommit {
   *   silver/  standardized contracts (S7)
   *   gold/    hive-partitioned marts (S8) + summary.md (S10)
   *   <warehouse>/  full-replace "table" parquet dirs (S9 equivalent)
+  *   _tier_inputs.json  what the committed gold/warehouse/summary were
+  *                      built from (see INCREMENTAL TIER MAINTENANCE)
   *
   * All writes are `mode("overwrite")` — restart-safe idempotent batch,
   * the capability the reference's full-replace DuckDB loads encode.
-  * If `statePath` is set, the BCB extract pushes `date > bcb_last_date`
-  * down to the source and the state advances to the new max date.
+  * If `statePath` is set, each series' BCB extract pushes
+  * `date > <that series' mark>` down to the source and the state advances
+  * to the new max dates.
+  *
+  * INCREMENTAL TIER MAINTENANCE: a stateful run rebuilds a tier only when
+  * its inputs changed.
+  *   - Silver: on the incremental path (mark set, store present) an empty
+  *     increment leaves the store untouched. The BCB increment size is a
+  *     `Dataset.observe` count riding each series' bronze write; ANP pays
+  *     one `isEmpty` probe.
+  *   - Gold, warehouse, summary.md: every commit stages
+  *     [[TierInputsName]] in the same manifest as the tiers. It records
+  *     the data files (name, length, modification time) of both silver
+  *     stores and of `bronze/ibge_uf_dim.parquet`, the target paths, and
+  *     the marks computed from that silver. When the record matches, every
+  *     target exists and the dimension was not refetched, the run stages
+  *     and commits nothing: it returns the committed summary.md and writes
+  *     the recorded marks. Stateless runs, `forceDimRefresh`, a new
+  *     warehouse path, a missing target or a silver store rewritten after
+  *     the last commit take the full path.
+  *   - LIMIT: the record covers inputs, not code. After a change to the
+  *     tier logic (Silver.buildGold, Summary, the table set), run once
+  *     without `statePath` so the new code rebuilds the tiers — the same
+  *     remedy as for source revisions (SEMANTIC TRADE below).
   */
 object Pipeline {
+  import org.apache.hadoop.fs.Path
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods
 
   final case class Result(
       bcbSilver: DataFrame, // FULL silver after merging any increment
@@ -299,6 +355,9 @@ object Pipeline {
       ufDim: DataFrame,
       gold: Map[String, DataFrame],
       summary: String)
+
+  /** The tier-input record under `rootDir`, committed with the tiers. */
+  val TierInputsName = "_tier_inputs.json"
 
   def run(spark: SparkSession, fetcher: JsonFetcher, cfg: RunConfig,
           rootDir: String, seriesCsvPath: String,
@@ -323,6 +382,8 @@ object Pipeline {
     // stays ~flat as the series count grows. SparkSession is
     // thread-safe; per-series outputs go to disjoint bronze paths. Any
     // fetch failure propagates (fail-fast, like the sequential loop).
+    // Each series yields its silver frame and its bronze row count, which
+    // a Dataset.observe takes on the bronze write itself (no extra scan).
     val bcbFrames = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.max(1, math.min(8, seriesCfg.length)))
@@ -334,13 +395,17 @@ object Pipeline {
             val id = row.getAs[Long]("series_id")
             val name = row.getAs[String]("series_name")
             val bronze0 = BcbSource.fetch(spark, fetcher, id, cfg.startDate, cfg.endDate)
-            // Incremental: only rows past the high-water mark flow downstream.
-            val bronze = state.bcbLastDate match {
+            // Incremental: only rows past the series' mark flow downstream.
+            val bronze = state.bcbMark(id) match {
               case Some(d) => bronze0.filter(col("date") > lit(d).cast("timestamp"))
               case None => bronze0
             }
-            bronze.write.mode("overwrite").parquet(s"$rootDir/bronze/bcb_sgs_$id.parquet")
-            Silver.toSilverBcb(bronze, name)
+            val written = org.apache.spark.sql.Observation()
+            bronze.observe(written, count(lit(1)).as("rows"))
+              .write.mode("overwrite").parquet(s"$rootDir/bronze/bcb_sgs_$id.parquet")
+            // a count Spark did not report reads as "some rows": merge
+            val rows = written.get.get("rows").fold(1L)(_.asInstanceOf[Long])
+            (Silver.toSilverBcb(bronze, name), rows)
           }
         }
         try scala.concurrent.Await.result(
@@ -359,7 +424,7 @@ object Pipeline {
         }
       } finally pool.shutdown()
     }
-    val bcbIncrement = bcbFrames.reduceOption(_ unionByName _)
+    val bcbIncrement = bcbFrames.map(_._1).reduceOption(_ unionByName _)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -371,22 +436,23 @@ object Pipeline {
     // previously loaded row. The silver store is the durable merge
     // target; it is rewritten via temp-dir-and-swap (Spark cannot
     // overwrite a path it is reading from), and gold/warehouse/summary
-    // always recompute from the merged whole, so their full-replace
-    // writes stay idempotent and correct.
+    // recompute from the merged whole whenever it changed, so their
+    // full-replace writes stay idempotent and correct. An empty increment
+    // leaves the store as it is.
     // The merge is belt-and-braces idempotent: even if a mark at coarser
     // granularity than the data (or a same-day revision) lets a row
     // through twice, the keep-first dedup on the natural key collapses
     // it — the merged store can never hold duplicate (series_id, date)
     // rows regardless of mark/timestamp granularity.
     val silverPath = s"$rootDir/silver/bcb_sgs.parquet"
-    val merged = state.bcbLastDate match {
+    state.bcbLastDate match {
       case Some(_) if pathExists(spark, silverPath) =>
-        graft.operators.Relational.dedupKeepFirst(
-          spark.read.parquet(silverPath).unionByName(bcbIncrement),
-          keys = Seq("series_id", "date"), order = Seq(col("value")))
-      case _ => bcbIncrement
+        if (bcbFrames.map(_._2).sum > 0)
+          swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
+            spark.read.parquet(silverPath).unionByName(bcbIncrement),
+            keys = Seq("series_id", "date"), order = Seq(col("value"))), silverPath)
+      case _ => swapWrite(spark, bcbIncrement, silverPath)
     }
-    swapWrite(spark, merged, silverPath)
     val bcbSilver = spark.read.parquet(silverPath)
 
     // `ibge_last_sync` drives a real skip (the asymmetry vs the BCB/ANP
@@ -394,9 +460,9 @@ object Pipeline {
     // says it was synced TODAY and the bronze copy exists, the refetch is
     // skipped and bronze is served as-is. `forceDimRefresh` (or a stale /
     // absent mark, or a missing bronze file) takes the fetch path.
+    val today = java.time.LocalDate.now().toString
     val ufDimPath = s"$rootDir/bronze/ibge_uf_dim.parquet"
-    val dimFresh = !forceDimRefresh &&
-      state.ibgeLastSync.contains(java.time.LocalDate.now().toString) &&
+    val dimFresh = !forceDimRefresh && state.ibgeLastSync.contains(today) &&
       pathExists(spark, ufDimPath)
     val ufDim =
       if (dimFresh) spark.read.parquet(ufDimPath)
@@ -424,20 +490,22 @@ object Pipeline {
     // skipping old periods. Sources that revise history should run
     // without statePath (full reprocess, the reference's own behavior)
     // or reset state.json; append-only drops get the fast path.
-    val anpSilverAll = Silver.enrichUf(Silver.toSilverAnp(anpRaw), ufDim)
-    val anpIncrement = state.anpLastPeriod match {
-      case Some(p) => anpSilverAll.filter(col("date_ref") > lit(p).cast("timestamp"))
-      case None => anpSilverAll
+    def pastAnpMark(df: DataFrame): DataFrame = state.anpLastPeriod match {
+      case Some(p) => df.filter(col("date_ref") > lit(p).cast("timestamp"))
+      case None => df
     }
+    val anpIncrement = pastAnpMark(Silver.enrichUf(Silver.toSilverAnp(anpRaw), ufDim))
     val anpPath = s"$rootDir/silver/anp_prices.parquet"
-    val anpMerged = state.anpLastPeriod match {
+    state.anpLastPeriod match {
       case Some(_) if pathExists(spark, anpPath) =>
-        graft.operators.Relational.dedupKeepFirst(
-          spark.read.parquet(anpPath).unionByName(anpIncrement),
-          keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price")))
-      case _ => anpIncrement
+        // the dedup and the left enrich join drop no key, so the rows
+        // before them answer "any new row?" with a scan, not a shuffle
+        if (!pastAnpMark(Silver.anpRows(anpRaw)).isEmpty)
+          swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
+            spark.read.parquet(anpPath).unionByName(anpIncrement),
+            keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price"))), anpPath)
+      case _ => swapWrite(spark, anpIncrement, anpPath)
     }
-    swapWrite(spark, anpMerged, anpPath)
     val anpSilver = spark.read.parquet(anpPath)
 
     // ---------- GOLD (main.py:59) ----------
@@ -447,50 +515,113 @@ object Pipeline {
     // (bcb + anp silver already written by the merge swaps above; they
     // are upstream durable state, not part of the serving tier set.)
     // dim_uf + both gold marts + all five warehouse tables + summary.md
-    // stage invisibly, then commit as ONE manifest-pinned unit: a crash
-    // anywhere leaves either all-old or all-new (TierCommit scaladoc).
+    // + the tier-input record stage invisibly, then commit as ONE
+    // manifest-pinned unit: a crash anywhere leaves either all-old or
+    // all-new (TierCommit scaladoc).
     val wh = if (Paths.get(cfg.warehousePath).isAbsolute) cfg.warehousePath
              else s"$rootDir/${cfg.warehousePath}"
-    val summary = Summary.build(bcbSilver, anpSilver)
-    val staged = scala.collection.mutable.ArrayBuffer.empty[String]
-    def stage(df: DataFrame, path: String, parts: Seq[String] = Nil): Unit = {
-      TierCommit.stageDf(spark, df, path, parts); staged += path
-    }
-    stage(ufDim, s"$rootDir/silver/dim_uf.parquet")
-    stage(gold("bcb_monthly"), s"$rootDir/gold/bcb_monthly", Seq("series_id"))
-    stage(gold("anp_monthly"), s"$rootDir/gold/anp_monthly", Seq("uf_sigla"))
-    Seq(
+    val tables = Seq(
+      (s"$rootDir/silver/dim_uf.parquet", ufDim, Nil),
+      (s"$rootDir/gold/bcb_monthly", gold("bcb_monthly"), Seq("series_id")),
+      (s"$rootDir/gold/anp_monthly", gold("anp_monthly"), Seq("uf_sigla"))) ++ Seq(
       "silver_bcb_sgs" -> bcbSilver, "silver_anp_prices" -> anpSilver,
       "dim_uf" -> ufDim, "gold_bcb_monthly" -> gold("bcb_monthly"),
       "gold_anp_monthly" -> gold("anp_monthly")
-    ).foreach { case (t, df) => stage(df, s"$wh/$t") }
+    ).map { case (t, df) => (s"$wh/$t", df, Nil) }
+    val summaryPath = s"$rootDir/gold/summary.md"
+    val targets = tables.map(_._1) :+ summaryPath
+    val inputs = JObject(
+      "files" -> JObject(Seq(silverPath, anpPath, ufDimPath).map(p => p -> dataFiles(spark, p)): _*),
+      "targets" -> JArray(targets.map(JString(_)).toList))
+    val recordPath = s"$rootDir/$TierInputsName"
+    // the committed record, when it vouches for this run's inputs
+    val unchanged = if (statePath.isEmpty || !dimFresh) None else
+      readText(spark, recordPath).map(JsonMethods.parse(_))
+        .filter(rec => JsonMethods.compact(rec \ "inputs") == JsonMethods.compact(inputs) &&
+          targets.forall(t => fsOf(spark, t).exists(new Path(t))))
+        .map(_ \ "marks")
+        .collect { case m: JObject => IncrementalState.fromJson(JsonMethods.compact(m)) }
 
-    // ---------- SUMMARY (main.py:79-86): part of the same commit ------
-    TierCommit.stageFile(spark, summary.getBytes(StandardCharsets.UTF_8),
-      s"$rootDir/gold/summary.md")
-    staged += s"$rootDir/gold/summary.md"
-    TierCommit.commit(spark, rootDir, staged.toSeq)
-
-    // ---------- STATE ----------
     // High-water marks carry the FULL max timestamp (not a truncated
     // date): a date-granular mark would re-admit same-day rows with
     // intra-day time components on the next run. (The merge dedup above
     // would still collapse them, but the mark itself should be exact.)
-    statePath.foreach { p =>
-      // full microsecond precision (Spark timestamps are micros): a
-      // seconds-granular mark would re-admit rows with fractional parts
-      val hwmFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
-      def mark(df: DataFrame, ts: String, prev: Option[String]): Option[String] =
-        Option(df.agg(max(col(ts))).collect().head.get(0))
-          .map(_.asInstanceOf[java.sql.Timestamp].toLocalDateTime.format(hwmFmt))
-          .orElse(prev)
-      IncrementalState.write(p, state.copy(
-        bcbLastDate = mark(bcbSilver, "date", state.bcbLastDate),
-        anpLastPeriod = mark(anpSilver, "date_ref", state.anpLastPeriod),
-        ibgeLastSync = Some(java.time.LocalDate.now().toString)))
+    val (summary, marks) = unchanged match {
+      case Some(recorded) =>
+        // ---------- nothing changed: the committed tiers stand ----------
+        (readText(spark, summaryPath).getOrElse(sys.error(s"missing $summaryPath")),
+          Some(recorded.copy(ibgeLastSync = Some(today))))
+      case None =>
+        val marks = statePath.map(_ => newMarks(bcbSilver, anpSilver, state, today))
+        // ---------- SUMMARY (main.py:79-86): part of the same commit ------
+        val summary = Summary.build(bcbSilver, anpSilver)
+        tables.foreach { case (path, df, parts) => TierCommit.stageDf(spark, df, path, parts) }
+        TierCommit.stageFile(spark, summary.getBytes(StandardCharsets.UTF_8), summaryPath)
+        val record = JObject("inputs" -> inputs,
+          "marks" -> marks.fold[JValue](JNull)(m => JsonMethods.parse(IncrementalState.toJson(m))))
+        TierCommit.stageFile(spark, JsonMethods.compact(record).getBytes(StandardCharsets.UTF_8),
+          recordPath)
+        TierCommit.commit(spark, rootDir, targets :+ recordPath)
+        (summary, marks)
     }
 
+    // ---------- STATE ----------
+    for (p <- statePath; m <- marks) IncrementalState.write(p, m)
+
     Result(bcbSilver, bcbIncrement, anpSilver, anpIncrement, ufDim, gold, summary)
+  }
+
+  /** The marks after this run: per-series BCB max date (plus their max,
+    * the legacy global mark), ANP max date_ref, and today's IBGE sync. A
+    * source whose silver holds no rows keeps its previous mark. Full
+    * microsecond precision (Spark timestamps are micros): a
+    * seconds-granular mark would re-admit rows with fractional parts. */
+  private def newMarks(bcbSilver: DataFrame, anpSilver: DataFrame,
+                       prev: IncrementalState, today: String): IncrementalState = {
+    val hwmFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+    def fmt(ts: java.sql.Timestamp) = ts.toLocalDateTime.format(hwmFmt)
+    val bcbSeries = prev.bcbSeriesLastDate ++
+      bcbSilver.groupBy(col("series_id")).agg(max(col("date"))).collect()
+        .collect { case r if !r.isNullAt(1) => r.getLong(0) -> fmt(r.getTimestamp(1)) }
+    IncrementalState(
+      bcbLastDate = bcbSeries.values.maxOption.orElse(prev.bcbLastDate),
+      anpLastPeriod = Option(anpSilver.agg(max(col("date_ref"))).collect().head.getTimestamp(0))
+        .map(fmt).orElse(prev.anpLastPeriod),
+      ibgeLastSync = Some(today),
+      bcbSeriesLastDate = bcbSeries)
+  }
+
+  private def fsOf(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The data files under `path` (Hadoop's hidden `_`/`.` files left
+    * out), as sorted [relative name, length, modification time] triples;
+    * empty when `path` does not exist. */
+  private def dataFiles(spark: SparkSession, path: String): JValue = {
+    val (p, fs) = (new Path(path), fsOf(spark, path))
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    if (fs.exists(p)) {
+      val base = fs.makeQualified(p).toUri.getPath
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = f.getPath.toUri.getPath.stripPrefix(base)
+        if (!rel.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+          files += ((rel, f.getLen, f.getModificationTime))
+      }
+    }
+    JArray(files.sorted.map { case (n, len, t) =>
+      JArray(List(JString(n), JInt(len), JInt(t))) }.toList)
+  }
+
+  /** A small text file's content through the Hadoop FileSystem API. */
+  private def readText(spark: SparkSession, path: String): Option[String] = {
+    val (p, fs) = (new Path(path), fsOf(spark, path))
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
+    }
   }
 
   private def swapTmp(t: org.apache.hadoop.fs.Path) =

@@ -6,7 +6,9 @@ import java.util.Locale.ROOT
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.operators.Relational
+import graft.silver.Silver
 
 /** Rule-based analytics report (reference src/summary.py): latest value +
   * absolute MoM delta for the target series, then top-3 ANP MoM increases
@@ -16,6 +18,8 @@ import graft.operators.Relational
   * Everything aggregates in Spark first — only the final handful of rows
   * is collected (the report is inherently driver-side); formatting is
   * locale-pinned (`Locale.ROOT`) so pt-BR JVMs don't flip decimal commas.
+  * The ANP monthly means are the gold marts' exact means (same scale), so
+  * the text does not depend on merge order either.
   */
 object Summary {
 
@@ -74,7 +78,7 @@ object Summary {
         val monthly = valid
           .withColumn("month", date_trunc("month", col("date_ref")))
           .groupBy(col("uf_sigla"), col("product"), col("month"))
-          .agg(avg(col("price")).as("avg_price"))
+          .agg(Exact.exactAvg(col("price"), Silver.GoldAvgScale).as("avg_price"))
         val mom = Relational.momChange(monthly, Seq("uf_sigla", "product"), "avg_price")
         val mx = mom.agg(max(col("month")).as("__mx"))
         val top = Relational.topK(

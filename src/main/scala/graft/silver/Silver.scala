@@ -29,18 +29,22 @@ object Silver {
     * standardization, dayfirst date parse, comma-heuristic locale price
     * parse, null/positivity quality filters, deterministic natural-key
     * dedup. Output contract: (uf_sigla, product, date_ref, price). */
-  def toSilverAnp(raw: DataFrame): DataFrame = {
+  def toSilverAnp(raw: DataFrame): DataFrame =
+    Relational.dedupKeepFirst(anpRows(raw),
+      keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price")))
+
+  /** [[toSilverAnp]] before its dedup: every parsed row that passes the
+    * quality filters. Non-empty exactly when the silver is, at the cost
+    * of a scan instead of a shuffle. */
+  def anpRows(raw: DataFrame): DataFrame = {
     val m = HeaderResolver.resolve(raw.columns.toSeq)
-    val projected = raw.select(
+    raw.select(
       upper(trim(col(m("uf_sigla")).cast("string"))).as("uf_sigla"),
       trim(col(m("product")).cast("string")).as("product"),
       Locale.dayFirstTimestamp(trim(col(m("date_ref")).cast("string"))).as("date_ref"),
       Locale.localeAwareDouble(trim(col(m("price")).cast("string"))).as("price"))
-    Relational.dedupKeepFirst(
-      projected
-        .na.drop(Seq("date_ref", "uf_sigla", "product", "price"))
-        .filter(col("price") > 0),
-      keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price")))
+      .na.drop(Seq("date_ref", "uf_sigla", "product", "price"))
+      .filter(col("price") > 0)
   }
 
   /** Enrich ANP silver with the UF dimension (main.py:56, J1): broadcast
@@ -52,8 +56,9 @@ object Silver {
   /** Gold means quantize at 1e-6, not cents: fine-precision series (a
     * daily rate like 0.049041) would lose percent-level accuracy at
     * scale 2, and micro-units still keep the exactIntSum overflow
-    * envelope (values to ~1e6) far beyond these sources' ranges. */
-  private val GoldAvgScale = 6
+    * envelope (values to ~1e6) far beyond these sources' ranges. The
+    * summary's ANP monthly means use the same scale. */
+  val GoldAvgScale = 6
 
   /** Gold marts (transform.py:111-134): monthly aggregates. `last_value`
     * is value-at-max-date per month — `max_by`, the deterministic form of

@@ -24,19 +24,44 @@ trait JsonFetcher {
 }
 
 /** Live HTTP fetcher (reference extract.py:26-29: 30 s timeout, raise on
-  * HTTP error). Never exercised in this offline build — tests inject
-  * [[FixtureFetcher]]. */
+  * HTTP error), with a bounded retry the reference lacks: at most
+  * [[HttpJsonFetcher.MaxAttempts]] attempts with doubling backoff on a 5xx
+  * response or an `IOException` (connection failures and timeouts
+  * included). A 4xx, or any other non-2xx status, fails at once — asking
+  * again will not change the answer. One `HttpClient` (and its connection
+  * pool) serves every call of the fetcher. Tests use [[FixtureFetcher]]
+  * or a local server. */
 final class HttpJsonFetcher(timeoutSeconds: Long = 30L) extends JsonFetcher {
+  import HttpJsonFetcher._
+
+  private val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(timeoutSeconds)).build()
+
   override def fetch(url: String): String = {
-    val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(timeoutSeconds)).build()
     val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
       .timeout(java.time.Duration.ofSeconds(timeoutSeconds)).GET().build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() / 100 != 2)
-      sys.error(s"HTTP ${resp.statusCode()} fetching $url")
-    resp.body()
+    def attempt(n: Int): String = {
+      val outcome =
+        try Right(client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()))
+        catch { case e: java.io.IOException => Left(e) }
+      outcome match {
+        case Right(resp) if resp.statusCode() / 100 == 2 => resp.body()
+        case Right(resp) if resp.statusCode() / 100 != 5 || n == MaxAttempts =>
+          sys.error(s"HTTP ${resp.statusCode()} fetching $url (attempt $n of $MaxAttempts)")
+        case Left(e) if n == MaxAttempts => throw e
+        case _ =>
+          Thread.sleep(BackoffMillis << (n - 1))
+          attempt(n + 1)
+      }
+    }
+    attempt(1)
   }
+}
+
+object HttpJsonFetcher {
+  val MaxAttempts = 3
+  /** Wait before the second attempt; doubles before each later one. */
+  val BackoffMillis = 200L
 }
 
 /** Canned-payload fetcher for tests/offline runs. */

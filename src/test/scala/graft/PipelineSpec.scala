@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -172,6 +174,221 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(perSeries.keySet == ids.toSet)
     assert(perSeries.values.toSet.size == 1, s"uneven per-series rows: $perSeries")
+  }
+
+  // ---- incremental tier maintenance ----
+
+  /** File path -> (length, modification time). */
+  private type Listing = Map[String, (Long, String)]
+
+  /** Every visible file (staged `.__swap_*` siblings left out) of the
+    * serving tiers (silver/, gold/, the warehouse) and the tier-input
+    * record. */
+  private def tierFiles(root: String, wh: String = "warehouse"): Listing = {
+    def walk(dir: Path): Seq[Path] =
+      if (!Files.exists(dir)) Nil
+      else {
+        val s = Files.walk(dir)
+        try s.iterator().asScala.filter(Files.isRegularFile(_)).toList finally s.close()
+      }
+    (Seq("silver", "gold", wh).flatMap(d => walk(Paths.get(root, d))) ++
+      walk(Paths.get(root, Pipeline.TierInputsName)))
+      .filterNot(_.toString.contains(".__swap_"))
+      .map(p => p.toString -> (Files.size(p), Files.getLastModifiedTime(p).toString)).toMap
+  }
+
+  private def under(files: Listing, dir: String) =
+    files.filter(_._1.contains(s"/$dir/"))
+
+  /** True when every parquet data file under `dir` is new. */
+  private def rewritten(before: Listing, after: Listing, dir: String): Boolean = {
+    def parts(m: Listing) = under(m, dir).keySet.filter(_.contains("/part-"))
+    parts(after).nonEmpty && parts(after).intersect(parts(before)).isEmpty
+  }
+
+  /** The BCB mart in gold/, both marts and the BCB silver copy in the
+    * warehouse, and summary.md all equal what the silver stores on disk
+    * produce. */
+  private def assertTiersMatchSilver(root: String, wh: String = "warehouse"): Unit = {
+    val bcb = spark.read.parquet(s"$root/silver/bcb_sgs.parquet")
+    val anp = spark.read.parquet(s"$root/silver/anp_prices.parquet")
+    def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame, what: String) = {
+      val cols = want.columns.toSeq.map(col)
+      val (g, w) = (got.select(cols: _*), want.select(cols: _*))
+      assert(g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty, s"$what does not match the silver")
+    }
+    val gold = Silver.buildGold(bcb, anp)
+    same(spark.read.parquet(s"$root/gold/bcb_monthly"), gold("bcb_monthly"), "gold/bcb_monthly")
+    same(spark.read.parquet(s"$root/$wh/gold_bcb_monthly"), gold("bcb_monthly"), "gold_bcb_monthly")
+    same(spark.read.parquet(s"$root/$wh/gold_anp_monthly"), gold("anp_monthly"), "gold_anp_monthly")
+    same(spark.read.parquet(s"$root/$wh/silver_bcb_sgs"), bcb, "silver_bcb_sgs")
+    assert(Files.readString(Paths.get(s"$root/gold/summary.md")) == Summary.build(bcb, anp))
+  }
+
+  private def bcbFetcher(payload: String) = FixtureFetcher(Map(
+    BcbSource.url(11, "2024-01-01", "2024-03-01") -> payload,
+    IbgeSource.Url -> fixtureText("ibge_ufs.json")))
+
+  /** The fixture payload plus one row dated after its last day. */
+  private def withMarchRow = fixtureText("bcb_payload.json")
+    .replace("\"9,99\"}]", "\"9,99\"},\n {\"data\": \"05/03/2024\", \"valor\": \"12,25\"}]")
+
+  test("an unchanged stateful rerun rewrites no silver, gold or warehouse file") {
+    val root = Files.createTempDirectory("graft-skip").toString
+    val statePath = s"$root/state/state.json"
+    val r1 = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    val files = tierFiles(root)
+    val state = Files.readString(Paths.get(statePath))
+    assert(files.keys.exists(_.endsWith(Pipeline.TierInputsName)))
+    val r2 = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    assert(tierFiles(root) == files, "a tier file was rewritten")
+    assert(r2.summary == r1.summary && r2.summary == GoldenSummary)
+    assert(Files.readString(Paths.get(statePath)) == state, "marks moved")
+    assert(r2.bcbIncrement.isEmpty && r2.anpIncrement.isEmpty)
+    assert(r2.bcbSilver.count() == 4 && r2.anpSilver.count() == 8)
+    assertTiersMatchSilver(root)
+  }
+
+  test("new BCB rows alone rebuild the tiers; the unchanged ANP store is not rewritten") {
+    val root = Files.createTempDirectory("graft-newrows").toString
+    val statePath = s"$root/state/state.json"
+    Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    val before = tierFiles(root)
+    val r2 = Pipeline.run(spark, bcbFetcher(withMarchRow), cfg, root, fixture("bcb_series.csv"),
+      Some(statePath))
+    val after = tierFiles(root)
+    assert(r2.bcbIncrement.count() == 1 && r2.bcbSilver.count() == 5)
+    assert(r2.summary.startsWith(
+      "BCB/SGS (série 11) - selic_sgs_11: último valor em 2024-03-05 = 12.25."))
+    for (d <- Seq("gold", "warehouse", "bcb_sgs.parquet"))
+      assert(rewritten(before, after, d), s"$d not rebuilt")
+    assert(under(after, "anp_prices.parquet") == under(before, "anp_prices.parquet"))
+    assert(IncrementalState.fromFile(statePath).bcbLastDate.contains("2024-03-05 00:00:00.000000"))
+    assertTiersMatchSilver(root)
+  }
+
+  test("a missing target, a new warehouse path, a dim refresh or a replaced silver file rebuild") {
+    val root = Files.createTempDirectory("graft-rebuild").toString
+    val statePath = s"$root/state/state.json"
+    def run(c: RunConfig = cfg, force: Boolean = false) =
+      Pipeline.run(spark, fetcher, c, root, fixture("bcb_series.csv"), Some(statePath), force)
+    def assertRebuilds(what: String, wh: String = "warehouse")(step: => Unit): Unit = {
+      val before = tierFiles(root)
+      step
+      assert(rewritten(before, tierFiles(root, wh), "gold"), s"$what: gold not rebuilt")
+      assertTiersMatchSilver(root, wh)
+    }
+    run()
+    assertRebuilds("deleted target") {
+      val t = new org.apache.hadoop.fs.Path(s"$root/warehouse/dim_uf")
+      t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
+      run()
+      assert(Files.exists(Paths.get(s"$root/warehouse/dim_uf")))
+    }
+    assertRebuilds("new warehouse path", "warehouse2") {
+      run(cfg.copy(warehousePath = "warehouse2"))
+    }
+    assertRebuilds("forceDimRefresh") { run(force = true) }
+    // an outside rewrite of the silver store after the last commit: the
+    // Feb 29 value doubles, and gold must follow it
+    assertRebuilds("replaced silver file") {
+      val silver = s"$root/silver/bcb_sgs.parquet"
+      Pipeline.swapWrite(spark, spark.read.parquet(silver).withColumn("value",
+        when(col("date") === lit("2024-02-29").cast("timestamp"), col("value") * 2)
+          .otherwise(col("value"))), silver)
+      run()
+      val feb = spark.read.parquet(s"$root/gold/bcb_monthly")
+        .filter(col("month") === lit("2024-02-01").cast("timestamp")).first()
+      assert(feb.getAs[Double]("last_value") == 24.0)
+    }
+  }
+
+  test("a stateless rerun always rebuilds") {
+    val root = Files.createTempDirectory("graft-stateless").toString
+    Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"))
+    val before = tierFiles(root)
+    val r2 = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"))
+    assert(rewritten(before, tierFiles(root), "warehouse"))
+    assert(r2.summary == GoldenSummary)
+    assertTiersMatchSilver(root)
+  }
+
+  test("a crash before the commit point leaves tiers and record all-old; the next run rebuilds") {
+    val root = Files.createTempDirectory("graft-crash").toString
+    val statePath = s"$root/state/state.json"
+    Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    val before = tierFiles(root)
+    val state = Files.readString(Paths.get(statePath))
+    // a directory where the manifest's tmp goes makes the commit fail
+    // after every tier (and the record) was staged
+    val blocker = Paths.get(root, "_tier_commit.json.__tmp")
+    Files.createDirectories(blocker)
+    intercept[java.io.IOException] {
+      Pipeline.run(spark, bcbFetcher(withMarchRow), cfg, root, fixture("bcb_series.csv"),
+        Some(statePath))
+    }
+    val crashed = tierFiles(root)
+    for (d <- Seq("gold", "warehouse"))
+      assert(under(crashed, d) == under(before, d), s"$d changed without a commit")
+    assert(crashed.filter(_._1.endsWith(Pipeline.TierInputsName)) ==
+      before.filter(_._1.endsWith(Pipeline.TierInputsName)), "record changed without a commit")
+    assert(Files.readString(Paths.get(statePath)) == state)
+    Files.delete(blocker)
+    val r3 = Pipeline.run(spark, bcbFetcher(withMarchRow), cfg, root, fixture("bcb_series.csv"),
+      Some(statePath))
+    assert(r3.summary.contains("2024-03-05 = 12.25"))
+    assertTiersMatchSilver(root)
+  }
+
+  test("each BCB series keeps its own mark: a lagging series still loads its new rows") {
+    // a monthly series (433) beside the daily one (11): its February row,
+    // published after 11's Feb 29, is dated before 11's mark
+    val root = Files.createTempDirectory("graft-lag").toString
+    val statePath = s"$root/state/state.json"
+    val csv = Paths.get(root, "series.csv")
+    Files.writeString(csv, "series_id,series_name,enabled\n11,selic_sgs_11,TRUE\n433,ipca_sgs_433,TRUE\n")
+    def withIpca(ipca: String) = FixtureFetcher(Map(
+      BcbSource.url(11, "2024-01-01", "2024-03-01") -> fixtureText("bcb_payload.json"),
+      BcbSource.url(433, "2024-01-01", "2024-03-01") -> ipca,
+      IbgeSource.Url -> fixtureText("ibge_ufs.json")))
+    val jan = """{"data": "01/01/2024", "valor": "0,42"}"""
+    val feb = """{"data": "01/02/2024", "valor": "0,83"}"""
+    Pipeline.run(spark, withIpca(s"[$jan]"), cfg, root, csv.toString, Some(statePath))
+    val s1 = IncrementalState.fromFile(statePath)
+    assert(s1.bcbSeriesLastDate == Map(
+      11L -> "2024-02-29 00:00:00.000000", 433L -> "2024-01-01 00:00:00.000000"))
+    assert(s1.bcbLastDate.contains("2024-02-29 00:00:00.000000"))
+    val r2 = Pipeline.run(spark, withIpca(s"[$jan, $feb]"), cfg, root, csv.toString, Some(statePath))
+    def ipcaRows = spark.read.parquet(s"$root/silver/bcb_sgs.parquet")
+      .filter(col("series_id") === 433).count()
+    assert(r2.bcbIncrement.count() == 1)
+    assert(ipcaRows == 2, "the lagging series' new row was filtered out")
+    val s2 = IncrementalState.fromFile(statePath)
+    assert(s2.bcbSeriesLastDate(433L) == "2024-02-01 00:00:00.000000")
+    assert(s2.bcbLastDate.contains("2024-02-29 00:00:00.000000"))
+    assertTiersMatchSilver(root)
+  }
+
+  test("state.json is replaced atomically: no tmp is left, a stale tmp is never read") {
+    val dir = Files.createTempDirectory("graft-state")
+    val path = dir.resolve("state").resolve("state.json").toString
+    val s1 = IncrementalState(Some("2024-02-29 00:00:00.000000"), Some("2024-02-20 00:00:00.000000"),
+      Some("2024-03-01"), Map(11L -> "2024-02-29 00:00:00.000000", 433L -> "2024-01-01 00:00:00.000000"))
+    IncrementalState.write(path, s1)
+    def names = Files.list(dir.resolve("state")).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(names == Set("state.json"))
+    assert(IncrementalState.fromFile(path) == s1)
+    // a write that crashed mid-way left a truncated tmp beside the document
+    Files.writeString(Paths.get(s"$path.__tmp"), "{\"bcb_last_date\": \"2024-0")
+    assert(IncrementalState.fromFile(path) == s1)
+    val s2 = s1.copy(anpLastPeriod = Some("2024-03-12 00:00:00.000000"))
+    IncrementalState.write(path, s2)
+    assert(names == Set("state.json"))
+    assert(IncrementalState.fromFile(path) == s2)
+    // a state file from before per-series marks applies its global mark to every series
+    val legacy = IncrementalState.fromJson(
+      """{"bcb_last_date": "2024-02-29 00:00:00.000000", "anp_last_period": null, "ibge_last_sync": null}""")
+    assert(legacy.bcbMark(433L).contains("2024-02-29 00:00:00.000000"))
   }
 
   test("a swap interrupted between renames self-heals on the next pathExists") {

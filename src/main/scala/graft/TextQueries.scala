@@ -1903,9 +1903,9 @@ object TextQueries {
   private val BpeMaxWordLen = 32
 
   /** Parameterized BPE training walk — q204 runs it at
-    * [[BpeTrainRounds]]; Explain's `bpetrain` subcommand times other
-    * round counts to document the rounds-knee of the driver-loop
-    * design (the q201 k-knee discipline, docs/SCALING.md). */
+    * [[BpeTrainRounds]]; the rounds-knee of the driver-loop design is
+    * measured across round counts in docs/SCALING.md ("the q204 BPE
+    * rounds-knee", the q201 k-knee discipline). */
   private[graft] def bpeTrain(spark: SparkSession, dir: String,
                               rounds: Int): DataFrame = {
     val words = docs(spark, dir)
@@ -2013,10 +2013,10 @@ object TextQueries {
   private val BpeBatchCap = 64
 
   /** Parameterized batched BPE training walk — q205 runs it at
-    * ([[BpeBatchRounds]], [[BpeBatchP]], [[BpeBatchCap]]); Explain's
-    * `bpebatch` subcommand times other (rounds, p) points to document
-    * the p-KNEE of the batched driver-loop design (VERDICT r10 #4,
-    * the rounds-knee discipline; docs/SCALING.md). */
+    * ([[BpeBatchRounds]], [[BpeBatchP]], [[BpeBatchCap]]); the p-KNEE
+    * of the batched driver-loop design is measured across (rounds, p)
+    * points in docs/SCALING.md ("the batched-BPE p-knee", VERDICT r10
+    * #4, the rounds-knee discipline). */
   private[graft] def bpeTrainBatched(spark: SparkSession, dir: String,
                                      rounds: Int, p: Int,
                                      topCap: Int): DataFrame = {

@@ -2093,8 +2093,8 @@ object VectorQueries {
   private val KCenters = 5
 
   /** Parameterized greedy k-center walk (VERDICT r9 #6) — q201 runs it
-    * at [[KCenters]]; Explain's `kcenter` subcommand times other k to
-    * document where the driver-loop design stops being right. */
+    * at [[KCenters]]; where the driver-loop design stops being right is
+    * measured across k in docs/SCALING.md ("the q201 k-center knee"). */
   private[graft] def kCenterCoreset(spark: SparkSession, dir: String,
                                     k: Int): DataFrame = {
     val e = quantized(spark, dir).localCheckpoint() // k rounds fan out

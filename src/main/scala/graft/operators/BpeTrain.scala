@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   *  - one vocabulary-sized pair count: map-only explode of adjacent
   *    pairs weighted by word count + a hash aggregate (map-side
   *    combine; distinct-pair cardinality, not corpus cardinality),
-  *  - ONE collected row: the argmax pair via min_by over
-  *    (-count, left, right) — the q201 k-center discipline of bounded
-  *    driver rounds, k = `rounds` by construction,
+  *  - ONE bounded collect: the top pair(s) by (count DESC, left ASC,
+  *    right ASC) through a TakeOrdered limit — the q201 k-center
+  *    discipline of bounded driver rounds, k = `rounds` by construction,
   *  - one map-only merge application: a codegen'd array fold per word
-  *    ([[applyMerge]]), localCheckpoint'd to keep the loop's plan
+  *    ([[applyMergeBatch]]), localCheckpoint'd to keep the loop's plan
   *    linear (the KMeans discipline).
   * Nothing corpus-sized is ever shuffled or collected; the driver holds
   * `rounds` merge rows. Training is inherently sequential in rounds
@@ -70,13 +70,7 @@ object BpeTrain {
     * against an independent match-position/alternation reference, the
     * same rule the q204 oracle states relationally). */
   def applyMerge(toks: Column, l: String, r: String): Column =
-    aggregate(toks, array().cast("array<string>"),
-      (acc, t) =>
-        when(size(acc) === 0, array(t))
-          .otherwise(
-            when(element_at(acc, -1) === lit(l) && t === lit(r),
-              concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-              .otherwise(concat(acc, array(t)))))
+    applyMergeBatch(toks, Seq((l, r)))
 
   /** Greedy compatible-subset selection for BATCHED training
     * ([[fitBatched]]): walk `cands` in rank order (the caller passes
@@ -128,10 +122,10 @@ object BpeTrain {
           }))
   }
 
-  /** Free a state's localCheckpoint blocks (ADVICE r10: fit/fitBatched
-    * checkpoint a new state every round; without this the superseded
+  /** Free a state's localCheckpoint blocks (ADVICE r10: training
+    * checkpoints a new state every round; without this the superseded
     * rounds' blocks accumulate linearly in executor storage — directly
-    * felt by the Explain `bpetrain` rounds-knee sweeps). The
+    * felt by the rounds-knee sweeps measured in docs/SCALING.md). The
     * checkpointed RDD is the LogicalRDD leaf the eager checkpoint
     * embedded in the returned frame; unpersist is async (the next
     * round never reads it again). */
@@ -152,9 +146,9 @@ object BpeTrain {
     * is PART OF THE ALGORITHM CONTRACT (a round picks fewer than p
     * only if the window runs out of compatible pairs), so a DuckDB
     * oracle replays the walk exactly — q205 does. With p = 1 the walk
-    * degenerates to [[fit]]'s greedy, merge for merge (BpeTrainSpec
-    * asserts it as a law). Ranks are global selection order
-    * (round-major). */
+    * IS the classic greedy for any `topCap` ([[fit]] runs it at
+    * topCap = 1; BpeTrainSpec asserts the law at the default window).
+    * Ranks are global selection order (round-major). */
   def fitBatched(words: DataFrame, rounds: Int, p: Int,
                  topCap: Int = 64): Seq[Merge] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -192,39 +186,11 @@ object BpeTrain {
     merges
   }
 
-  /** Learn up to `rounds` merges from a (w, cnt) word vocabulary.
-    * Stops early if the corpus runs dry (no adjacent pair left — every
-    * word fully merged). Returns the merge table in rank order. */
-  def fit(words: DataFrame, rounds: Int): Seq[Merge] = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var state = charState(words).localCheckpoint(true)
-    var merges = Vector.empty[Merge]
-    var dry = false
-    while (merges.size < rounds && !dry) {
-      // corpus-weighted adjacent-pair counts + 1-row argmax: the ONLY
-      // driver-visible data per round is the winning (l, r, count)
-      val best = state.filter(size(col("toks")) >= 2)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(0, size(toks) - 2)," +
-            " i -> struct(toks[i] AS l, toks[i+1] AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .agg(min_by(struct(col("l"), col("r"), col("c")),
-          struct((-col("c")).as("nc"), col("l"), col("r"))).as("b"))
-        .select(col("b.l"), col("b.r"), col("b.c"))
-        .head
-      if (best.isNullAt(0)) dry = true
-      else {
-        val (l, r, c) = (best.getString(0), best.getString(1), best.getLong(2))
-        merges :+= Merge(merges.size + 1, l, r, c)
-        val next = state
-          .withColumn("toks", applyMerge(col("toks"), l, r))
-          .localCheckpoint(true) // cut the per-round lineage growth
-        freeCheckpoint(state)   // eager above: the old blocks are dead
-        state = next
-      }
-    }
-    freeCheckpoint(state)
-    merges
-  }
+  /** Learn up to `rounds` merges from a (w, cnt) word vocabulary: the
+    * classic one-merge-per-round greedy, i.e. [[fitBatched]] at p = 1
+    * with a one-pair candidate window. Stops early if the corpus runs
+    * dry (no adjacent pair left — every word fully merged). Returns the
+    * merge table in rank order. */
+  def fit(words: DataFrame, rounds: Int): Seq[Merge] =
+    fitBatched(words, rounds, p = 1, topCap = 1)
 }

@@ -59,46 +59,67 @@ object GraphOps {
       // inside one round sits under the dedup Exchange, which
       // ReuseExchange shares, so lazy first-run is single-compute)
       .localCheckpoint(false)
-    var labels: DataFrame = null
-    var prevSig: Option[(Long, Long)] = None
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    val (labels, converged) = sumFixpoint("lbl", maxIter, "connectedComponents",
+        "remap ids to a dense range") { prev =>
       // min label among self + neighbors (self-loops make this total);
       // iteration 1 reads edge targets directly — label(t) = t initially
-      val nmin =
-        if (labels == null)
+      val nmin = prev match {
+        case None =>
           edges.groupBy(col("s").as("node")).agg(min(col("t")).as("lbl"))
-        else
+        case Some(labels) =>
           edges
             .join(labels.select(col("node").as("t"), col("lbl").as("tlbl")), Seq("t"))
             .groupBy(col("s").as("node"))
             .agg(min(col("tlbl")).as("lbl"))
+      }
       // pointer jump on the FRESH labels: follow my label's label (path
       // halving) — jumping the newer mapping shortcuts further per round
-      val next = nmin
+      nmin
         .join(nmin.select(col("node").as("lbl"), col("lbl").as("ll")), Seq("lbl"), "left")
         .select(col("node"), least(col("lbl"), coalesce(col("ll"), col("lbl"))).as("lbl"))
-        .localCheckpoint(false) // lazy: materialized by the signal job
-      // ONE action: materializes the checkpoint AND reads the signal.
-      // max(abs(lbl)) rides along to ENFORCE the wrap-exactness
-      // precondition (n * max|id| < 2^63): labels are always node ids,
-      // so checking it once — on the first signal — covers every round.
-      // Callers with huge hashed ids get a loud error here instead of a
-      // silent premature fixpoint.
-      val row = next.agg(sum(col("lbl")), count(lit(1)), max(abs(col("lbl")))).head()
-      val sig = if (row.isNullAt(0)) (0L, 0L) else (row.getLong(0), row.getLong(1))
-      if (i == 0 && !row.isNullAt(2))
-        require(row.getLong(2).toDouble * sig._2 < 9.2e18,
-          s"connectedComponents sum-convergence needs n * max|id| < 2^63 " +
-            s"(n=${sig._2}, max|id|=${row.getLong(2)}); remap ids to a dense range")
-      converged = prevSig.contains(sig)
-      prevSig = Some(sig)
-      labels = next
-      i += 1
     }
     require(converged, s"connectedComponents did not converge in $maxIter iterations")
-    labels.select(col("node"), col("lbl").as("cluster_id"))
+    labels.get.select(col("node"), col("lbl").as("cluster_id"))
+  }
+
+  /** The sum-signal fixpoint loop shared by [[connectedComponents]] and
+    * [[ssspInt]]: `step` maps the previous round's table (None in round
+    * 1) to the next one, whose column `v` only ever decreases per row
+    * while rows are only ever added — so equal consecutive (sum(v),
+    * count) signals IS the fixpoint. Each round's table is checkpointed
+    * lazily and ONE action materializes it AND reads the signal.
+    * max|v| rides along to ENFORCE the wrap-exactness precondition
+    * (n * max|v| < 2^63, see [[connectedComponents]]) on every round:
+    * callers with huge ids get a loud error instead of a silent
+    * premature fixpoint. `nonNegative` also rejects a negative maximum
+    * (a key space a shift/mask decode cannot read back). Returns the
+    * last round's table (None when `maxIter` < 1) and whether the
+    * fixpoint was reached within `maxIter` rounds. */
+  private def sumFixpoint(v: String, maxIter: Int, what: String, remedy: String,
+                          nonNegative: Boolean = false)
+                         (step: Option[DataFrame] => DataFrame)
+      : (Option[DataFrame], Boolean) = {
+    var cur: Option[DataFrame] = None
+    var prevSig: Option[(Long, Long)] = None
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      val next = step(cur).localCheckpoint(false) // lazy: materialized by the signal job
+      val row = next.agg(sum(col(v)), count(lit(1)), max(abs(col(v))), max(col(v))).head()
+      val sig = if (row.isNullAt(0)) (0L, 0L) else (row.getLong(0), row.getLong(1))
+      if (!row.isNullAt(2)) {
+        require(!nonNegative || row.getLong(3) >= 0,
+          s"$what needs non-negative keys (max($v)=${row.getLong(3)}); $remedy")
+        require(row.getLong(2).toDouble * sig._2 < 9.2e18,
+          s"$what sum-convergence needs n * max|$v| < 2^63 " +
+            s"(n=${sig._2}, max|$v|=${row.getLong(2)}); $remedy")
+      }
+      converged = prevSig.contains(sig)
+      prevSig = Some(sig)
+      cur = Some(next)
+      i += 1
+    }
+    (cur, converged)
   }
 
   /** PageRank with a FIXED iteration count, entirely in integer space so
@@ -247,18 +268,7 @@ object GraphOps {
                    maxIter: Int = 12, canonical: Boolean = false)
       : (DataFrame, Map[Int, Boolean]) = {
     require(ks.nonEmpty && ks.forall(_ >= 1), s"bad k list: $ks")
-    // `canonical = true` asserts the caller's pairs are already distinct,
-    // self-loop-free and u < v oriented (true for every coOccurrence*
-    // output) — skipping a full no-op exchange + dedup of the edge set.
-    // UNCHECKED caller contract (ADVICE r13): passing non-canonical
-    // edges with the flag set silently corrupts degrees/triangles/
-    // communities — set it ONLY for coOccurrencePairs/Counts outputs
-    // (or inputs with the same proven invariant), never to "save" the
-    // dedup on raw edge lists.
-    val e = (if (canonical) pairs.select(col(a).as("u"), col(b).as("v"))
-      else pairs.filter(col(a) =!= col(b))
-        .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-        .distinct())
+    val e = undirected(pairs, a, b, canonical)
       .localCheckpoint() // eager: read twice by the adjacency build
     // Adjacency as (n, neighbor array): per round the decrement join
     // scans NODE-count rows instead of 2x edge-count rows. Arrays are
@@ -342,9 +352,7 @@ object GraphOps {
     */
   def kCore(pairs: DataFrame, a: String, b: String, k: Int,
             maxIter: Int = 12): (DataFrame, Boolean) = {
-    val e = pairs.filter(col(a) =!= col(b))
-      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      .distinct()
+    val e = undirected(pairs, a, b, canonical = false)
     val (deg, conv) = kCoreDegrees(pairs, a, b, Seq(k), maxIter)
     val surv = deg.select(col("n"))
     val core = e
@@ -353,6 +361,48 @@ object GraphOps {
       .select(col("u"), col("v")) // USING-joins move the key first; re-pin
       .localCheckpoint() // eager: callers fan out over the core
     (core, conv(k))
+  }
+
+  /** One row per undirected edge as (u, v) with u < v: self-loops
+    * dropped, reversed duplicates canonicalized map-side (least/greatest)
+    * before the dedup. `canonical = true` asserts the caller's pairs are
+    * already distinct, self-loop-free and u < v oriented (true for every
+    * coOccurrence* output) — skipping a full no-op exchange + dedup of
+    * the edge set. UNCHECKED caller contract (ADVICE r13): passing
+    * non-canonical edges with the flag set silently corrupts degrees/
+    * triangles/communities — set it ONLY for coOccurrencePairs/Counts
+    * outputs (or inputs with the same proven invariant), never to "save"
+    * the dedup on raw edge lists. */
+  private def undirected(pairs: DataFrame, a: String, b: String,
+                         canonical: Boolean): DataFrame =
+    if (canonical) pairs.select(col(a).as("u"), col(b).as("v"))
+    else pairs.filter(col(a) =!= col(b))
+      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
+      .distinct()
+
+  /** Orient every canonical edge (u, v) from its lower-(degree, id)
+    * endpoint s to the higher one t — a total order, so the result is a
+    * DAG whose out-degrees are O(√m). Eagerly checkpointed: the sole
+    * pass over `e`, reused by the caller's adjacency build. */
+  private def orientByDegree(e: DataFrame): DataFrame = {
+    val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
+      .groupBy(col("n")).agg(count(lit(1)).as("d"))
+    val toLower = e
+      .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
+      .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
+    val fwd = col("du") < col("dv") ||
+      (col("du") === col("dv") && col("u") < col("v"))
+    toLower.select(
+      when(fwd, col("u")).otherwise(col("v")).as("s"),
+      when(fwd, col("v")).otherwise(col("u")).as("t"))
+      // Pin the checkpoint's parallelism: the adjacency explode after it
+      // AMPLIFIES (input m rows, output Σ outdeg² array elements),
+      // which AQE cannot see when it coalesces by INPUT size — a
+      // ~20 MB oriented table otherwise collapses to one partition and
+      // the close stage builds serially on a single task. Hash-by-s
+      // also makes the adjacency groupBy exchange-free.
+      .repartition(col("s"))
+      .localCheckpoint(true)
   }
 
   /** Exact triangle count by DEGREE ORIENTATION (the classic
@@ -379,29 +429,7 @@ object GraphOps {
     */
   def triangleStats(edges: DataFrame, u: String, v: String,
                     canonical: Boolean = false): DataFrame = {
-    // `canonical = true`: see kCoreDegrees — skips a no-op dedup exchange
-    val e = if (canonical) edges.select(col(u).as("u"), col(v).as("v"))
-      else edges.filter(col(u) =!= col(v))
-        .select(least(col(u), col(v)).as("u"), greatest(col(u), col(v)).as("v"))
-        .distinct()
-    val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val toLower = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-    val fwd = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = toLower.select(
-      when(fwd, col("u")).otherwise(col("v")).as("s"),
-      when(fwd, col("v")).otherwise(col("u")).as("t"))
-      // Pin the checkpoint's parallelism: the adjacency explode below
-      // AMPLIFIES (input m rows, output Σ outdeg² array elements),
-      // which AQE cannot see when it coalesces by INPUT size — a
-      // ~20 MB oriented table otherwise collapses to one partition and
-      // the close stage builds serially on a single task. Hash-by-s
-      // also makes the adjacency groupBy exchange-free.
-      .repartition(col("s"))
-      .localCheckpoint(true) // sole pass over `e`; reused below
+    val oriented = orientByDegree(undirected(edges, u, v, canonical))
     // Degree-ordered adjacency-array intersection (r14; guide §2.4/§8):
     // the DAG orientation gives every triangle a unique (source s,
     // middle t, sink c) with edges s→t, s→c, t→c, so
@@ -447,7 +475,7 @@ object GraphOps {
     * intersect output followed by one hash aggregate yields every
     * node's triangle incidence. Same orientation bound (out-degrees
     * O(√m), intersect work O(m^1.5)), same repartition-by-s checkpoint
-    * (see triangleStats for why AQE's input-sized coalesce must not see
+    * (see orientByDegree for why AQE's input-sized coalesce must not see
     * the amplifying explode) — no new shuffle shape.
     *
     * Input: one row per undirected edge (u, v); self-loops dropped,
@@ -455,23 +483,7 @@ object GraphOps {
     * left-join and coalesce to 0 for the rest. */
   def trianglesPerNode(edges: DataFrame, u: String, v: String,
                        canonical: Boolean = false): DataFrame = {
-    // `canonical = true`: see kCoreDegrees — skips a no-op dedup exchange
-    val e = if (canonical) edges.select(col(u).as("u"), col(v).as("v"))
-      else edges.filter(col(u) =!= col(v))
-        .select(least(col(u), col(v)).as("u"), greatest(col(u), col(v)).as("v"))
-        .distinct()
-    val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val toLower = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-    val fwd = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = toLower.select(
-      when(fwd, col("u")).otherwise(col("v")).as("s"),
-      when(fwd, col("v")).otherwise(col("u")).as("t"))
-      .repartition(col("s"))
-      .localCheckpoint(true)
+    val oriented = orientByDegree(undirected(edges, u, v, canonical))
     // Same adjacency-array intersection as triangleStats (r14), with
     // the triangle CORNERS kept: the oriented edge (s, t) closes
     // |cs| = |N+(s) ∩ N+(t)| triangles, each touching {s, t, c} — so s
@@ -528,11 +540,7 @@ object GraphOps {
   def labelPropagate(pairs: DataFrame, a: String, b: String,
                      iters: Int = 4, canonical: Boolean = false): DataFrame = {
     require(iters >= 1, s"labelPropagate needs >= 1 round, got $iters")
-    // `canonical = true`: see kCoreDegrees — skips a no-op dedup exchange
-    val p = if (canonical) pairs.select(col(a).as("u"), col(b).as("v"))
-      else pairs.filter(col(a) =!= col(b))
-        .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-        .distinct()
+    val p = undirected(pairs, a, b, canonical)
     // both directions via ONE map-side explode — a self-union would
     // evaluate p's upstream twice when p carries no reusable exchange
     // (the canonical path strips the dedup shuffle)
@@ -603,29 +611,18 @@ object GraphOps {
     val e = edges.select(col(src).as("s"), col(dst).as("t"),
         (col(w).cast("long") * HopPack + 1L).as("step"))
       .localCheckpoint() // eager: re-read every round
-    var labels = sources.toDF("node").select(col("node"), lit(0L).as("key"))
+    val init = sources.toDF("node").select(col("node"), lit(0L).as("key"))
       .localCheckpoint()
-    var prevSig: Option[(Long, Long)] = None
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    val (last, converged) = sumFixpoint("key", maxIter, "ssspInt",
+        "shrink weights or remap ids", nonNegative = true) { prev =>
+      val labels = prev.getOrElse(init)
       val relaxed = labels
         .join(e, labels("node") === e("s"))
         .select(col("t").as("node"), (col("key") + col("step")).as("key"))
-      val next = labels.unionByName(relaxed)
+      labels.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("key")).as("key"))
-        .localCheckpoint(false) // lazy: materialized by the signal job
-      val row = next.agg(sum(col("key")), count(lit(1)), max(col("key"))).head()
-      val sig = if (row.isNullAt(0)) (0L, 0L) else (row.getLong(0), row.getLong(1))
-      if (!row.isNullAt(2))
-        require(row.getLong(2) >= 0 && row.getLong(2).toDouble * sig._2 < 9.2e18,
-          s"ssspInt sum-convergence needs n * maxKey < 2^63 " +
-            s"(n=${sig._2}, maxKey=${row.getLong(2)}); shrink weights or remap ids")
-      converged = prevSig.contains(sig)
-      prevSig = Some(sig)
-      labels = next
-      i += 1
     }
+    val labels = last.getOrElse(init)
     // keys are non-negative, so shift/mask == floor-div/mod — integer
     // space end to end (Spark's `/` on longs would return DOUBLE)
     (labels.select(col("node"), shiftright(col("key"), 20).as("dist"),
@@ -666,23 +663,24 @@ object GraphOps {
       // plain projection over the checkpointed RDD with the max inlined
       // as a literal — no broadcast build, no second materialization,
       // identical integer arithmetic.
-      val araw = e.join(h, Seq("o"))
-        .groupBy(col("p")).agg(sum(col("h")).as("ar"))
-        .localCheckpoint(false) // materialized by the max head() below
-      val amRow = araw.agg(max(col("ar"))).head
-      // empty edge set ⇒ araw empty ⇒ a empty: the divisor is then
-      // never evaluated, any non-zero literal keeps the plan valid
-      val am = if (amRow.isNullAt(0)) 1L else amRow.getLong(0)
-      a = araw.select(col("p"),
-        Sampling.ldiv(col("ar") * lit(scale), lit(am)).as("a"))
-      val hraw = e.join(a, Seq("p"))
-        .groupBy(col("o")).agg(sum(col("a")).as("hr"))
-        .localCheckpoint(false) // materialized by the max head() below
-      val hmRow = hraw.agg(max(col("hr"))).head
-      val hm = if (hmRow.isNullAt(0)) 1L else hmRow.getLong(0)
-      h = hraw.select(col("o"),
-        Sampling.ldiv(col("hr") * lit(scale), lit(hm)).as("h"))
+      a = maxNormalize(e.join(h, Seq("o")).groupBy(col("p")).agg(sum(col("h")).as("ar")),
+        "p", "ar", "a", scale)
+      h = maxNormalize(e.join(a, Seq("p")).groupBy(col("o")).agg(sum(col("a")).as("hr")),
+        "o", "hr", "h", scale)
     }
     a
+  }
+
+  /** One HITS half-round's normalize: (key, raw) → (key, out) with
+    * out = raw·scale div max(raw). The raw table is checkpointed lazily
+    * and materialized by the head() that collects its max. */
+  private def maxNormalize(raw: DataFrame, key: String, score: String, out: String,
+                           scale: Long): DataFrame = {
+    val r = raw.localCheckpoint(false)
+    val mRow = r.agg(max(col(score))).head
+    // empty edge set ⇒ raw empty ⇒ result empty: the divisor is then
+    // never evaluated, any non-zero literal keeps the plan valid
+    val m = if (mRow.isNullAt(0)) 1L else mRow.getLong(0)
+    r.select(col(key), Sampling.ldiv(col(score) * lit(scale), lit(m)).as(out))
   }
 }

@@ -29,10 +29,12 @@ import graft.operators.Curation
   *   manifest/  one row per source: n_docs, n_train, after_decontam,
   *              after_neardup, after_quality, n_kept (monotone funnel)
   *
-  * Both writes go through [[Pipeline.swapWrite]] — the corpus is never
-  * visible in a partial state, a crash between the two renames self-heals
-  * on the next [[Pipeline.pathExists]], and a rerun is a full replace
-  * (idempotent, the reference's own load semantics; load.py:18-28).
+  * Both tables are staged and published by one [[TierCommit.commit]] —
+  * neither is ever visible in a partial state, a crash before the commit
+  * point leaves both old, a crash after it is rolled forward (both new)
+  * by the [[TierCommit.heal]] the next write runs first, and a rerun is
+  * a full replace (idempotent, the reference's own load semantics;
+  * load.py:18-28).
   * Every stage decision is a deterministic pure function of the document
   * row, so a rerun reproduces the corpus bit-for-bit.
   *
@@ -52,6 +54,7 @@ object CuratedCorpus {
     * n_chars) and write corpus + manifest under `outDir`. Returns the
     * manifest as re-read from disk (what a release consumer sees). */
   def write(spark: SparkSession, docs: DataFrame, outDir: String): DataFrame = {
+    TierCommit.heal(spark, outDir) // finish an interrupted commit first
     // Stage 2 drop set: tiny by construction (contaminated train docs).
     // Persisted + materialized so the 5-gram window runs once even
     // though the set feeds both the ledger join and (via the stage-3
@@ -94,11 +97,13 @@ object CuratedCorpus {
         val kept = docs.join(
           ledger.filter(col("s_kept")).select("doc_id"), Seq("doc_id"), "left_semi")
 
-        // corpus BEFORE manifest: a crash in between leaves a corpus
-        // with no manifest (detectably incomplete release) rather than
-        // a manifest describing a corpus that is not there
-        Pipeline.swapWrite(spark, kept, s"$outDir/docs", partitionBy = Seq("source"))
-        Pipeline.swapWrite(spark, manifest, s"$outDir/manifest")
+        // both tables staged, then published by ONE commit point: a
+        // crash anywhere leaves the old corpus beside its old manifest
+        // or (after heal) the new corpus beside its new manifest
+        val (docsOut, manifestOut) = (s"$outDir/docs", s"$outDir/manifest")
+        TierCommit.stageDf(spark, kept, docsOut, partitionBy = Seq("source"))
+        TierCommit.stageDf(spark, manifest, manifestOut)
+        TierCommit.commit(spark, outDir, Seq(docsOut, manifestOut))
       } finally ledger.unpersist()
     } finally contam.unpersist()
     spark.read.parquet(s"$outDir/manifest")

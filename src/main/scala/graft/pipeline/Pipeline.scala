@@ -136,11 +136,11 @@ object TierCommit {
 
   val ManifestName = "_tier_commit.json"
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+  private[pipeline] def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def swapTmp(t: Path) = new Path(t.getParent, t.getName + ".__swap_tmp")
-  private def swapOld(t: Path) = new Path(t.getParent, t.getName + ".__swap_old")
+  private[pipeline] def swapTmp(t: Path) = new Path(t.getParent, t.getName + ".__swap_tmp")
+  private[pipeline] def swapOld(t: Path) = new Path(t.getParent, t.getName + ".__swap_old")
 
   /** Where a stage for `target` must land — for writers that stage a
     * whole directory TREE themselves (a segmented index: postings +
@@ -167,7 +167,7 @@ object TierCommit {
     * any point: tmp absent means the swap already happened (only the
     * graveyard cleanup can remain); target absent with tmp present means
     * the graveyard rename happened but not the swap-in. */
-  private def promote(spark: SparkSession, targetStr: String): Unit = {
+  private[pipeline] def promote(spark: SparkSession, targetStr: String): Unit = {
     val target = new Path(targetStr)
     val fs = fsOf(spark, target)
     val (tmp, old) = (swapTmp(target), swapOld(target))
@@ -344,6 +344,7 @@ object TierCommit {
   */
 object Pipeline {
   import org.apache.hadoop.fs.Path
+  import TierCommit.fsOf
   import org.json4s._
   import org.json4s.jackson.JsonMethods
 
@@ -538,7 +539,7 @@ object Pipeline {
     val unchanged = if (statePath.isEmpty || !dimFresh) None else
       readText(spark, recordPath).map(JsonMethods.parse(_))
         .filter(rec => JsonMethods.compact(rec \ "inputs") == JsonMethods.compact(inputs) &&
-          targets.forall(t => fsOf(spark, t).exists(new Path(t))))
+          targets.forall { t => val p = new Path(t); fsOf(spark, p).exists(p) })
         .map(_ \ "marks")
         .collect { case m: JObject => IncrementalState.fromJson(JsonMethods.compact(m)) }
 
@@ -591,14 +592,12 @@ object Pipeline {
       bcbSeriesLastDate = bcbSeries)
   }
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The data files under `path` (Hadoop's hidden `_`/`.` files left
     * out), as sorted [relative name, length, modification time] triples;
     * empty when `path` does not exist. */
   private def dataFiles(spark: SparkSession, path: String): JValue = {
-    val (p, fs) = (new Path(path), fsOf(spark, path))
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     if (fs.exists(p)) {
       val base = fs.makeQualified(p).toUri.getPath
@@ -616,18 +615,14 @@ object Pipeline {
 
   /** A small text file's content through the Hadoop FileSystem API. */
   private def readText(spark: SparkSession, path: String): Option[String] = {
-    val (p, fs) = (new Path(path), fsOf(spark, path))
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     }
   }
-
-  private def swapTmp(t: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(t.getParent, t.getName + ".__swap_tmp")
-  private def swapOld(t: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(t.getParent, t.getName + ".__swap_old")
 
   /** Scheme-aware existence check through the Hadoop FileSystem API —
     * `java.nio.file.Files.exists` sees only the LOCAL filesystem and
@@ -649,11 +644,11 @@ object Pipeline {
     // disagree about which filesystem a path lives on. (Hardcoding a
     // file: prefix here would re-introduce the local-only bug for
     // scheme-less paths on a defaultFS=hdfs cluster.)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
     if (!fs.exists(p)) {
-      val (tmp, old) = (swapTmp(p), swapOld(p))
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
+      val (tmp, old) = (TierCommit.swapTmp(p), TierCommit.swapOld(p))
+      if (fs.exists(new Path(tmp, "_SUCCESS"))) {
         // crashed after graveyarding the old version, before promoting
         // the fully-committed new one: finish the swap
         if (!fs.rename(tmp, p)) sys.error(s"failed to heal swap of $p from $tmp")
@@ -668,9 +663,11 @@ object Pipeline {
   }
 
   /** Overwrite `path` with `df` even when `df`'s lineage reads `path`:
-    * write to a sibling temp dir, then swap via FileSystem renames
-    * (atomic moves on HDFS/local; on object stores a rename is a copy
-    * but still correct). Public: the streaming merge sink
+    * stage to a sibling temp dir ([[TierCommit.stageDf]]), then swap via
+    * [[TierCommit.promote]]'s FileSystem renames (atomic moves on
+    * HDFS/local; on object stores a rename is a copy but still
+    * correct) — a one-table tier commit without the manifest. Public:
+    * the streaming merge sink
     * ([[graft.streaming.EventStreams.mergeSink]]) reuses it per batch.
     *
     * CRASH POSTURE: the target is never deleted before its replacement
@@ -683,21 +680,7 @@ object Pipeline {
     * is the strongest sequence plain directories support. */
   def swapWrite(spark: SparkSession, df: DataFrame, path: String,
                 partitionBy: Seq[String] = Nil): Unit = {
-    // same defaultFS-aware resolution as pathExists (and as the write/
-    // read below): no hand-built URIs, so paths with spaces or a
-    // cluster defaultFS both resolve consistently
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (tmp, old) = (swapTmp(target), swapOld(target))
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp.toString)
-    if (fs.exists(target)) {
-      fs.delete(old, true) // stale graveyard from an interrupted cleanup
-      if (!fs.rename(target, old))
-        sys.error(s"failed to graveyard $target before swapping in $tmp")
-    }
-    if (!fs.rename(tmp, target))
-      sys.error(s"failed to swap $tmp into place at $target")
-    fs.delete(old, true)
+    TierCommit.stageDf(spark, df, path, partitionBy)
+    TierCommit.promote(spark, path)
   }
 }

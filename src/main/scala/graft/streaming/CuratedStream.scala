@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, GraphOps, TextOps}
-import graft.pipeline.Pipeline
+import graft.pipeline.TierCommit
 
 /** The STREAMING curated corpus — the incremental form of
   * [[graft.pipeline.CuratedCorpus.write]], composing the three streaming
@@ -74,6 +74,7 @@ object CuratedStream {
     * (no batch input — pure function of the stores, so a replayed batch
     * re-derives identical output). */
   def deriveAndWrite(spark: SparkSession, rootDir: String): Unit = {
+    TierCommit.heal(spark, s"$rootDir/curated") // finish an interrupted commit first
     val docs = spark.read.parquet(s"$rootDir/docs.parquet")
     val counts = spark.read.parquet(s"$rootDir/decontam_counts.parquet")
     val verdicts = spark.read.parquet(s"$rootDir/verdicts.parquet")
@@ -126,8 +127,11 @@ object CuratedStream {
         .orderBy(col("source"))
       val kept = docs.join(ledger.filter(col("s_kept")).select("doc_id"),
         Seq("doc_id"), "left_semi")
-      Pipeline.swapWrite(spark, kept, s"$rootDir/curated/docs", partitionBy = Seq("source"))
-      Pipeline.swapWrite(spark, manifest, s"$rootDir/curated/manifest")
+      // one commit point for both tables, as in the batch write path
+      val (docsOut, manifestOut) = (s"$rootDir/curated/docs", s"$rootDir/curated/manifest")
+      TierCommit.stageDf(spark, kept, docsOut, partitionBy = Seq("source"))
+      TierCommit.stageDf(spark, manifest, manifestOut)
+      TierCommit.commit(spark, s"$rootDir/curated", Seq(docsOut, manifestOut))
     } finally ledger.unpersist()
   }
 

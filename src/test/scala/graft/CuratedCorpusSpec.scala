@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Curation
-import graft.pipeline.{CuratedCorpus, Pipeline}
+import graft.pipeline.{CuratedCorpus, Pipeline, TierCommit}
 
 /** E2e for the curated-corpus write path: the manifest must agree with
   * the oracle-checked accounting queries (q47), the written corpus must
@@ -99,5 +99,32 @@ class CuratedCorpusSpec extends SparkSpec {
     assert(fs.rename(target, tmpP))
     assert(Pipeline.pathExists(spark, s"$out/docs"), "heal must promote the committed tmp")
     assert(spark.read.parquet(s"$out/docs").count() == before)
+  }
+
+  test("docs and manifest publish together: all-old before the commit point, all-new after heal") {
+    val out = tmp()
+    def release(dir: String) = (
+      spark.read.parquet(s"$dir/docs").select("doc_id").as[Long].collect().toSet,
+      spark.read.parquet(s"$dir/manifest").orderBy("source").collect().toSeq)
+    CuratedCorpus.write(spark, docs, out)
+    val old = release(out)
+    val changed = docs.filter(col("doc_id") % 3 =!= 0)
+    val fresh = tmp()
+    CuratedCorpus.write(spark, changed, fresh)
+    val expected = release(fresh)
+    assert(expected._1 != old._1 && expected._2 != old._2)
+
+    // a directory where the manifest's tmp goes makes the rerun fail
+    // after both tables were staged, before the commit point
+    val blocker = java.nio.file.Paths.get(out, "_tier_commit.json.__tmp")
+    java.nio.file.Files.createDirectories(blocker)
+    intercept[java.io.IOException](CuratedCorpus.write(spark, changed, out))
+    assert(release(out) == old, "a table changed without a commit")
+
+    // a crash right after the commit point: heal publishes both
+    java.nio.file.Files.delete(blocker)
+    TierCommit.writeManifest(spark, out, Seq(s"$out/docs", s"$out/manifest"))
+    assert(TierCommit.heal(spark, out))
+    assert(release(out) == expected)
   }
 }

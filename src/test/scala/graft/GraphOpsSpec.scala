@@ -36,6 +36,27 @@ class GraphOpsSpec extends SparkSpec {
     assert(got.length == n && got.forall(_.getLong(1) == 1L))
   }
 
+  test("connectedComponents rejects ids whose n * max|id| reaches 2^63") {
+    // the second component is labeled by its min id 2^62, so
+    // n * max|label| = 4 * 2^62: a wrapped label sum could repeat before
+    // the fixpoint. Two bits lower, 4 * 2^60 stays inside the bound.
+    def cc(base: Long) = GraphOps.connectedComponents(
+      Seq((1L, 2L), (base, base + 1)).toDF("a", "b"), "a", "b")
+    val e = intercept[IllegalArgumentException](cc(1L << 62))
+    assert(e.getMessage.contains("connectedComponents") && e.getMessage.contains("< 2^63"))
+    assert(cc(1L << 60).filter($"cluster_id" === (1L << 60)).count() == 2)
+  }
+
+  test("connectedComponents raises when maxIter is too small to converge") {
+    // an 8-node chain still relabels in round 2; convergence needs a
+    // round whose signal repeats the previous one
+    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](
+      GraphOps.connectedComponents(pairs, "a", "b", maxIter = 2))
+    assert(e.getMessage.contains("did not converge in 2 iterations"))
+    assert(GraphOps.connectedComponents(pairs, "a", "b").filter($"cluster_id" === 1L).count() == 8)
+  }
+
   test("triangleStats counts K4 exactly (4 triangles, 6 edges)") {
     val k4 = (for { i <- 1L to 4L; j <- (i + 1) to 4L } yield (i, j)).toDF("u", "v")
     val r = GraphOps.triangleStats(k4, "u", "v").collect().head

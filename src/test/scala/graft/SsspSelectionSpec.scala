@@ -54,6 +54,20 @@ class SsspSelectionSpec extends SparkSpec {
     assert(conv2 && got.last == ((7L, 6L, 6L)))
   }
 
+  test("ssspInt rejects a key space where n * maxKey reaches 2^63") {
+    // weight 2^42 packs to key 2^62 + 1; two labeled nodes already
+    // exceed the sum signal's wrap-exactness bound in round 1
+    val e = intercept[IllegalArgumentException](sssp(Seq((1L, 2L, 1L << 42)), Seq(1L)))
+    assert(e.getMessage.contains("ssspInt") && e.getMessage.contains("< 2^63"))
+  }
+
+  test("ssspInt rejects a negative key space") {
+    // a negative weight on an undirected edge drives the source below 0
+    // in round 2, and with it the maximum key: shift/mask cannot decode it
+    val e = intercept[IllegalArgumentException](sssp(Seq((1L, 2L, -1L)), Seq(1L)))
+    assert(e.getMessage.contains("ssspInt"))
+  }
+
   test("kthSmallest matches a sorted-array oracle across ranks and duplicates") {
     val xs = Seq(5L, -3L, 5L, 0L, 17L, 5L, -3L, 9L)
     val df = xs.toDF("v")

@@ -43,34 +43,39 @@ object Explain {
         // job listener — tells driver-loop queries where their seconds
         // go (job count x scheduling floor vs one dominant job), which
         // explain() cannot show once subtrees hide behind checkpoints.
-        val jobs = collection.mutable.ArrayBuffer.empty[(Int, Long, String)]
-        val starts = collection.concurrent.TrieMap.empty[Int, (Long, String)]
+        // Only jobs submitted under the timed run's local property count:
+        // a warm-up job whose end event the listener sees late is not one.
+        val RunKey = "graft.profile.run"
+        val jobs = collection.mutable.ArrayBuffer.empty[(String, Int, Long, String)]
+        val starts = collection.concurrent.TrieMap.empty[Int, (String, Long, String)]
         val listener = new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
               js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts(js.jobId) = (js.time,
-              js.stageInfos.headOption.map(_.name).getOrElse(""))
+            Option(js.properties).flatMap(p => Option(p.getProperty(RunKey)))
+              .foreach { run => starts(js.jobId) = (run, js.time,
+                js.stageInfos.headOption.map(_.name).getOrElse("")) }
           override def onJobEnd(
               je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            starts.get(je.jobId).foreach { case (t0, nm) =>
-              jobs.synchronized { jobs += ((je.jobId, je.time - t0, nm)) } }
+            starts.remove(je.jobId).foreach { case (run, t0, nm) =>
+              jobs.synchronized { jobs += ((run, je.jobId, je.time - t0, nm)) } }
         }
         spark.sparkContext.addSparkListener(listener)
-        names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+        names.split(",").map(_.trim).filter(_.nonEmpty).zipWithIndex.foreach { case (name, i) =>
           val fn = Queries.queries(name)
           fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm-up
-          jobs.synchronized(jobs.clear())
+          val run = s"$name#$i"
+          spark.sparkContext.setLocalProperty(RunKey, run)
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val wall = (System.nanoTime() - t0) / 1e9
+          spark.sparkContext.setLocalProperty(RunKey, null)
           Thread.sleep(1000) // listener bus drain
-          jobs.synchronized {
-            val tot = jobs.map(_._2).sum
-            println(f"PROFILE $name wall=$wall%.2f s, ${jobs.size} jobs, " +
-              f"sum(job)=${tot / 1000.0}%.2f s (gap=${wall - tot / 1000.0}%.2f s)")
-            jobs.sortBy(_._1).foreach { case (id, ms, nm) =>
-              println(f"  job $id%4d ${ms}%6d ms  $nm") }
-          }
+          val timed = jobs.synchronized(jobs.filter(_._1 == run).toList)
+          val tot = timed.map(_._3).sum
+          println(f"PROFILE $name wall=$wall%.2f s, ${timed.size} jobs, " +
+            f"sum(job)=${tot / 1000.0}%.2f s (gap=${wall - tot / 1000.0}%.2f s)")
+          timed.sortBy(_._2).foreach { case (_, id, ms, nm) =>
+            println(f"  job $id%4d ${ms}%6d ms  $nm") }
         }
         // deregister: a leaked listener double-counts jobs if another
         // profiling pass runs in this session (ADVICE r13)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming exact-distinct bitmap maintenance — q149's daily user
@@ -21,16 +21,12 @@ import org.apache.spark.sql.functions._
 object BitmapStream {
 
   /** Fold one micro-batch of (day DATE, user_id BIGINT, ...) rows into
-    * the word state at `statePath`. Exposed for direct testing;
-    * [[start]] wires it to foreachBatch. */
+    * the word state at `statePath` (an idempotent [[StateFold]]).
+    * Exposed for direct testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    statePath: String): Unit = {
     val b = words(batch)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath))
-        merge(spark.read.parquet(statePath), b)
-      else b
-    graft.pipeline.Pipeline.swapWrite(spark, merged, statePath)
+    StateFold.fold(spark, statePath, "BitmapStream")(_.fold(b)(merge(_, b)))
   }
 
   /** (day, bucket, w) word table of a (day, user_id) frame. */
@@ -54,11 +50,7 @@ object BitmapStream {
   /** Wire a (day, user_id, ...) stream into the word state. */
   def start(stream: DataFrame, statePath: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), statePath)
-      }
-      .start()
+    StateFold.start(stream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, statePath)
+    }
 }

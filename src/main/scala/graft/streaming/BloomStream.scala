@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bloom
@@ -27,28 +27,20 @@ import graft.operators.Bloom
   */
 object BloomStream {
 
-  /** Fold one micro-batch of keys into the sketch state at `statePath`.
-    * Idempotent under replay by construction. Exposed for direct
-    * testing; [[start]] wires it to foreachBatch. */
+  /** Fold one micro-batch of keys into the sketch state at `statePath`
+    * (an idempotent [[StateFold]] stamped with `words`). Exposed for
+    * direct testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, keyCol: String,
                    statePath: String, words: Int): Unit = {
     import spark.implicits._
     val b = Bloom.build(batch.select(col(keyCol)), keyCol, words)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val sw = st.select(col("words")).first().getInt(0)
-        require(sw == words,
-          s"BloomStream state at $statePath was built with words=$sw, not $words")
-        wordRows(st).unionByName(b)
-          .groupBy(col("word")).agg(bit_or(col("bits")).as("bits"))
-      } else b
-    // sentinel (word = -1) carries the width metadata even for an
-    // all-empty state — same contract as CmsStream's sentinel
-    graft.pipeline.Pipeline.swapWrite(spark,
-      merged.unionByName(Seq((-1L, 0L)).toDF("word", "bits"))
-        .withColumn("words", lit(words)),
-      statePath)
+    StateFold.fold(spark, statePath, "BloomStream", Seq("words" -> words)) { st =>
+      // sentinel (word = -1) carries the width metadata even for an
+      // all-empty state — same contract as CmsStream's sentinel
+      st.fold(b)(wordRows(_).unionByName(b)
+          .groupBy(col("word")).agg(bit_or(col("bits")).as("bits")))
+        .unionByName(Seq((-1L, 0L)).toDF("word", "bits"))
+    }
   }
 
   /** Real word rows of a persisted state (metadata sentinel filtered
@@ -69,11 +61,7 @@ object BloomStream {
   def start(stream: DataFrame, keyCol: String, statePath: String,
             checkpointDir: String, words: Int)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), keyCol, statePath, words)
-      }
-      .start()
+    StateFold.start(stream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, keyCol, statePath, words)
+    }
 }

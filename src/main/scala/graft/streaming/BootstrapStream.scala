@@ -25,38 +25,28 @@ object BootstrapStream {
   private val Sentinel = -1
 
   /** Fold one micro-batch of (key STRING unique row id, cents LONG)
-    * rows into the replicate-total state at `statePath`. Replays
-    * (batchId <= recorded high-water) are no-ops. */
+    * rows into the replicate-total state at `statePath` (an additive
+    * [[StateFold]], high-water column `hi`: a replayed batch is a
+    * no-op). */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    statePath: String, prefix: String = "boot|",
                    r: Int = Bootstrap.R): Unit = {
     import spark.implicits._
-    val delta = Bootstrap.replicateTotals(batch, col("key"), col("cents"),
-      prefix, r)
-    val dMeta = batch.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("cents")), lit(0L)).as("p")).first()
-    val (dn, dp) = (dMeta.getLong(0), dMeta.getLong(1))
-    val fresh = delta
+    val fresh = Bootstrap.replicateTotals(batch, col("key"), col("cents"),
+        prefix, r)
       .select(col("rep"), col("total"))
       .unionByName(Seq((Sentinel, 0L)).toDF("rep", "total"))
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val meta = st.filter(col("rep") === Sentinel)
-          .select(col("hi"), col("n_rows"), col("point")).first()
-        val (hi, n0, p0) = (meta.getLong(0), meta.getLong(1), meta.getLong(2))
-        if (batchId <= hi) return // replay: totals are additive, skip
-        st.select(col("rep"), col("total")).unionByName(fresh)
-          .groupBy(col("rep")).agg(sum(col("total")).as("total"))
-          .withColumn("hi", lit(batchId))
-          .withColumn("n_rows", lit(n0 + dn))
-          .withColumn("point", lit(p0 + dp))
-      } else
-        fresh.groupBy(col("rep")).agg(sum(col("total")).as("total"))
-          .withColumn("hi", lit(batchId))
-          .withColumn("n_rows", lit(dn))
-          .withColumn("point", lit(dp))
-    graft.pipeline.Pipeline.swapWrite(spark, merged, statePath)
+    StateFold.fold(spark, statePath, "BootstrapStream", hi = Some("hi" -> batchId)) { st =>
+      val d = batch.agg(count(lit(1)), coalesce(sum(col("cents")), lit(0L))).first()
+      val (n0, p0) = st.fold((0L, 0L)) { s =>
+        val m = s.filter(col("rep") === Sentinel).select(col("n_rows"), col("point")).first()
+        (m.getLong(0), m.getLong(1))
+      }
+      st.fold(fresh)(_.select(col("rep"), col("total")).unionByName(fresh))
+        .groupBy(col("rep")).agg(sum(col("total")).as("total"))
+        .withColumn("n_rows", lit(n0 + d.getLong(0)))
+        .withColumn("point", lit(p0 + d.getLong(1)))
+    }
   }
 
   /** The q171-shaped CI row from the persisted state: point estimate
@@ -83,13 +73,9 @@ object BootstrapStream {
       .crossJoin(at(rank(19, 20), "boot_p95_cents"))
   }
 
-  /** Wire a (key, cents) stream into the state via foreachBatch. */
+  /** Wire a (key, cents) stream into the state. */
   def start(rows: DataFrame, statePath: String, checkpointDir: String) =
-    rows.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch.sparkSession, batch, batchId, statePath)
-      }
-      .start()
+    StateFold.start(rows, checkpointDir, "update") { (b, id) =>
+      processBatch(b.sparkSession, b, id, statePath)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Cms
@@ -28,9 +28,9 @@ import graft.operators.Cms
 object CmsStream {
 
   /** Fold one micro-batch of (doc_id, text, ...) rows into the counter
-    * state at `statePath`. Replays (batchId <= recorded high-water)
-    * are no-ops. Exposed for direct testing; [[start]] wires it to
-    * foreachBatch. */
+    * state at `statePath` (an additive [[StateFold]] stamped with d/w,
+    * high-water column `hi`: a replayed batch is a no-op). Exposed for
+    * direct testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    statePath: String, d: Int = Cms.DefaultDepth,
                    w: Int = Cms.DefaultWidth): Unit = {
@@ -38,27 +38,14 @@ object CmsStream {
     val toks = batch.select(
       explode(graft.operators.TextOps.tokens(col("text"))).as("term"))
     val b = Cms.build(toks, "term", d, w)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val (sd, sw, hi) = {
-          val r = st.select(col("d"), col("w"), col("hi")).first()
-          (r.getInt(0), r.getInt(1), r.getLong(2))
-        }
-        require(sd == d && sw == w,
-          s"CmsStream state at $statePath was built with d=$sd,w=$sw, not d=$d,w=$w")
-        if (batchId <= hi) return // replay: counters are additive, skip
-        Cms.merge(counters(st), b)
-      } else b
-    // the sentinel (j = -1) row carries the d/w/hi metadata even when a
-    // batch contributed zero tokens — a 0-row state would otherwise
-    // crash the next batch's metadata read AND lose the replay
-    // high-water, silently re-enabling double counting
-    graft.pipeline.Pipeline.swapWrite(spark,
-      merged.unionByName(Seq((-1, -1L, 0L)).toDF("j", "bucket", "n"))
-        .withColumn("d", lit(d)).withColumn("w", lit(w))
-        .withColumn("hi", lit(batchId)),
-      statePath)
+    StateFold.fold(spark, statePath, "CmsStream", Seq("d" -> d, "w" -> w),
+        Some("hi" -> batchId)) { st =>
+      // the sentinel (j = -1) row carries the d/w/hi metadata even when
+      // a batch contributed zero tokens — a 0-row state would carry no
+      // replay high-water, silently re-enabling double counting
+      st.fold(b)(s => Cms.merge(counters(s), b))
+        .unionByName(Seq((-1, -1L, 0L)).toDF("j", "bucket", "n"))
+    }
   }
 
   /** Real counter rows of a persisted state (the metadata sentinel
@@ -79,11 +66,7 @@ object CmsStream {
   def start(docsStream: DataFrame, statePath: String, checkpointDir: String,
             d: Int = Cms.DefaultDepth, w: Int = Cms.DefaultWidth)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processBatch(b.sparkSession, b.toDF(), id, statePath, d, w)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, id) =>
+      processBatch(b.sparkSession, b, id, statePath, d, w)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, GraphOps, TextOps}
@@ -51,7 +51,7 @@ object CuratedStream {
   /** Advance all state with one micro-batch of (doc_id, text, source)
     * rows, then re-derive the curated table + manifest under
     * `rootDir/curated`. Exposed for direct testing (replay = no-op);
-    * [[start]] wires it to foreachBatch. */
+    * [[start]] runs it on each batch through [[StateFold.start]]. */
   def processBatch(spark: SparkSession, batch: DataFrame, rootDir: String): Unit = {
     // ONE total in-batch conflict resolution, shared by every index —
     // the components' own rules then see a single version per doc_id
@@ -138,11 +138,7 @@ object CuratedStream {
   /** Wire a (doc_id, text, source) stream into the curated table. */
   def start(docsStream: DataFrame, rootDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), rootDir)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, rootDir)
+    }
 }

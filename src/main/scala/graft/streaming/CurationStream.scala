@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Curation
@@ -17,7 +17,7 @@ import graft.operators.Curation
   * function of the document row alone (no cross-document state, unlike
   * near-dup), and the persisted table stores a VERDICT row for every
   * document — kept or not — keyed by doc_id. A replayed micro-batch
-  * (foreachBatch's at-least-once contract after a crash) re-derives
+  * (the at-least-once micro-batch contract after a crash) re-derives
   * identical verdicts (in-batch doc_id conflicts resolve by a
   * deterministic lexicographic-max rule, never partition order) and
   * [[EventStreams.mergeBatch]]'s keyed upsert absorbs them as a no-op.
@@ -60,7 +60,8 @@ object CurationStream {
 
   /** Process one micro-batch of (doc_id, text, source) rows, upserting
     * verdicts into `verdictPath`. Exposed for direct testing (replay =
-    * no-op); [[start]] wires it to foreachBatch. */
+    * no-op); [[start]] runs it on each batch through
+    * [[StateFold.start]]. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    verdictPath: String): Unit =
     EventStreams.mergeBatch(spark, batchVerdicts(batch), verdictPath,
@@ -69,11 +70,7 @@ object CurationStream {
   /** Wire a (doc_id, text, source) stream into the verdict table. */
   def start(docsStream: DataFrame, verdictPath: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), verdictPath)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, verdictPath)
+    }
 }

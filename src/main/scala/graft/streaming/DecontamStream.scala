@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Curation
@@ -30,7 +30,7 @@ import graft.pipeline.Pipeline
   * eval grams against the train-gram store) — everything else is
   * provably unchanged. The rescore itself is ABSOLUTE (recount against
   * the full eval store), never an increment, which is what makes every
-  * merge idempotent under foreachBatch's at-least-once replays
+  * merge idempotent under at-least-once micro-batch replays
   * regardless of where a crash lands:
   *   - counts are merged FIRST (the pairs-before-index discipline from
   *     [[NearDupStream]]): a crash before the gram stores admit the
@@ -68,15 +68,12 @@ object DecontamStream {
 
   /** Process one micro-batch of (doc_id, text) rows against the stores
     * under `indexDir`, upserting per-train-doc counts into `countsPath`.
-    * Exposed for direct testing; [[start]] wires it to foreachBatch. */
+    * Exposed for direct testing; [[start]] runs it on each batch
+    * through [[StateFold.start]]. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    indexDir: String, countsPath: String): Unit = {
     val trainGramsPath = s"$indexDir/train_grams.parquet"
     val evalGramsPath = s"$indexDir/eval_grams.parquet"
-    def stored(path: String, like: DataFrame): DataFrame =
-      if (Pipeline.pathExists(spark, path)) spark.read.parquet(path)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
 
     // in-batch doc_id conflicts resolve to the lexicographically
     // greatest text (CurationStream's total-order rule), so replays
@@ -90,10 +87,10 @@ object DecontamStream {
       val batchIds = docsB.select(col("doc_id"))
       // new-wins: a re-delivered train doc's OLD gram rows neither score
       // nor survive (replaced below); unchanged replays are unaffected
-      val histTrain = stored(trainGramsPath, newTrainG)
+      val histTrain = StateFold.stored(spark, trainGramsPath, newTrainG)
         .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
       val allTrain = histTrain.unionByName(newTrainG)
-      val storedEval = stored(evalGramsPath, newEvalG)
+      val storedEval = StateFold.stored(spark, evalGramsPath, newEvalG)
       val allEval = storedEval.unionByName(newEvalG).distinct()
 
       // only grams the eval store did NOT already hold can change a
@@ -129,11 +126,7 @@ object DecontamStream {
   /** Wire a (doc_id, text) stream into the incremental index. */
   def start(docsStream: DataFrame, indexDir: String, countsPath: String,
             checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), indexDir, countsPath)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, indexDir, countsPath)
+    }
 }

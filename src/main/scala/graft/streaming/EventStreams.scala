@@ -101,7 +101,7 @@ object EventStreams {
     *
     * Exactly-once = at-least-once delivery (checkpointed offsets +
     * aggregation state; a killed query resumes from the checkpoint) x an
-    * IDEMPOTENT merge: `foreachBatch` may replay a batch after a crash,
+    * IDEMPOTENT merge: a micro-batch may be replayed after a crash,
     * and in update mode each trigger emits refreshed totals for touched
     * keys — both are absorbed because the merge is a keyed upsert
     * (anti-join out the old rows for the batch's keys, union the new),
@@ -113,27 +113,20 @@ object EventStreams {
     */
   def mergeSink(agg: DataFrame, tablePath: String, checkpointDir: String,
                 keys: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        mergeBatch(batch.sparkSession, batch, tablePath, keys)
-      }
-      .start()
+    StateFold.start(agg, checkpointDir, "update") { (b, _) =>
+      mergeBatch(b.sparkSession, b, tablePath, keys)
+    }
 
   /** One idempotent upsert of `batch` into the parquet table at `path`:
     * rows whose `keys` appear in the batch are replaced, everything else
-    * is kept. Exposed for direct testing (replay = no-op). */
+    * is kept (an idempotent [[StateFold]]). Exposed for direct testing
+    * (replay = no-op). */
   def mergeBatch(spark: SparkSession, batch: DataFrame, path: String,
                  keys: Seq[String]): Unit = {
     val fresh = batch.dropDuplicates(keys)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, path))
-        spark.read.parquet(path)
-          .join(broadcast(fresh.select(keys.map(col): _*)), keys, "left_anti")
-          .unionByName(fresh)
-      else fresh
-    graft.pipeline.Pipeline.swapWrite(spark, merged, path)
+    StateFold.fold(spark, path, "EventStreams")(_.fold(fresh)(
+      _.join(broadcast(fresh.select(keys.map(col): _*)), keys, "left_anti")
+        .unionByName(fresh)))
   }
 
   /** Gap-based session windows with a lateness watermark. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming heavy-hitter candidate maintenance — the Misra-Gries
@@ -55,35 +55,25 @@ object HeavyHittersStream {
   }
 
   /** Fold one micro-batch of (doc_id, text, ...) rows into the state at
-    * `statePath`. Replays (batchId <= recorded high-water) are no-ops.
-    * Exposed for direct testing; [[start]] wires it to foreachBatch. */
+    * `statePath` (an additive [[StateFold]] stamped with k, high-water
+    * column `hi`: a replayed batch is a no-op). Exposed for direct
+    * testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    statePath: String, k: Int = DefaultK): Unit = {
     import spark.implicits._
     val bt = batch
       .select(explode(graft.operators.TextOps.tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-    val batchTokens = bt.agg(coalesce(sum(col("cnt")), lit(0L))).first().getLong(0)
-    val (merged, nTotal) =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val (sk, hi, n) = {
-          val r = st.select(col("k"), col("hi"), col("n_total")).first()
-          (r.getInt(0), r.getLong(1), r.getLong(2))
-        }
-        require(sk == k,
-          s"HeavyHittersStream state at $statePath was built with k=$sk, not k=$k")
-        if (batchId <= hi) return // replay: counts are additive, skip
-        (mgMerge(candidates(st), bt, k), n + batchTokens)
-      } else (mgMerge(spark.emptyDataset[(String, Long)].toDF("term", "cnt"), bt, k),
-        batchTokens)
-    // sentinel row (term NULL) carries k/hi/n_total even when the
-    // summary itself is empty (possible: a merge can cancel everything)
-    graft.pipeline.Pipeline.swapWrite(spark,
-      merged.unionByName(Seq((null: String, 0L)).toDF("term", "cnt"))
-        .withColumn("k", lit(k)).withColumn("hi", lit(batchId))
-        .withColumn("n_total", lit(nTotal)),
-      statePath)
+    StateFold.fold(spark, statePath, "HeavyHittersStream", Seq("k" -> k),
+        Some("hi" -> batchId)) { st =>
+      val batchTokens = bt.agg(coalesce(sum(col("cnt")), lit(0L))).first().getLong(0)
+      val n = st.fold(0L)(_.select(col("n_total")).first().getLong(0))
+      val prior = st.fold(spark.emptyDataset[(String, Long)].toDF("term", "cnt"))(candidates)
+      // sentinel row (term NULL) carries k/hi/n_total even when the
+      // summary itself is empty (possible: a merge can cancel everything)
+      mgMerge(prior, bt, k).unionByName(Seq((null: String, 0L)).toDF("term", "cnt"))
+        .withColumn("n_total", lit(n + batchTokens))
+    }
   }
 
   /** Real summary rows of a persisted state (sentinel filtered out). */
@@ -104,11 +94,7 @@ object HeavyHittersStream {
   /** Wire a (doc_id, text) stream into the summary state. */
   def start(docsStream: DataFrame, statePath: String, checkpointDir: String,
             k: Int = DefaultK): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processBatch(b.sparkSession, b.toDF(), id, statePath, k)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, id) =>
+      processBatch(b.sparkSession, b, id, statePath, k)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Hll, TextOps}
@@ -26,18 +26,14 @@ import graft.operators.{Hll, TextOps}
 object HllStream {
 
   /** Fold one micro-batch of (source, text, ...) document rows into
-    * the register state at `statePath`. Exposed for direct testing;
-    * [[start]] wires it to foreachBatch. */
+    * the register state at `statePath` (an idempotent [[StateFold]]).
+    * Exposed for direct testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    statePath: String): Unit = {
     val g = batch.select(col("source"),
       explode(TextOps.gramHashes(TextOps.tokens(col("text")), 5)).as("hv"))
     val b = Hll.registers(g, "source", "hv")
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath))
-        Hll.merge(spark.read.parquet(statePath), b, "source")
-      else b
-    graft.pipeline.Pipeline.swapWrite(spark, merged, statePath)
+    StateFold.fold(spark, statePath, "HllStream")(_.fold(b)(Hll.merge(_, b, "source")))
   }
 
   /** Per-source estimates from the persisted register state — same
@@ -49,11 +45,7 @@ object HllStream {
     * state. */
   def start(docsStream: DataFrame, statePath: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), statePath)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, statePath)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.VectorOps
@@ -50,11 +50,12 @@ object IvfStream {
           col("cells"), col("cqs"), col("cn2s")).cast("int").as("cell"))
   }
 
-  /** Fold one micro-batch into the assignment state at `statePath`.
-    * Re-delivered vec_ids overwrite with the same value (assignment is
-    * deterministic), so at-least-once delivery needs no ledger; a
-    * CHANGED embedding under a reused vec_id resolves to the newest
-    * batch's assignment via the deterministic keep-one. */
+  /** Fold one micro-batch into the assignment state at `statePath` (an
+    * idempotent [[StateFold]]). Re-delivered vec_ids overwrite with the
+    * same value (assignment is deterministic), so at-least-once
+    * delivery needs no ledger; a CHANGED embedding under a reused
+    * vec_id resolves to the newest batch's assignment via the
+    * deterministic keep-one. */
   def processBatch(spark: SparkSession, batch: DataFrame, centroidPath: String,
                    statePath: String): Unit = {
     val cents = spark.read.parquet(centroidPath)
@@ -64,17 +65,12 @@ object IvfStream {
     // "newest" signal; order-sensitive upserts need a sequence column)
     val assigned = assignBatch(batch, cents)
       .groupBy(col("vec_id")).agg(min(col("cell")).as("cell"))
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        // newest assignment wins per vec_id; ties (replays) are
-        // identical rows, so min_by on (priority) is a pure dedup
-        val st = spark.read.parquet(statePath).withColumn("__pri", lit(1))
-        val nw = assigned.withColumn("__pri", lit(0))
-        nw.unionByName(st)
-          .groupBy(col("vec_id"))
-          .agg(min_by(col("cell"), col("__pri")).as("cell"))
-      } else assigned
-    graft.pipeline.Pipeline.swapWrite(spark, merged, statePath)
+    // newest assignment wins per vec_id; ties (replays) are identical
+    // rows, so min_by on (priority) is a pure dedup
+    StateFold.fold(spark, statePath, "IvfStream")(_.fold(assigned)(st =>
+      assigned.withColumn("__pri", lit(0)).unionByName(st.withColumn("__pri", lit(1)))
+        .groupBy(col("vec_id"))
+        .agg(min_by(col("cell"), col("__pri")).as("cell"))))
   }
 
   /** Per-cell occupancy of the maintained index — the fragmentation /
@@ -87,11 +83,7 @@ object IvfStream {
   /** Wire a (vec_id, embedding) stream into the assignment state. */
   def start(vecStream: DataFrame, centroidPath: String, statePath: String,
             checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), centroidPath, statePath)
-      }
-      .start()
+    StateFold.start(vecStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, centroidPath, statePath)
+    }
 }

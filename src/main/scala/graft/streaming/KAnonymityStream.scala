@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Continuous k-anonymity / l-diversity monitoring — q187's release
@@ -82,29 +82,21 @@ object KAnonymityStream {
   }
 
   /** Fold one micro-batch of (nationkey, band, segment) rows into the
-    * class state at `statePath`. Replays (batchId <= recorded
-    * high-water) are no-ops. Exposed for direct testing; [[start]]
-    * wires it to foreachBatch. */
+    * class state at `statePath` (an additive [[StateFold]], high-water
+    * column `hi`: a replayed batch is a no-op). Exposed for direct
+    * testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    statePath: String): Unit = {
     import spark.implicits._
     val b = batchDigest(batch)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val hi = st.select(col("hi")).first().getLong(0)
-        if (batchId <= hi) return // replay: counts are additive, skip
-        mergeDigests(classes(st), b)
-      } else b
-    // sentinel class (nationkey = -1) carries the high-water even for
-    // an empty batch — losing it would re-enable double counting
-    graft.pipeline.Pipeline.swapWrite(spark,
-      merged.unionByName(
+    StateFold.fold(spark, statePath, "KAnonymityStream", hi = Some("hi" -> batchId)) { st =>
+      // sentinel class (nationkey = -1) carries the high-water even for
+      // an empty batch — losing it would re-enable double counting
+      st.fold(b)(s => mergeDigests(classes(s), b)).unionByName(
         Seq((-1, -1L, 0L)).toDF("nationkey", "band", "k_size")
           .withColumn("segs", emptySegs)
           .withColumn("saturated", lit(false)))
-        .withColumn("hi", lit(batchId)),
-      statePath)
+    }
   }
 
   /** Real class rows of a persisted state (metadata sentinel dropped). */
@@ -126,11 +118,7 @@ object KAnonymityStream {
   /** Wire a (nationkey, band, segment) stream into the class state. */
   def start(rowsStream: DataFrame, statePath: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rowsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processBatch(b.sparkSession, b.toDF(), id, statePath)
-      }
-      .start()
+    StateFold.start(rowsStream, checkpointDir) { (b, id) =>
+      processBatch(b.sparkSession, b, id, statePath)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.NearDupIndex
 
@@ -37,7 +37,8 @@ object NearDupIndexStream {
 
   /** Fold one micro-batch of (doc_id, text) rows into persisted index
     * `name` under `dir` as segment `batchId`. Exposed for direct
-    * testing (replay = no-op); [[start]] wires it to foreachBatch. */
+    * testing (replay = no-op); [[start]] runs it on each batch through
+    * [[StateFold.start]]. */
   def processBatch(batch: DataFrame, name: String, dir: String,
                    meta: NearDupIndex.Meta, batchId: Long): Unit =
     NearDupIndex.writeDelta(batch.sparkSession,
@@ -47,16 +48,12 @@ object NearDupIndexStream {
   def start(docsStream: DataFrame, name: String, dir: String,
             meta: NearDupIndex.Meta, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processBatch(b.toDF(), name, dir, meta, id)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, id) =>
+      processBatch(b, name, dir, meta, id)
+    }
 
   /** The INGEST-ADMISSION sink (VERDICT r12 #5): q214's probe-then-
-    * append composition inside one foreachBatch — each micro-batch is
+    * append composition inside one micro-batch fold — each batch is
     * admission-judged against everything indexed BEFORE it
     * ([[NearDupIndex.admission]]: 'new'/'dup' + best match per
     * document; an empty index admits the first batch wholesale), the
@@ -100,11 +97,7 @@ object NearDupIndexStream {
                      meta: NearDupIndex.Meta, verdictsDir: String,
                      checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processAdmissionBatch(b.toDF(), name, dir, meta, verdictsDir, id)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, id) =>
+      processAdmissionBatch(b, name, dir, meta, verdictsDir, id)
+    }
 }

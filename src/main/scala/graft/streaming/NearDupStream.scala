@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
@@ -21,7 +21,7 @@ import graft.pipeline.Pipeline
   *
   * Exactly-once: each persisted store is advanced with
   * [[EventStreams.mergeBatch]]'s keyed idempotent upsert, so a replayed
-  * micro-batch (foreachBatch's at-least-once contract after a crash)
+  * micro-batch (the at-least-once micro-batch contract after a crash)
   * re-derives the same candidate pairs and re-upserts the same rows —
   * a no-op. Crash BETWEEN the three merges is safe: pairs are upserted
   * before the index admits the batch's bands, so the retry re-finds
@@ -99,15 +99,12 @@ object NearDupStream {
 
   /** Process one micro-batch of (doc_id, text) rows against the index at
     * `indexDir`, upserting verified pairs into `pairsPath`. Exposed for
-    * direct testing (replay = no-op); [[start]] wires it to foreachBatch. */
+    * direct testing (replay = no-op); [[start]] runs it on each batch
+    * through [[StateFold.start]]. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    indexDir: String, pairsPath: String): Unit = {
     val bandsPath = s"$indexDir/bands.parquet"
     val setsPath = s"$indexDir/shingles.parquet"
-    def stored(path: String, like: DataFrame): DataFrame =
-      if (Pipeline.pathExists(spark, path)) spark.read.parquet(path)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
 
     val docsB = batch.select(col("doc_id"), col("text")).dropDuplicates("doc_id")
     // The batch's signatures are consumed by FOUR subtrees (both sides
@@ -123,7 +120,8 @@ object NearDupStream {
       // old rows == new rows, so exclusion changes nothing).
       val batchIds = docsB.select(col("doc_id"))
       def history(path: String, like: DataFrame): DataFrame =
-        stored(path, like).join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+        StateFold.stored(spark, path, like)
+          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
 
       // Candidates: batch bands vs (history + batch) bands.
       // least/greatest normalizes order so batch-internal pairs and a
@@ -147,7 +145,7 @@ object NearDupStream {
       // touches none. Pairs are still written BEFORE the index merges:
       // a crash in between re-finds the batch's pairs on replay.
       val newPairs = verify(cand, allSets).dropDuplicates(Seq("a_id", "b_id"))
-      val keptPairs = stored(pairsPath, newPairs)
+      val keptPairs = StateFold.stored(spark, pairsPath, newPairs)
         .join(broadcast(batchIds), col("a_id") === col("doc_id"), "left_anti")
         .join(broadcast(batchIds), col("b_id") === col("doc_id"), "left_anti")
       Pipeline.swapWrite(spark, keptPairs.unionByName(newPairs), pairsPath)
@@ -162,11 +160,7 @@ object NearDupStream {
   /** Wire a (doc_id, text) stream into the incremental index. */
   def start(docsStream: DataFrame, indexDir: String, pairsPath: String,
             checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), indexDir, pairsPath)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, indexDir, pairsPath)
+    }
 }

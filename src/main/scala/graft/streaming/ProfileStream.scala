@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Profile
@@ -14,13 +14,14 @@ import graft.operators.Profile
   * delivered, for any micro-batching (ProfileStreamSpec).
   *
   * Exactly-once for the COUNTS (which, unlike the KMV union, are not
-  * replay-absorbing — re-adding a batch double-counts) comes from the
-  * standard foreachBatch idempotence recipe: the state table stores
-  * the last applied `batchId`, and a replayed micro-batch (the
-  * at-least-once crash contract, which re-delivers the SAME batch
-  * content under the same id) is skipped as a no-op. Structured
-  * Streaming guarantees batch-content determinism per id for
-  * replayable sources, which is exactly the precondition this needs.
+  * replay-absorbing — re-adding a batch double-counts) comes from
+  * [[StateFold]]'s additive replay rule: the state table stores the
+  * last applied `batchId` in column `batch_id`, and a replayed
+  * micro-batch (the at-least-once crash contract, which re-delivers
+  * the SAME batch content under the same id) is skipped as a no-op.
+  * Structured Streaming guarantees batch-content determinism per id
+  * for replayable sources, which is exactly the precondition this
+  * needs.
   *
   * Scale posture: state is one row per COLUMN (k longs + 4 scalars) —
   * constant in the corpus; per batch the work is Profile's one
@@ -66,27 +67,17 @@ object ProfileStream {
         greatest(col("mx_a"), col("mx_b")).as("max_num"))
   }
 
-  /** Apply one micro-batch to `statePath`. A batchId at or below the
-    * recorded high-water mark is a crash replay — skipped entirely, so
-    * the additive counts stay exact. Exposed for direct testing. */
+  /** Apply one micro-batch to `statePath` (an additive [[StateFold]]
+    * stamped with k, high-water column `batch_id`). A batchId at or
+    * below the recorded high-water mark is a crash replay — skipped
+    * entirely, so the additive counts stay exact. Exposed for direct
+    * testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    statePath: String, k: Int = Profile.DefaultK): Unit = {
     if (batch.isEmpty) return // an empty batch would seed NULL sums into state
-    val exists = graft.pipeline.Pipeline.pathExists(spark, statePath)
-    if (exists) {
-      val head = spark.read.parquet(statePath)
-        .agg(max(col("batch_id")), max(col("k"))).first()
-      if (batchId <= head.getLong(0)) return
-      require(head.getInt(1) == k,
-        s"ProfileStream state at $statePath was built with k=${head.getInt(1)}, not k=$k")
-    }
     val b = Profile.sketchProfile(batch, k)
-    val merged =
-      if (exists)
-        mergeProfiles(upgraded(spark.read.parquet(statePath)).drop("batch_id", "k"), b, k)
-      else b
-    graft.pipeline.Pipeline.swapWrite(spark,
-      merged.withColumn("batch_id", lit(batchId)).withColumn("k", lit(k)), statePath)
+    StateFold.fold(spark, statePath, "ProfileStream", Seq("k" -> k),
+        Some("batch_id" -> batchId))(_.fold(b)(s => mergeProfiles(upgraded(s), b, k)))
   }
 
   /** Reader-facing view of the state: the estimate-derived profile,
@@ -112,11 +103,7 @@ object ProfileStream {
   /** Wire a row stream into the profile state table. */
   def start(rows: DataFrame, statePath: String, checkpointDir: String,
             k: Int = Profile.DefaultK): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processBatch(b.sparkSession, b.toDF(), id, statePath, k)
-      }
-      .start()
+    StateFold.start(rows, checkpointDir) { (b, id) =>
+      processBatch(b.sparkSession, b, id, statePath, k)
+    }
 }

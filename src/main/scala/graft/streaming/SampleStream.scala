@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Kmv, Sampling}
@@ -60,32 +60,21 @@ object SampleStream {
       .orderBy(col("source"), col("priority").desc_nulls_last, col("doc_id"))
   }
 
-  /** Process one micro-batch of (doc_id, source, n_chars, ...) rows.
-    * The state records k; a mismatched caller fails loudly rather than
-    * trimming a wider sample. Exposed for direct testing; [[start]]
-    * wires it to foreachBatch. */
+  /** Process one micro-batch of (doc_id, source, n_chars, ...) rows (an
+    * idempotent [[StateFold]] stamped with k: a mismatched caller fails
+    * loudly rather than trimming a wider sample). Exposed for direct
+    * testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, statePath: String,
                    k: Int = DefaultK): Unit = {
     val b = batchSample(batch, k)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val storedK = st.select(col("k")).first().getInt(0)
-        require(storedK == k,
-          s"SampleStream state at $statePath was built with k=$storedK, not k=$k")
-        mergeSamples(st.drop("k"), b, k)
-      } else b
-    graft.pipeline.Pipeline.swapWrite(spark, merged.withColumn("k", lit(k)), statePath)
+    StateFold.fold(spark, statePath, "SampleStream", Seq("k" -> k))(
+      _.fold(b)(mergeSamples(_, b, k)))
   }
 
   /** Wire a (doc_id, source, n_chars) stream into the sample state. */
   def start(docsStream: DataFrame, statePath: String, checkpointDir: String,
             k: Int = DefaultK): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), statePath, k)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, statePath, k)
+    }
 }

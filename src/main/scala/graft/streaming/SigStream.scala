@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SigIndex, VectorOps}
@@ -57,11 +57,7 @@ object SigStream {
   def start(vecStream: DataFrame, name: String, dir: String,
             meta: SigIndex.Meta, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        processBatch(b.toDF(), name, dir, meta, id)
-      }
-      .start()
+    StateFold.start(vecStream, checkpointDir) { (b, id) =>
+      processBatch(b, name, dir, meta, id)
+    }
 }

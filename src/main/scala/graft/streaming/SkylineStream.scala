@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Skyline
@@ -24,8 +24,8 @@ import graft.operators.Skyline
 object SkylineStream {
 
   /** Fold one micro-batch of (cost, gain) rows into the frontier state
-    * at `statePath`. Exposed for direct testing; [[start]] wires it to
-    * foreachBatch. */
+    * at `statePath` (an idempotent [[StateFold]]). Exposed for direct
+    * testing; [[start]] runs it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    statePath: String, bucketWidth: Long = 64L): Unit = {
     import spark.implicits._
@@ -35,14 +35,10 @@ object SkylineStream {
       .select(col("cost").cast("long"), col("gain").cast("long"))
       .distinct() // exact-tie duplicates collapse: frontier state is a SET
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val prev =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath))
-        spark.read.parquet(statePath)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      else Seq.empty
-    val merged = Skyline.mergeFrontier(prev, batchFrontier)
-    graft.pipeline.Pipeline.swapWrite(spark,
-      merged.toDF("cost", "gain"), statePath)
+    StateFold.fold(spark, statePath, "SkylineStream") { st =>
+      val prev = st.toSeq.flatMap(_.collect().map(r => (r.getLong(0), r.getLong(1))))
+      Skyline.mergeFrontier(prev, batchFrontier).toDF("cost", "gain")
+    }
   }
 
   /** Current frontier, ordered by cost (gain is strictly decreasing as
@@ -53,11 +49,7 @@ object SkylineStream {
   /** Wire a (cost, gain) stream into the frontier state. */
   def start(points: DataFrame, statePath: String, checkpointDir: String,
             bucketWidth: Long = 64L): org.apache.spark.sql.streaming.StreamingQuery =
-    points.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), statePath, bucketWidth)
-      }
-      .start()
+    StateFold.start(points, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, statePath, bucketWidth)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming vocabulary tracking — the KMV distinct sketch (q58,
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * the one-shot q58 aggregate over the same documents (proved in
   * VocabStreamSpec). The same property makes replays absorbing:
   * re-delivering a batch unions values already in the sketch — a no-op
-  * — so foreachBatch's at-least-once contract needs no dedup ledger.
+  * — so the at-least-once micro-batch contract needs no dedup ledger.
   *
   * Monotone contract (stated, not hidden): a KMV sketch tracks the
   * distinct-token set of everything EVER seen. Re-delivering a CHANGED
@@ -63,38 +63,30 @@ object VocabStream {
 
   /** Estimates from a persisted state table, using the k RECORDED in
     * the state — a reader with a mismatched default k would otherwise
-    * silently report a saturated sketch as an exact count. */
+    * silently report a saturated sketch as an exact count. A state with
+    * no rows records no k and has no estimates. */
   def currentEstimates(spark: SparkSession, statePath: String): DataFrame = {
     val st = spark.read.parquet(statePath)
-    withEstimate(st.drop("k"), st.select(col("k")).first().getInt(0))
+    withEstimate(st.drop("k"),
+      StateFold.stamp(st, Seq("k")).fold(DefaultK)(_.getInt(0)))
   }
 
   /** Process one micro-batch of (doc_id, text, source) rows, folding its
-    * sketch into `statePath`. The state records k and a mismatched
-    * caller fails loudly rather than merging incompatible sketches.
-    * Exposed for direct testing; [[start]] wires it to foreachBatch. */
+    * sketch into `statePath` (an idempotent [[StateFold]] stamped with
+    * k: a mismatched caller fails loudly rather than merging
+    * incompatible sketches). Exposed for direct testing; [[start]] runs
+    * it on each batch. */
   def processBatch(spark: SparkSession, batch: DataFrame, statePath: String,
                    k: Int = DefaultK): Unit = {
     val b = batchSketch(batch, k)
-    val merged =
-      if (graft.pipeline.Pipeline.pathExists(spark, statePath)) {
-        val st = spark.read.parquet(statePath)
-        val storedK = st.select(col("k")).first().getInt(0)
-        require(storedK == k,
-          s"VocabStream state at $statePath was built with k=$storedK, not k=$k")
-        mergeSketches(st.drop("k"), b, k)
-      } else b
-    graft.pipeline.Pipeline.swapWrite(spark, merged.withColumn("k", lit(k)), statePath)
+    StateFold.fold(spark, statePath, "VocabStream", Seq("k" -> k))(
+      _.fold(b)(mergeSketches(_, b, k)))
   }
 
   /** Wire a (doc_id, text, source) stream into the sketch state table. */
   def start(docsStream: DataFrame, statePath: String, checkpointDir: String,
             k: Int = DefaultK): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(b.sparkSession, b.toDF(), statePath, k)
-      }
-      .start()
+    StateFold.start(docsStream, checkpointDir) { (b, _) =>
+      processBatch(b.sparkSession, b, statePath, k)
+    }
 }

@@ -94,4 +94,41 @@ class CmsStreamSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("w=256"))
   }
+
+  /** Replays batch 1 after a crash inside its publish of `state`: the
+    * new state is staged at the swap's tmp sibling (`withSuccess` says
+    * whether the staged write completed) and the live state sits in the
+    * graveyard. The counters must equal one application of each batch. */
+  private def replayAfterCrashedPublish(withSuccess: Boolean): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft-cms-crash").toString
+    val (state, done) = (s"$root/state", s"$root/done")
+    val (b0, b1) = (df(corpus.take(20)), df(corpus.slice(20, 40)))
+    CmsStream.processBatch(spark, b0, 0L, state, D, W)
+    // the state batch 1's publish was about to swap in
+    CmsStream.processBatch(spark, b0, 0L, done, D, W)
+    CmsStream.processBatch(spark, b1, 1L, done, D, W)
+    graft.pipeline.TierCommit.stageDf(spark, spark.read.parquet(done), state)
+    val tmp = java.nio.file.Paths.get(s"$state.__swap_tmp")
+    if (!withSuccess) java.nio.file.Files.delete(tmp.resolve("_SUCCESS"))
+    java.nio.file.Files.move(java.nio.file.Paths.get(state),
+      java.nio.file.Paths.get(s"$state.__swap_old"))
+
+    CmsStream.processBatch(spark, b1, 1L, state, D, W) // the replay
+    val oneShot = Cms.build(
+      df(corpus.take(40)).select(explode(TextOps.tokens(col("text"))).as("term")),
+      "term", D, W)
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(counters(spark, state) == oneShot, "each batch must count exactly once")
+    assert(spark.read.parquet(state).select(max(col("hi"))).first().getLong(0) == 1L)
+    assert(!java.nio.file.Files.exists(tmp))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$state.__swap_old")))
+  }
+
+  test("crash after the graveyard move, staged state complete: heal promotes it, replay skipped") {
+    replayAfterCrashedPublish(withSuccess = true)
+  }
+
+  test("crash with the staged state incomplete: heal restores the old state, replay applies once") {
+    replayAfterCrashedPublish(withSuccess = false)
+  }
 }

@@ -124,4 +124,14 @@ class ProfileStreamSpec extends SparkSpec {
     // reader path works too
     assert(ProfileStream.currentProfile(spark, state).count() == 3L)
   }
+
+  test("a replayed batch under a drifted k raises before the replay rule skips it") {
+    val root = java.nio.file.Files.createTempDirectory("graft-profk-replay").toString
+    val state = s"$root/state"
+    ProfileStream.processBatch(spark, df(rows.take(10)), 0L, state, K)
+    val e = intercept[IllegalArgumentException] {
+      ProfileStream.processBatch(spark, df(rows.take(10)), 0L, state, k = 64)
+    }
+    assert(e.getMessage.contains("k=32"))
+  }
 }

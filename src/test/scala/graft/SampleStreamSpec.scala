@@ -90,4 +90,12 @@ class SampleStreamSpec extends SparkSpec {
     assert(twice.select(col("source"), col("topk")).collect().toSet ==
       state.select(col("source"), col("topk")).collect().toSet)
   }
+
+  test("a 0-row first batch, then a real one, equals the one-shot sample") {
+    val root = java.nio.file.Files.createTempDirectory("graft-samp-empty").toString
+    val state = s"$root/state"
+    SampleStream.processBatch(spark, df(Nil), state, K)
+    SampleStream.processBatch(spark, df(corpus), state, K)
+    assert(streamedSample(state) == batchWinners(corpus))
+  }
 }

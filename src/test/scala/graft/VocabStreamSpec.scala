@@ -99,4 +99,16 @@ class VocabStreamSpec extends SparkSpec {
       assert(math.abs(e - truth) / truth < 0.6, s"$src: est $e vs true $truth")
     }
   }
+
+  test("an all-null-text first batch, then a real one, equals the one-shot sketch") {
+    val root = java.nio.file.Files.createTempDirectory("graft-vocab-empty").toString
+    val state = s"$root/state"
+    val nullDocs = Seq((1L, Option.empty[String], "src0"))
+      .toDF("doc_id", "text", "source")
+    VocabStream.processBatch(spark, nullDocs, state, K)
+    assert(VocabStream.currentEstimates(spark, state).count() == 0L)
+    VocabStream.processBatch(spark, df(corpus), state, K)
+    assert(sketchMap(spark.read.parquet(state)) ==
+      sketchMap(VocabStream.batchSketch(df(corpus), K)))
+  }
 }

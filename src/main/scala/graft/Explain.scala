@@ -48,12 +48,24 @@ object Explain {
         val RunKey = "graft.profile.run"
         val jobs = collection.mutable.ArrayBuffer.empty[(String, Int, Long, String)]
         val starts = collection.concurrent.TrieMap.empty[Int, (String, Long, String)]
+        // a job is named by the plan part that ran it: the final stage's
+        // operator scope (`WholeStageCodegen (n)`, `Exchange`) and the SQL
+        // execution it belongs to; the call site only when no plan node
+        // built the stage (schema inference, checkpoints)
+        def label(js: org.apache.spark.scheduler.SparkListenerJobStart): String = {
+          val last = js.stageInfos.maxByOption(_.stageId)
+          val exec = Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          last.flatMap(org.apache.spark.graftbridge.ScopeBridge.planScope) match {
+            case Some(scope) => exec.fold(scope)(e => s"exec $e: $scope")
+            case None => last.map(_.name).getOrElse("")
+          }
+        }
         val listener = new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
               js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
             Option(js.properties).flatMap(p => Option(p.getProperty(RunKey)))
-              .foreach { run => starts(js.jobId) = (run, js.time,
-                js.stageInfos.headOption.map(_.name).getOrElse("")) }
+              .foreach { run => starts(js.jobId) = (run, js.time, label(js)) }
           override def onJobEnd(
               je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
             starts.remove(je.jobId).foreach { case (run, t0, nm) =>

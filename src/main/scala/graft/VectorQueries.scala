@@ -380,15 +380,10 @@ object VectorQueries {
     // the standard posture for training loops (MLlib caches its input)
     val e = quantized(spark, dir).localCheckpoint()
     val n = Tables.embeddings(spark, dir).count()
-    val k = math.ceil(math.sqrt(n.toDouble)).toInt
-    val nprobe = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val cents = graft.operators.KMeans.fit(e, "vec_id", "q", k, iters = 2)
-      .withColumn("cn2", VectorOps.qnorm2(col("cq")))
-    val ca = VectorOps.centroidArrays(cents, "cell", "cq")
-    val cells = e.crossJoin(broadcast(ca))
-      .select(col("vec_id").as("vid"),
-        VectorOps.cellArgMax(col("q"), col("n2"),
-          col("cells"), col("cqs"), col("cn2s")).cast("int").as("cell"))
+    val (k, nprobe) = graft.operators.IvfLifecycle.geometry(n)
+    val cents = graft.operators.IvfLifecycle.trainCentroids(e, k)
+    val cells = graft.operators.IvfLifecycle
+      .assignCells(e, cents, col("vec_id").as("vid"))
       .localCheckpoint()
     (e, cents, cells, nprobe)
   }

@@ -135,30 +135,24 @@ object IndexCatalog {
       .flatMap { s =>
         val name = s.getPath.getName.stripSuffix("_meta.json")
         val meta = IndexMeta.read(spark, s.getPath.toString)
-        val tomb = s"$dir/${name}_tombstones"
-        if (meta.contains("m")) {
-          // IVF-PQ: codes table carries n·m sub-code rows
-          if (fs.exists(new Path(root, s"${name}_codes")))
-            row(name, "ivf_pq", geomString(meta), 1L,
-              Seq(s"$dir/${name}_codes", s"$dir/${name}_centroids",
-                s"$dir/${name}_codebooks", tomb), Some(tomb)) {
+        // IVF-PQ's codes table carries m sub-code rows per vector
+        val family: Option[(IvfLifecycle, String, Long)] =
+          if (meta.contains("m")) Some((IvfPqIndex, "ivf_pq", meta("m")))
+          else if (meta.contains("k")) Some((IvfIndex, "ivf", 1L))
+          else None
+        family
+          .filter { case (f, _, _) => fs.exists(new Path(f.payloadPath(name, dir))) }
+          .flatMap { case (f, kind, rowsPerItem) =>
+            val tomb = f.tombRoot(name, dir)
+            row(name, kind, geomString(meta), 1L, f.footprint(name, dir),
+              Some(tomb)) {
               // n_rows = physical; n_items = the probe's view (served
               // vectors: tombstoned ones excluded) — consistent across
               // all five deletable kinds
-              val r = rows(s"$dir/${name}_codes")
-              (r, r / meta("m") - Tombstones.count(spark, tomb))
+              val r = rows(f.payloadPath(name, dir))
+              (r, r / rowsPerItem - Tombstones.count(spark, tomb))
             }
-          else None
-        } else if (meta.contains("k")) {
-          if (fs.exists(new Path(root, s"${name}_cells")))
-            row(name, "ivf", geomString(meta), 1L,
-              Seq(s"$dir/${name}_cells", s"$dir/${name}_centroids", tomb),
-              Some(tomb)) {
-              val r = rows(s"$dir/${name}_cells")
-              (r, r - Tombstones.count(spark, tomb))
-            }
-          else None
-        } else None
+          }
       }
 
     val nested = entries

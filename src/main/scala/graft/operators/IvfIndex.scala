@@ -9,19 +9,14 @@ import org.apache.spark.sql.functions._
   * harness's honesty (the oracle replays training), but at 10^10
   * vectors a serving system trains offline and every probe is an
   * index read. This is the graph-mart discipline (Layout.writeBucketed,
-  * commit 0bad2ee) applied to ANN:
+  * commit 0bad2ee) applied to ANN. Layout, sidecar, deletion, append,
+  * in-place rebuild/vacuum and probe routing are the shared
+  * [[IvfLifecycle]]; this family's own parts are:
   *
-  *  - `<name>_centroids` — k rows (cell, cq, cn2), plain parquet: the
-  *    routing table, broadcast-sized by construction (k = ⌈√n⌉).
-  *  - `<name>_cells` — (cell, vid, q, n2) BUCKETED by cell: a probe
-  *    filters `cell IN (<probe list>)`, which Spark turns into static
-  *    bucket pruning (SelectedBucketsCount m/buckets in the scan) —
-  *    the 100 TB read cost is (probed cells / k) of the corpus, with
-  *    no shuffle and no training subtree anywhere in the probe plan
-  *    (IvfIndexSpec asserts both).
-  *  - `<name>_meta.json` — the geometry sidecar (k, nprobe, buckets):
-  *    probe/append read it, so opening the index needs only
-  *    (name, dir), even from a session that never ran the build.
+  *  - the trained table: `<name>_centroids` (k-means);
+  *  - the payload: `<name>_cells` = (cell, vid, q, n2), the raw
+  *    quantized vectors bucketed by cell;
+  *  - the scoring: exact cosine over the probed cells, bounded top-k.
   *
   * Training math is identical to the in-plan-trained twin (q40):
   * [[KMeans.fit]] k=⌈√n⌉ / 2 Lloyd iterations, map-only codegen'd
@@ -32,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Reference capability analog: serving queries are index READS, not
   * rebuilds (scripts/query_duckdb.py:12-25 reads loaded tables).
   */
-object IvfIndex {
+object IvfIndex extends IvfLifecycle {
 
   /** Index geometry, fixed at build time and needed again at probe
     * time. PERSISTED by [[build]] as `<dir>/<name>_meta.json` (VERDICT
@@ -40,268 +35,79 @@ object IvfIndex {
     * dir) alone; [[probe]]/[[append]] read it instead of taking it as
     * arguments. */
   final case class Meta(k: Int, nprobe: Int, buckets: Int)
+    extends IvfLifecycle.Geometry
 
-  def writeMeta(spark: SparkSession, name: String, dir: String,
-                meta: Meta): Unit =
-    IndexMeta.write(spark, s"$dir/${name}_meta.json", Map(
-      "k" -> meta.k.toLong, "nprobe" -> meta.nprobe.toLong,
-      "buckets" -> meta.buckets.toLong))
+  type M = Meta
 
-  def readMeta(spark: SparkSession, name: String, dir: String): Meta = {
-    val m = IndexMeta.read(spark, s"$dir/${name}_meta.json")
-    Meta(m("k").toInt, m("nprobe").toInt, m("buckets").toInt)
-  }
+  protected val payload = "cells"
+  protected val trained = Seq("centroids")
+  protected val carried = Seq(col("q"), col("n2"))
 
-  /** The training half shared by [[build]] and [[rebuildInPlace]]:
-    * k-means centroids (+ norms) and the map-only codegen'd cell
+  protected def extraFields(meta: Meta): Map[String, Long] = Map.empty
+
+  protected def withGeometry(k: Int, nprobe: Int, buckets: Int,
+                             fields: Map[String, Long]): Meta =
+    Meta(k, nprobe, buckets)
+
+  /** The appended `q` must be as long as the centroids' `cq`. */
+  protected def dimension(meta: Meta) = size(element_at(col("cqs"), 1))
+
+  /** k-means centroids (+ norms) and the map-only codegen'd cell
     * assignment of the corpus — no corpus shuffle on the write path
     * beyond the bucketed write's own exchange. */
-  private def train(vectors: DataFrame): (DataFrame, DataFrame, Int, Int) = {
-    val n = vectors.count()
-    val k = math.ceil(math.sqrt(n.toDouble)).toInt
-    val nprobe = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val cents = KMeans.fit(vectors, "vec_id", "q", k, iters = 2)
-      .withColumn("cn2", VectorOps.qnorm2(col("cq")))
-    val ca = VectorOps.centroidArrays(cents, "cell", "cq")
-    val assigned = vectors.crossJoin(broadcast(ca))
-      .select(col("vec_id").as("vid"),
-        VectorOps.cellArgMax(col("q"), col("n2"),
-          col("cells"), col("cqs"), col("cn2s")).cast("int").as("cell"),
-        col("q"), col("n2"))
-    (cents, assigned, k, nprobe)
+  protected def trainInto(vectors: DataFrame, meta: Meta,
+                          at: String => String): DataFrame = {
+    val cents = IvfLifecycle.trainCentroids(vectors, meta.k)
+    cents.write.mode("overwrite").parquet(at("centroids"))
+    IvfLifecycle.assignCells(vectors, cents, col("vec_id").as("vid"), carried)
   }
 
   /** Train on `vectors` = (vec_id, q ARRAY<BIGINT>, n2) and persist the
     * index under `dir` as catalog tables `<name>_centroids` /
     * `<name>_cells`. Returns the geometry. */
   def build(spark: SparkSession, vectors: DataFrame, name: String,
-            dir: String, buckets: Int = 8): Meta = {
-    Tombstones.clear(spark, tombRoot(name, dir)) // fresh corpus
-    val (cents, assigned, k, nprobe) = train(vectors)
-    cents.write.mode("overwrite").parquet(s"$dir/${name}_centroids")
-    Layout.writeBucketed(assigned, s"${name}_cells", "cell", buckets,
-      s"$dir/${name}_cells")
-    val meta = Meta(k, nprobe, buckets)
-    writeMeta(spark, name, dir, meta)
-    meta
-  }
+            dir: String, buckets: Int = 8): Meta =
+    buildWith(spark, vectors, name, dir)(Meta(_, _, buckets))
 
   /** Atomically REPLACE live index `name` with a full RETRAIN on
     * `vectors` — the rebuild [[append]]'s frozen-centroid contract
-    * defers to (the recall-vs-freshness trade): centroids, cells, and
-    * the meta sidecar are staged at their tier-commit swap paths and
-    * promoted through ONE manifest, so a probe never observes mixed
-    * geometry (new centroids routing into old cells, or a meta whose
-    * k disagrees with the centroid table). Crash anywhere → all-old
-    * or (after [[graft.pipeline.TierCommit.heal]]) all-new; readers
-    * entering from outside the writing process call
-    * `TierCommit.heal(spark, dir)` first, like every tier. */
+    * defers to (the recall-vs-freshness trade): centroids, cells, the
+    * meta sidecar and an empty ledger promote through ONE manifest, so
+    * a probe never observes mixed geometry (new centroids routing into
+    * old cells). Crash anywhere → all-old or (after
+    * [[graft.pipeline.TierCommit.heal]]) all-new; readers entering from
+    * outside the writing process call `TierCommit.heal(spark, dir)`
+    * first, like every tier. */
   def rebuildInPlace(spark: SparkSession, vectors: DataFrame, name: String,
                      dir: String, buckets: Int = 8): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      graft.pipeline.TierCommit.heal(spark, dir) // finish any prior commit
-      stageRebuildInPlace(spark, vectors, name, dir, buckets)
-      graft.pipeline.TierCommit.commit(spark, dir, rebuildTargets(name, dir))
-      // the catalog's bucket spec must describe the NEW layout (a
-      // rebuild may change the bucket count); external DROP keeps files
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_cells")
-      Layout.ensureBucketedTable(spark, s"${name}_cells", "cell", buckets,
-        s"$dir/${name}_cells")
-    }
+    rebuildInPlaceWith(spark, vectors, name, dir)(Meta(_, _, buckets))
 
-  private[graft] def rebuildTargets(name: String, dir: String): Seq[String] =
-    Seq(s"$dir/${name}_centroids", s"$dir/${name}_cells",
-      s"$dir/${name}_meta.json", tombRoot(name, dir))
-
-  private def tombRoot(name: String, dir: String): String =
-    s"$dir/${name}_tombstones"
-
-  /** Tombstone `ids` (VERDICT r12 #1): every subsequent [[probe]]
-    * behaves as if the vectors were never indexed — the q220 oracle
-    * identity is probe-after-delete == probe-minus-deleted under the
-    * index's FROZEN centroids (deletion, like [[append]], never
-    * retrains: routing quality is the centroids' business, the
-    * recall-vs-freshness trade every ANN serving system makes).
-    * [[vacuumInPlace]] drops the rows physically and clears the
-    * ledger; a [[rebuildInPlace]] clears it too (new corpus snapshot).
-    * Rides the dir's writer lock like every batch mutation. */
-  def deleteVectors(spark: SparkSession, ids: Seq[Long], name: String,
-                    dir: String): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      readMeta(spark, name, dir) // the index must exist
-      // record only ids actually INDEXED (pushed point read): the
-      // ledger stays honest, the catalog's n_items stays exact
-      Tombstones.append(spark, tombRoot(name, dir),
-        spark.read.parquet(s"$dir/${name}_cells")
-          .filter(col("vid").isin(ids: _*)).select(col("vid")))
-    }
-
-  /** Physically drop tombstoned vectors from the bucketed cells table
-    * and CLEAR the deletion ledger — the compaction verb of this
-    * unsegmented family (segmented indexes drain tombstones in
-    * compactInPlace; here the cells rewrite is the analog). Centroids
-    * stay FROZEN — probe answers before and after vacuum are identical
-    * (IvfIndexSpec proves it). The rewritten cells and the emptied
-    * ledger promote through ONE tier-commit manifest, so a probe never
-    * sees vacuumed cells with the old tombstones (double suppression
-    * is harmless but the inverse — old cells, no ledger — would
-    * resurrect deleted vectors mid-swap; the manifest forecloses it). */
-  def vacuumInPlace(spark: SparkSession, name: String, dir: String): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      graft.pipeline.TierCommit.heal(spark, dir)
-      val meta = readMeta(spark, name, dir)
-      stageVacuumInPlace(spark, name, dir, meta)
-      graft.pipeline.TierCommit.commit(spark, dir,
-        Seq(s"$dir/${name}_cells", tombRoot(name, dir)))
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_cells")
-      Layout.ensureBucketedTable(spark, s"${name}_cells", "cell",
-        meta.buckets, s"$dir/${name}_cells")
-    }
-
-  private[graft] def stageVacuumInPlace(spark: SparkSession, name: String,
-                                        dir: String, meta: Meta): Unit = {
-    import graft.pipeline.TierCommit.stagePath
-    Layout.ensureBucketedTable(spark, s"${name}_cells", "cell",
-      meta.buckets, s"$dir/${name}_cells")
-    val kept = Tombstones.antiJoin(spark, tombRoot(name, dir),
-      spark.table(s"${name}_cells"), "vid")
-    Layout.writeBucketed(kept, s"${name}_cells__vstage", "cell",
-      meta.buckets, stagePath(s"$dir/${name}_cells"))
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_cells__vstage")
-    // stage an EMPTY ledger: promotion atomically replaces the old one
-    val t = new org.apache.hadoop.fs.Path(stagePath(tombRoot(name, dir)))
-    t.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(t)
-  }
-
-  /** The staging half of [[rebuildInPlace]] — split out so the spec
-    * can stop the world at the crash point between stage and commit.
-    * The bucketed cells stage rides a throwaway `__stage` catalog
-    * entry (saveAsTable needs one) pointed at the swap path; the
-    * entry is dropped right after the write — the promoted table
-    * needs only the bucket-id file names, which the rename keeps. */
+  /** The staging half of [[rebuildInPlace]]. */
   private[graft] def stageRebuildInPlace(spark: SparkSession,
                                          vectors: DataFrame, name: String,
-                                         dir: String, buckets: Int): Unit = {
-    import graft.pipeline.TierCommit.stagePath
-    val (cents, assigned, k, nprobe) = train(vectors)
-    cents.write.mode("overwrite")
-      .parquet(stagePath(s"$dir/${name}_centroids"))
-    Layout.writeBucketed(assigned, s"${name}_cells__stage", "cell", buckets,
-      stagePath(s"$dir/${name}_cells"))
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_cells__stage")
-    IndexMeta.write(spark, stagePath(s"$dir/${name}_meta.json"), Map(
-      "k" -> k.toLong, "nprobe" -> nprobe.toLong,
-      "buckets" -> buckets.toLong))
-    // a rebuild is a NEW corpus snapshot — the old deletion ledger must
-    // not hide re-added ids: stage an empty one (promoted via the same
-    // manifest; a no-op when no deletion ever happened)
-    val t = new org.apache.hadoop.fs.Path(stagePath(tombRoot(name, dir)))
-    t.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(t)
-  }
+                                         dir: String, buckets: Int): Unit =
+    stageRebuildWith(spark, vectors, name, dir)(Meta(_, _, buckets))
 
-  /** Add `newVectors` = (vec_id, q, n2) to an EXISTING index without
-    * retraining: assign them to the FROZEN persisted centroids (the
-    * same map-only codegen'd argmax the build used — FAISS's
-    * add-after-train, and IvfStream's frozen-centroid discipline) and
-    * append to the bucketed cells table; new files land in their
-    * cell's bucket, so probe pruning holds over old + new alike.
-    * Probe answers afterwards are BIT-IDENTICAL to an index whose
-    * build had seen all vectors under these centroids
-    * (IvfIndexSpec proves it). Routing quality for the delta is the
-    * centroids' business — retraining is a rebuild, by design (the
-    * recall-vs-freshness trade every ANN serving system makes).
-    * Contract: vec_ids disjoint from already-indexed ones. Geometry is
-    * read from the persisted meta — (name, dir) identify the index.
-    *
-    * Rides the dir's writer lock like every batch mutation (the
-    * VERDICT r11 #2 principle extended): an append racing a
-    * rebuildInPlace would write into the live cells table that the
-    * rebuild's whole-dir swap is about to graveyard — the appended
-    * vectors would vanish silently. (Streaming maintenance is
-    * [[graft.streaming.IvfStream]]'s own swap-write state, not this
-    * path — it stays lock-free.) */
-  def append(spark: SparkSession, newVectors: DataFrame, name: String,
-             dir: String): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      appendUnlocked(spark, newVectors, name, dir)
-    }
-
-  private def appendUnlocked(spark: SparkSession, newVectors: DataFrame,
-                             name: String, dir: String): Unit = {
-    val meta = readMeta(spark, name, dir)
-    Layout.ensureBucketedTable(spark, s"${name}_cells", "cell",
-      meta.buckets, s"$dir/${name}_cells")
-    val cents = spark.read.parquet(s"$dir/${name}_centroids")
-    val ca = VectorOps.centroidArrays(cents, "cell", "cq")
-    val assigned = newVectors.crossJoin(broadcast(ca))
-      .select(col("vec_id").as("vid"),
-        VectorOps.cellArgMax(col("q"), col("n2"),
-          col("cells"), col("cqs"), col("cn2s")).cast("int").as("cell"),
-        col("q"), col("n2"))
-    Layout.appendBucketed(assigned, s"${name}_cells", "cell",
-      meta.buckets, s"$dir/${name}_cells")
-  }
-
-  /** Probe the persisted index: for each query vector (qid, qq, qn2),
-    * rank cells against the broadcast centroid table, then read ONLY
-    * the probed cells from the bucketed postings table and return the
-    * exact-rescored top-`topk` (qid, cid, cos_sim).
-    *
-    * The probe-cell list is COLLECTED (queries × nprobe ints — the
-    * serving-side routing decision a real ANN frontend computes per
-    * request) so the cells filter is a literal IN list: that is what
-    * makes the scan statically bucket-pruned instead of a join.
-    *
-    * Opening the index needs only (name, dir): geometry comes from the
-    * persisted meta, and the bucketed cells table is re-registered in
-    * this session's catalog when absent — a FRESH session probes the
-    * index with full bucket pruning (IvfIndexSpec proves it). */
+  /** Probe the persisted index: route each query vector (qid, qq, qn2)
+    * to its `nprobe` cells, read ONLY those cells from the bucketed
+    * table ([[IvfLifecycle.probeWith]]) and return the exact-rescored
+    * top-`topk` (qid, cid, cos_sim). */
   def probe(spark: SparkSession, name: String, dir: String,
-            queryVecs: DataFrame, topk: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val meta = readMeta(spark, name, dir)
-    val nprobe = meta.nprobe
-    Layout.ensureBucketedTable(spark, s"${name}_cells", "cell",
-      meta.buckets, s"$dir/${name}_cells")
-    val cents = spark.read.parquet(s"$dir/${name}_centroids")
-    val sim = queryVecs.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cell"),
-        VectorOps.cosine(VectorOps.qdot(col("qq"), col("cq")),
-          col("qn2"), col("cn2")).as("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc_nulls_last, col("cell").asc_nulls_first)
-    val probeRows = sim.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nprobe)
-      .select(col("qid"), col("cell"))
-      .collect() // bounded: queries × nprobe
-    val cellIds = probeRows.map(_.getInt(1)).distinct.toSeq
-    val pairs = spark.createDataFrame(
-      spark.sparkContext.parallelize(probeRows.toSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("qid",
-          probeRows.headOption.map(_.schema("qid").dataType)
-            .getOrElse(org.apache.spark.sql.types.LongType)),
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType))))
-    val cand = Tombstones.antiJoin(spark, tombRoot(name, dir),
-        spark.table(s"${name}_cells")
-          .filter(col("cell").isin(cellIds: _*)), // static bucket pruning
-        "vid")
-      .join(broadcast(pairs), Seq("cell"))
-      .filter(col("qid") =!= col("vid"))
-    // final top-k through the BOUNDED map-side-combining aggregate
-    // (VERDICT r9 #3) — a row_number window here partitions the whole
-    // probed-cell candidate set by qid (|queries| partitions); the
-    // aggregate shuffles queries x topk pairs instead. Rank order is
-    // the window's exactly: cos_sim DESC, cid ASC, never-null inputs.
-    cand
-      .join(broadcast(queryVecs), Seq("qid"))
-      .select(col("qid"), col("vid").as("cid"),
-        VectorOps.cosine(VectorOps.qdot(col("qq"), col("q")),
-          col("qn2"), col("n2")).as("cos_sim"))
-      .groupBy(col("qid"))
-      .agg(TopK.topKPairs(col("cos_sim"), col("cid"), topk).as("tk"))
-      .select(col("qid"), posexplode(col("tk")))
-      .select(col("qid"), col("col.id").as("cid"), col("col.v").as("cos_sim"))
-  }
+            queryVecs: DataFrame, topk: Int): DataFrame =
+    probeWith(spark, name, dir, queryVecs) { (_, cand) =>
+      // final top-k through the BOUNDED map-side-combining aggregate
+      // (VERDICT r9 #3) — a row_number window here partitions the whole
+      // probed-cell candidate set by qid (|queries| partitions); the
+      // aggregate shuffles queries x topk pairs instead. Rank order is
+      // the window's exactly: cos_sim DESC, cid ASC, never-null inputs.
+      cand
+        .join(broadcast(queryVecs), Seq("qid"))
+        .select(col("qid"), col("vid").as("cid"),
+          VectorOps.cosine(VectorOps.qdot(col("qq"), col("q")),
+            col("qn2"), col("n2")).as("cos_sim"))
+        .groupBy(col("qid"))
+        .agg(TopK.topKPairs(col("cos_sim"), col("cid"), topk).as("tk"))
+        .select(col("qid"), posexplode(col("tk")))
+        .select(col("qid"), col("col.id").as("cid"), col("col.v").as("cos_sim"))
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.VectorOps
+import graft.operators.{IvfLifecycle, VectorOps}
 
 /** Streaming IVF index maintenance — new vectors assigned to a TRAINED
   * centroid set as they ARRIVE, so the ANN index the batch queries
@@ -36,19 +36,12 @@ import graft.operators.VectorOps
 object IvfStream {
 
   /** Assign a batch of (vec_id, embedding ARRAY<DOUBLE>) rows to the
-    * trained cells: quantize, then ONE codegen'd argmax against the
-    * broadcast single-row centroid-arrays pack — identical math to the
-    * batch index's assignment pass. */
-  def assignBatch(batch: DataFrame, cents: DataFrame): DataFrame = {
-    val ca = VectorOps.centroidArrays(cents, "cell", "cq")
-    batch
+    * trained cells: quantize, then the batch index's own frozen-centroid
+    * assignment ([[IvfLifecycle.assignCells]]). */
+  def assignBatch(batch: DataFrame, cents: DataFrame): DataFrame =
+    IvfLifecycle.assignCells(batch
       .select(col("vec_id"), VectorOps.quantized(col("embedding")).as("q"))
-      .withColumn("n2", VectorOps.qnorm2(col("q")))
-      .crossJoin(broadcast(ca))
-      .select(col("vec_id"),
-        VectorOps.cellArgMax(col("q"), col("n2"),
-          col("cells"), col("cqs"), col("cn2s")).cast("int").as("cell"))
-  }
+      .withColumn("n2", VectorOps.qnorm2(col("q"))), cents, col("vec_id"))
 
   /** Fold one micro-batch into the assignment state at `statePath` (an
     * idempotent [[StateFold]]). Re-delivered vec_ids overwrite with the

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BpeIndex, BpeTrain, SigIndex, TextIndex, VectorOps}
+import graft.operators.{BpeIndex, BpeTrain, IvfIndex, IvfPqIndex, SigIndex,
+  TextIndex, Tombstones, VectorOps}
 import graft.pipeline.TierCommit
 
 /** Single-writer enforcement (VERDICT r10 #6): TierCommit always
@@ -194,5 +195,58 @@ class ConcurrentWriterSpec extends SparkSpec {
     SigIndex.rebuildInPlace(spark, vectors, "lock_crash", d)
     assert(SigIndex.probe(spark, "lock_crash", d, queries, 3)
       .orderBy(col("qid"), col("cid")).collect().toSeq == healed)
+  }
+
+  test("the IVF in-place committers raise under a held lock and proceed once it is released") {
+    val d = tmp()
+    val base = vectors.filter(col("vec_id") < 50)
+    val delta = vectors.filter(col("vec_id") >= 50)
+    val gone = Seq(1L, 2L)
+    IvfIndex.build(spark, base, "lock_ivf_ip", d)
+    IvfPqIndex.build(spark, base, "lock_ivfpq_ip", d,
+      m = 4, subDim = 16, ksub = 16, iters = 2)
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "IvfIndex.rebuildInPlace" -> (() =>
+        IvfIndex.rebuildInPlace(spark, base, "lock_ivf_ip", d)),
+      "IvfIndex.deleteVectors" -> (() =>
+        IvfIndex.deleteVectors(spark, gone, "lock_ivf_ip", d)),
+      "IvfIndex.vacuumInPlace" -> (() =>
+        IvfIndex.vacuumInPlace(spark, "lock_ivf_ip", d)),
+      "IvfPqIndex.rebuildInPlace" -> (() =>
+        IvfPqIndex.rebuildInPlace(spark, base, "lock_ivfpq_ip", d,
+          m = 4, subDim = 16, ksub = 16, iters = 2)),
+      "IvfPqIndex.deleteVectors" -> (() =>
+        IvfPqIndex.deleteVectors(spark, gone, "lock_ivfpq_ip", d)),
+      "IvfPqIndex.vacuumInPlace" -> (() =>
+        IvfPqIndex.vacuumInPlace(spark, "lock_ivfpq_ip", d)),
+      "IvfPqIndex.append" -> (() =>
+        IvfPqIndex.append(spark, delta, "lock_ivfpq_ip", d)))
+    try {
+      val rows0 = (spark.table("lock_ivf_ip_cells").count(),
+        spark.table("lock_ivfpq_ip_codes").count())
+      TierCommit.withWriteLock(spark, d) {
+        ops.foreach { case (what, op) =>
+          val e = intercept[Exception](op())
+          assert(e.getMessage.contains("writer lock"),
+            s"$what must raise the lock error, got: $e")
+        }
+      }
+      // every loser raised at entry: nothing changed on disk
+      assert((spark.table("lock_ivf_ip_cells").count(),
+        spark.table("lock_ivfpq_ip_codes").count()) == rows0)
+      assert(Tombstones.count(spark, s"$d/lock_ivf_ip_tombstones") == 0)
+      assert(Tombstones.count(spark, s"$d/lock_ivfpq_ip_tombstones") == 0)
+
+      // released: each proceeds, in order
+      ops.foreach(_._2())
+      assert(spark.table("lock_ivf_ip_cells").count() == base.count() - 2)
+      assert(spark.table("lock_ivfpq_ip_codes").count() ==
+        (vectors.count() - 2) * 4)
+      assert(Tombstones.count(spark, s"$d/lock_ivf_ip_tombstones") == 0)
+      assert(Tombstones.count(spark, s"$d/lock_ivfpq_ip_tombstones") == 0)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS lock_ivf_ip_cells")
+      spark.sql("DROP TABLE IF EXISTS lock_ivfpq_ip_codes")
+    }
   }
 }

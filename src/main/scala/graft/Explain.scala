@@ -77,14 +77,18 @@ object Explain {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm-up
           val run = s"$name#$i"
           spark.sparkContext.setLocalProperty(RunKey, run)
+          val compiled0 = org.apache.spark.graftbridge.ScopeBridge.codegenCompiles
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val wall = (System.nanoTime() - t0) / 1e9
+          // generated classes compiled in the timed run, by any thread of
+          // this JVM: 0 when every codegen body was a cache hit
+          val compiled = org.apache.spark.graftbridge.ScopeBridge.codegenCompiles - compiled0
           spark.sparkContext.setLocalProperty(RunKey, null)
           Thread.sleep(1000) // listener bus drain
           val timed = jobs.synchronized(jobs.filter(_._1 == run).toList)
           val tot = timed.map(_._3).sum
-          println(f"PROFILE $name wall=$wall%.2f s, ${timed.size} jobs, " +
+          println(f"PROFILE $name wall=$wall%.2f s, ${timed.size} jobs, $compiled classes compiled, " +
             f"sum(job)=${tot / 1000.0}%.2f s (gap=${wall - tot / 1000.0}%.2f s)")
           timed.sortBy(_._2).foreach { case (_, id, ms, nm) =>
             println(f"  job $id%4d ${ms}%6d ms  $nm") }

@@ -341,14 +341,19 @@ object IvfLifecycle {
     * first one's round barriers leave idle). BOTH are joined before any
     * failure is rethrown (ADVICE r13): rethrowing while the sibling
     * still runs would let the caller release the writer lock with an
-    * orphaned Spark job still writing the staged directory. */
+    * orphaned Spark job still writing the staged directory. Each chain
+    * runs under the caller's Spark local properties: the pooled threads
+    * were created by someone else, so without them a job group, a
+    * scheduler pool or a profiler's tag would not reach the jobs. */
   def both[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.util.Try
-    val fa = Future(Try(a))
-    val fb = Future(Try(b))
+    import org.apache.spark.graftbridge.ScopeBridge.{localProperties, withLocalProperties}
+    val props = localProperties()
+    val fa = Future(Try(withLocalProperties(props)(a)))
+    val fb = Future(Try(withLocalProperties(props)(b)))
     val ra = Await.result(fa, Duration.Inf)
     val rb = Await.result(fb, Duration.Inf)
     (ra.get, rb.get)

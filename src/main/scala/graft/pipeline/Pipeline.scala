@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.silver.Silver
 import graft.sources.{BcbSource, CsvDialect, IbgeSource, JsonFetcher}
@@ -96,13 +97,17 @@ object IncrementalState {
   /** Write via a sibling tmp file and an atomic rename: a crash mid-write
     * leaves the previous document intact (and at worst a stale tmp that
     * [[fromFile]] never reads and the next write replaces), never a
-    * truncated state.json that would fail every later run. */
+    * truncated state.json that would fail every later run. A document
+    * whose text is already there is not rewritten. */
   def write(path: String, s: IncrementalState): Unit = {
     val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp = target.resolveSibling(target.getFileName.toString + ".__tmp")
-    Files.write(tmp, toJson(s).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val json = toJson(s)
+    if (!Files.exists(target) || Files.readString(target) != json) {
+      Option(target.getParent).foreach(Files.createDirectories(_))
+      val tmp = target.resolveSibling(target.getFileName.toString + ".__tmp")
+      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
   }
 }
 
@@ -308,7 +313,8 @@ object TierCommit {
   * config → extract (bronze) → silver → gold → load → summary.
   *
   * Tier layout under `rootDir`:
-  *   bronze/  raw per-source parquet (S6)
+  *   bronze/  raw per-source parquet (S6) + _extract.json, what the
+  *            last stateful run extracted (see INCREMENTAL TIER MAINTENANCE)
   *   silver/  standardized contracts (S7)
   *   gold/    hive-partitioned marts (S8) + summary.md (S10)
   *   <warehouse>/  full-replace "table" parquet dirs (S9 equivalent)
@@ -337,10 +343,26 @@ object TierCommit {
   *     the recorded marks. Stateless runs, `forceDimRefresh`, a new
   *     warehouse path, a missing target or a silver store rewritten after
   *     the last commit take the full path.
-  *   - LIMIT: the record covers inputs, not code. After a change to the
+  *   - Extract: every stateful run records, last and after state.json,
+  *     what it extracted ([[ExtractRecord]], `bronze/_extract.json`): per
+  *     source the SHA-256 of its content (each BCB payload, the ANP drop),
+  *     the mark applied, the rows that passed it and its bronze listing;
+  *     plus the series CSV's digest with its parsed list, which stands in
+  *     for the Spark read of a CSV with the same digest. On the
+  *     incremental path a source whose digest and mark match an entry
+  *     that counted 0 rows, with its bronze listing unchanged, replays: no
+  *     parse, no bronze write, no ANP probe, an empty typed increment.
+  *     The same bytes under the same mark give the same rows. When every
+  *     source replays, the dimension is fresh and the tier record
+  *     matches, the run submits no Spark job: the tier reads declare
+  *     their schemas ([[storeSchemas]]).
+  *   - LIMIT: both records cover inputs, not code. After a change to the
   *     tier logic (Silver.buildGold, Summary, the table set), run once
   *     without `statePath` so the new code rebuilds the tiers — the same
-  *     remedy as for source revisions (SEMANTIC TRADE below).
+  *     remedy as for source revisions (SEMANTIC TRADE below). The
+  *     extract record adds no staleness of its own: a replayed source
+  *     contributes the empty increment a rerun of the same parse would,
+  *     and an incremental run never re-derives silver from bronze.
   */
 object Pipeline {
   import org.apache.hadoop.fs.Path
@@ -370,43 +392,67 @@ object Pipeline {
     TierCommit.heal(spark, rootDir)
 
     val state = statePath.map(IncrementalState.fromFile).getOrElse(IncrementalState.empty)
+    val schemas = storeSchemas(spark)
+    def readStore(path: String, schema: StructType) = spark.read.schema(schema).parquet(path)
+
+    // What the last stateful extract read (ExtractRecord): a source that
+    // replays reuses its bronze and runs no job. A stateless run neither
+    // reads nor writes the record.
+    val recordPath = s"$rootDir/bronze/${ExtractRecord.Name}"
+    val prior = if (statePath.isEmpty) ExtractRecord.empty else ExtractRecord.read(spark, recordPath)
 
     // ---------- EXTRACT (main.py:31-50) ----------
     // Series control table: enabled flag is case-insensitive {"true","1","yes"} (P3).
-    val seriesCfg = spark.read.option("header", "true").csv(seriesCsvPath)
-      .filter(lower(col("enabled")).isin("true", "1", "yes"))
-      .select(col("series_id").cast("long"), col("series_name"))
-      .collect() // control table: O(series), driver-side by design
+    // The same bytes parse to the same list, so a recorded digest stands in for the read.
+    val seriesDigest = ExtractRecord.fileSha256(spark, seriesCsvPath)
+    val seriesCfg = prior.series(seriesDigest).getOrElse(
+      spark.read.option("header", "true").csv(seriesCsvPath)
+        .filter(lower(col("enabled")).isin("true", "1", "yes"))
+        .select(col("series_id").cast("long"), col("series_name"))
+        .collect() // control table: O(series), driver-side by design
+        .map(r => (r.getAs[Long](0), r.getString(1))).toSeq)
+    // The incremental path (mark set, store present): only here may an
+    // empty increment leave a silver store, and a source replay, as it is.
+    val silverPath = s"$rootDir/silver/bcb_sgs.parquet"
+    val bcbIncremental = state.bcbLastDate.isDefined && pathExists(spark, silverPath)
     // Partition-parallel fetch (SURVEY §2.1-S1): the reference loops
     // series sequentially on the driver (main.py:36-41); here each
     // fetch + bronze write runs on a bounded thread pool, so wall-clock
     // stays ~flat as the series count grows. SparkSession is
     // thread-safe; per-series outputs go to disjoint bronze paths. Any
     // fetch failure propagates (fail-fast, like the sequential loop).
-    // Each series yields its silver frame and its bronze row count, which
-    // a Dataset.observe takes on the bronze write itself (no extra scan).
+    // Each series yields its silver frame, its bronze row count, which
+    // a Dataset.observe takes on the bronze write itself (no extra scan),
+    // and its record entry.
     val bcbFrames = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.max(1, math.min(8, seriesCfg.length)))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try {
-        val futures = seriesCfg.toSeq.map { row =>
+        val futures = seriesCfg.map { case (id, name) =>
           scala.concurrent.Future {
-            val id = row.getAs[Long]("series_id")
-            val name = row.getAs[String]("series_name")
-            val bronze0 = BcbSource.fetch(spark, fetcher, id, cfg.startDate, cfg.endDate)
-            // Incremental: only rows past the series' mark flow downstream.
-            val bronze = state.bcbMark(id) match {
-              case Some(d) => bronze0.filter(col("date") > lit(d).cast("timestamp"))
-              case None => bronze0
+            val payload = fetcher.fetch(BcbSource.url(id, cfg.startDate, cfg.endDate))
+            val (table, digest, mark) = (s"bcb_sgs_$id", ExtractRecord.sha256(payload), state.bcbMark(id))
+            val bronzePath = s"$rootDir/bronze/$table.parquet"
+            if (bcbIncremental && prior.replays(table, digest, mark, dataFiles(spark, bronzePath)))
+              (Silver.toSilverBcb(BcbSource.fromPayload(spark, "[]", id), name), 0L,
+                table -> prior.sources(table))
+            else {
+              val bronze0 = BcbSource.fromPayload(spark, payload, id)
+              // Incremental: only rows past the series' mark flow downstream.
+              val bronze = mark match {
+                case Some(d) => bronze0.filter(col("date") > lit(d).cast("timestamp"))
+                case None => bronze0
+              }
+              val written = org.apache.spark.sql.Observation()
+              bronze.observe(written, count(lit(1)).as("rows"))
+                .write.mode("overwrite").parquet(bronzePath)
+              // a count Spark did not report reads as "some rows": merge
+              val rows = written.get.get("rows").fold(1L)(_.asInstanceOf[Long])
+              (Silver.toSilverBcb(bronze, name), rows, table ->
+                ExtractRecord.Source(digest, mark, Some(rows), dataFiles(spark, bronzePath)))
             }
-            val written = org.apache.spark.sql.Observation()
-            bronze.observe(written, count(lit(1)).as("rows"))
-              .write.mode("overwrite").parquet(s"$rootDir/bronze/bcb_sgs_$id.parquet")
-            // a count Spark did not report reads as "some rows": merge
-            val rows = written.get.get("rows").fold(1L)(_.asInstanceOf[Long])
-            (Silver.toSilverBcb(bronze, name), rows)
           }
         }
         try scala.concurrent.Await.result(
@@ -427,9 +473,7 @@ object Pipeline {
     }
     val bcbIncrement = bcbFrames.map(_._1).reduceOption(_ unionByName _)
       .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "series_id BIGINT, series_name STRING, date TIMESTAMP, value DOUBLE")))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemas.bcb))
 
     // Incremental merge: an increment is rows PAST the high-water mark,
     // so downstream tiers must see prior history plus the increment —
@@ -445,16 +489,12 @@ object Pipeline {
     // through twice, the keep-first dedup on the natural key collapses
     // it — the merged store can never hold duplicate (series_id, date)
     // rows regardless of mark/timestamp granularity.
-    val silverPath = s"$rootDir/silver/bcb_sgs.parquet"
-    state.bcbLastDate match {
-      case Some(_) if pathExists(spark, silverPath) =>
-        if (bcbFrames.map(_._2).sum > 0)
-          swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
-            spark.read.parquet(silverPath).unionByName(bcbIncrement),
-            keys = Seq("series_id", "date"), order = Seq(col("value"))), silverPath)
-      case _ => swapWrite(spark, bcbIncrement, silverPath)
-    }
-    val bcbSilver = spark.read.parquet(silverPath)
+    if (!bcbIncremental) swapWrite(spark, bcbIncrement, silverPath)
+    else if (bcbFrames.map(_._2).sum > 0)
+      swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
+        readStore(silverPath, schemas.bcb).unionByName(bcbIncrement),
+        keys = Seq("series_id", "date"), order = Seq(col("value"))), silverPath)
+    val bcbSilver = readStore(silverPath, schemas.bcb)
 
     // `ibge_last_sync` drives a real skip (the asymmetry vs the BCB/ANP
     // marks closed): the UF dimension changes ~never, so when the state
@@ -466,15 +506,12 @@ object Pipeline {
     val dimFresh = !forceDimRefresh && state.ibgeLastSync.contains(today) &&
       pathExists(spark, ufDimPath)
     val ufDim =
-      if (dimFresh) spark.read.parquet(ufDimPath)
+      if (dimFresh) readStore(ufDimPath, schemas.dim)
       else {
         val fetched = IbgeSource.fetch(spark, fetcher)
         fetched.write.mode("overwrite").parquet(ufDimPath)
         fetched
       }
-
-    val anpRaw = CsvDialect.read(spark, cfg.anpBronzeFile)
-    anpRaw.write.mode("overwrite").parquet(s"$rootDir/bronze/anp_raw.parquet")
 
     // ---------- TRANSFORM (main.py:53-56) ----------
     // ANP incremental (reference state stub state/state.json:1-5): the
@@ -483,7 +520,8 @@ object Pipeline {
     // high-water-mark pushdown as the BCB path, applied right after the
     // silver projection so Catalyst pushes the date_ref predicate below
     // the enrich join. The durable silver store merges increment +
-    // history with the same natural-key dedup as BCB.
+    // history with the same natural-key dedup as BCB. A drop whose
+    // digest the record holds with 0 rows past the same mark replays.
     //
     // SEMANTIC TRADE (inherent to any high-water-mark scheme): a later
     // CSV drop that REVISES or backfills a row at date_ref <= mark is
@@ -495,19 +533,39 @@ object Pipeline {
       case Some(p) => df.filter(col("date_ref") > lit(p).cast("timestamp"))
       case None => df
     }
-    val anpIncrement = pastAnpMark(Silver.enrichUf(Silver.toSilverAnp(anpRaw), ufDim))
     val anpPath = s"$rootDir/silver/anp_prices.parquet"
-    state.anpLastPeriod match {
-      case Some(_) if pathExists(spark, anpPath) =>
+    val anpBronze = s"$rootDir/bronze/anp_raw.parquet"
+    val anpIncremental = state.anpLastPeriod.isDefined && pathExists(spark, anpPath)
+    // digested before the read: a drop replaced after the digest is seen
+    // as changed by the next run, never as the bytes recorded here
+    val anpDigest = statePath.map { _ =>
+      CsvDialect.requireExists(spark, cfg.anpBronzeFile)
+      ExtractRecord.fileSha256(spark, cfg.anpBronzeFile)
+    }
+    val anpReplay = anpIncremental && anpDigest.exists(
+      prior.replays("anp_raw", _, state.anpLastPeriod, dataFiles(spark, anpBronze)))
+    def increment(raw: DataFrame) = pastAnpMark(Silver.enrichUf(Silver.toSilverAnp(raw), ufDim))
+    // the increment, and its row count when one was taken (0 on a replay)
+    val (anpIncrement, anpRows) =
+      if (anpReplay) (increment(emptyAnpRaw(spark)), Some(0L))
+      else {
+        val anpRaw = CsvDialect.read(spark, cfg.anpBronzeFile)
+        anpRaw.write.mode("overwrite").parquet(anpBronze)
         // the dedup and the left enrich join drop no key, so the rows
         // before them answer "any new row?" with a scan, not a shuffle
-        if (!pastAnpMark(Silver.anpRows(anpRaw)).isEmpty)
-          swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
-            spark.read.parquet(anpPath).unionByName(anpIncrement),
-            keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price"))), anpPath)
-      case _ => swapWrite(spark, anpIncrement, anpPath)
-    }
-    val anpSilver = spark.read.parquet(anpPath)
+        (increment(anpRaw),
+          if (anpIncremental && pastAnpMark(Silver.anpRows(anpRaw)).isEmpty) Some(0L) else None)
+      }
+    if (!anpIncremental) swapWrite(spark, anpIncrement, anpPath)
+    else if (!anpRows.contains(0L))
+      swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
+        readStore(anpPath, schemas.anp).unionByName(anpIncrement),
+        keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price"))), anpPath)
+    val anpSilver = readStore(anpPath, schemas.anp)
+    val extracted = ExtractRecord(Some(seriesDigest -> seriesCfg),
+      bcbFrames.map(_._3).toMap ++ anpDigest.map(d => "anp_raw" -> (
+        if (anpReplay) prior.sources("anp_raw")
+        else ExtractRecord.Source(d, state.anpLastPeriod, anpRows, dataFiles(spark, anpBronze)))))
 
     // ---------- GOLD (main.py:59) ----------
     val gold = Silver.buildGold(bcbSilver, anpSilver)
@@ -534,10 +592,10 @@ object Pipeline {
     val inputs = JObject(
       "files" -> JObject(Seq(silverPath, anpPath, ufDimPath).map(p => p -> dataFiles(spark, p)): _*),
       "targets" -> JArray(targets.map(JString(_)).toList))
-    val recordPath = s"$rootDir/$TierInputsName"
+    val inputsPath = s"$rootDir/$TierInputsName"
     // the committed record, when it vouches for this run's inputs
     val unchanged = if (statePath.isEmpty || !dimFresh) None else
-      readText(spark, recordPath).map(JsonMethods.parse(_))
+      readText(spark, inputsPath).map(JsonMethods.parse(_))
         .filter(rec => JsonMethods.compact(rec \ "inputs") == JsonMethods.compact(inputs) &&
           targets.forall { t => val p = new Path(t); fsOf(spark, p).exists(p) })
         .map(_ \ "marks")
@@ -561,13 +619,19 @@ object Pipeline {
         val record = JObject("inputs" -> inputs,
           "marks" -> marks.fold[JValue](JNull)(m => JsonMethods.parse(IncrementalState.toJson(m))))
         TierCommit.stageFile(spark, JsonMethods.compact(record).getBytes(StandardCharsets.UTF_8),
-          recordPath)
-        TierCommit.commit(spark, rootDir, targets :+ recordPath)
+          inputsPath)
+        TierCommit.commit(spark, rootDir, targets :+ inputsPath)
         (summary, marks)
     }
 
     // ---------- STATE ----------
-    for (p <- statePath; m <- marks) IncrementalState.write(p, m)
+    // The extract record goes last: a run that stops before it leaves the
+    // previous record, whose entries for the bronze this run rewrote no
+    // longer match their listings, so those sources extract again.
+    for (p <- statePath; m <- marks) {
+      IncrementalState.write(p, m)
+      ExtractRecord.write(spark, recordPath, extracted)
+    }
 
     Result(bcbSilver, bcbIncrement, anpSilver, anpIncrement, ufDim, gold, summary)
   }
@@ -592,10 +656,35 @@ object Pipeline {
       bcbSeriesLastDate = bcbSeries)
   }
 
-  /** The data files under `path` (Hadoop's hidden `_`/`.` files left
-    * out), as sorted [relative name, length, modification time] triples;
-    * empty when `path` does not exist. */
-  private def dataFiles(spark: SparkSession, path: String): JValue = {
+  /** The schemas the two silver stores and the UF dimension are written
+    * with, nullable as a parquet read returns them: each is the writing
+    * transform's analyzed output over an empty typed input, so deriving
+    * it runs no job and a change to the writer moves it too. The tier
+    * reads declare them, which spares a schema-inference job per read. */
+  private[graft] final case class StoreSchemas(bcb: StructType, anp: StructType, dim: StructType)
+
+  private[graft] def storeSchemas(spark: SparkSession): StoreSchemas = {
+    val dim = IbgeSource.fromPayload(spark, "[]")
+    def nullable(df: DataFrame) = org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(df.schema)
+    StoreSchemas(
+      bcb = nullable(Silver.toSilverBcb(BcbSource.fromPayload(spark, "[]", 0L), "")),
+      anp = nullable(Silver.enrichUf(Silver.toSilverAnp(emptyAnpRaw(spark)), dim)),
+      dim = nullable(dim))
+  }
+
+  /** A 0-row ANP drop with the header the resolver maps first: each
+    * rule's first exact name, as a string column like every CSV column. */
+  private def emptyAnpRaw(spark: SparkSession): DataFrame = spark.createDataFrame(
+    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    StructType(graft.silver.HeaderResolver.AnpRules.map { r =>
+      StructField(r.steps.collectFirst { case graft.silver.HeaderResolver.Exact(n, _*) => n }
+        .getOrElse(sys.error(s"no exact name for ${r.logical}")), StringType)
+    }))
+
+  /** The files under `path` (Hadoop's hidden `_`/`.` files left out), as
+    * sorted (name relative to `path`, length, modification time); empty
+    * when `path` does not exist. */
+  private[pipeline] def visibleFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
@@ -609,12 +698,17 @@ object Pipeline {
           files += ((rel, f.getLen, f.getModificationTime))
       }
     }
-    JArray(files.sorted.map { case (n, len, t) =>
-      JArray(List(JString(n), JInt(len), JInt(t))) }.toList)
+    files.sorted.toSeq
   }
 
+  /** [[visibleFiles]] as [relative name, length, modification time]
+    * triples: the listing form of both records. */
+  private[pipeline] def dataFiles(spark: SparkSession, path: String): JValue =
+    JArray(visibleFiles(spark, path).map { case (n, len, t) =>
+      JArray(List(JString(n), JInt(len), JInt(t))) }.toList)
+
   /** A small text file's content through the Hadoop FileSystem API. */
-  private def readText(spark: SparkSession, path: String): Option[String] = {
+  private[pipeline] def readText(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) None

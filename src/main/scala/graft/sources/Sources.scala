@@ -83,9 +83,6 @@ object BcbSource {
       s"?formato=json&dataInicial=$s&dataFinal=$e"
   }
 
-  val bronzeSchema: StructType = StructType.fromDDL(
-    "series_id BIGINT, date TIMESTAMP, value DOUBLE")
-
   private val payloadSchema = StructType.fromDDL("data STRING, valor STRING")
 
   /** Parse a raw payload into the bronze contract
@@ -101,10 +98,6 @@ object BcbSource {
       Locale.ptBrToDouble(col("valor")).as("value"))
       .na.drop(Seq("date"))
   }
-
-  def fetch(spark: SparkSession, fetcher: JsonFetcher, seriesId: Long,
-            startDateIso: String, endDateIso: String): DataFrame =
-    fromPayload(spark, fetcher.fetch(url(seriesId, startDateIso, endDateIso)), seriesId)
 }
 
 /** IBGE UF dimension source (reference extract.py:50-68, S2/F12):
@@ -185,15 +178,18 @@ object JsonlDocs {
   * fallback triggers when the `;` parse collapses the header into a
   * single column. */
 object CsvDialect {
-  def read(spark: SparkSession, path: String): DataFrame = {
-    // Same defaultFS-aware resolution as the rest of the pipeline
-    // (Pipeline.pathExists): `java.nio.file.Files.exists` sees only the
-    // local filesystem, so an existing hdfs:///s3a:// (or file:-
-    // qualified) path would raise the "file not found" error instead of
-    // being read.
+  /** The actionable error for a missing drop. Same defaultFS-aware
+    * resolution as the rest of the pipeline (Pipeline.pathExists):
+    * `java.nio.file.Files.exists` sees only the local filesystem, so an
+    * existing hdfs:///s3a:// (or file:-qualified) path would raise the
+    * "file not found" error instead of being read. */
+  def requireExists(spark: SparkSession, path: String): Unit =
     if (!graft.pipeline.Pipeline.pathExists(spark, path))
       throw new java.io.FileNotFoundException(
         s"ANP file not found: $path. Download the CSV and place it at this path.")
+
+  def read(spark: SparkSession, path: String): DataFrame = {
+    requireExists(spark, path)
     val semi = spark.read
       .option("header", "true").option("sep", ";").option("encoding", "UTF-8")
       .csv(path)

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{IncrementalState, Pipeline, RunConfig, Summary}
+import graft.pipeline.{ExtractRecord, IncrementalState, Pipeline, RunConfig, Summary}
 import graft.silver.Silver
 import graft.sources.{BcbSource, FixtureFetcher, IbgeSource}
 
@@ -476,5 +476,259 @@ class PipelineSpec extends SparkSpec {
     val text = Summary.build(emptyBcb, emptyAnp)
     assert(text ==
       "BCB/SGS - sem dados para o período.\nANP - sem dados para o período.")
+  }
+
+  // ---- per-source extract replay ----
+
+  /** `body`'s result and the number of Spark jobs it submitted, counted
+    * by a listener on a local property that the body's threads (the
+    * fetch pool included) inherit. A marker job submitted after the body
+    * is awaited: the listener bus delivers in order, so once the marker
+    * is seen, so is every job before it. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.spec.jobs", java.util.UUID.randomUUID().toString)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = body
+      sc.setLocalProperty(key, s"$tag#end")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(s"$tag#end") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(s"$tag#end"), "the marker job was never seen")
+      (out, seen.asScala.count(_ == tag))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Every regular file under `dir` (under `root`, or all of `root`). */
+  private def filesUnder(root: String, dir: String = ""): Listing = {
+    val top = Paths.get(root, dir)
+    if (!Files.exists(top)) Map.empty
+    else {
+      val s = Files.walk(top)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> (Files.size(p), Files.getLastModifiedTime(p).toString)).toMap
+      finally s.close()
+    }
+  }
+
+  private def bronzeRows(root: String, table: String): Long =
+    spark.read.parquet(s"$root/bronze/$table.parquet").count()
+
+  /** Two series (the daily fixture 11 and a monthly 433) over `root`. */
+  private def twoSeries(root: String): String = {
+    val csv = Paths.get(root, "series.csv")
+    Files.writeString(csv, "series_id,series_name,enabled\n11,selic_sgs_11,TRUE\n433,ipca_sgs_433,TRUE\n")
+    csv.toString
+  }
+
+  private val ipcaJan = """[{"data": "01/01/2024", "valor": "0,42"}]"""
+
+  private def withIpca(ipca: String) = FixtureFetcher(Map(
+    BcbSource.url(11, "2024-01-01", "2024-03-01") -> fixtureText("bcb_payload.json"),
+    BcbSource.url(433, "2024-01-01", "2024-03-01") -> ipca,
+    IbgeSource.Url -> fixtureText("ibge_ufs.json")))
+
+  test("a third identical stateful run runs no Spark job and rewrites no file") {
+    val root = Files.createTempDirectory("graft-replay").toString
+    val statePath = s"$root/state/state.json"
+    def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    run() // the marks moved in the first run, so this one still extracts
+    val files = filesUnder(root)
+    assert(files.keys.exists(_.endsWith(s"/bronze/${ExtractRecord.Name}")))
+    assert(files.keys.exists(_.endsWith("/state/state.json")))
+    val (r3, jobs) = withJobCount(run())
+    assert(jobs == 0, s"$jobs Spark jobs ran")
+    assert(filesUnder(root) == files, "a file was written")
+    assert(r3.summary == GoldenSummary)
+    assert(r3.bcbIncrement.isEmpty && r3.anpIncrement.isEmpty)
+    assert(r3.bcbSilver.count() == 4 && r3.anpSilver.count() == 8 && r3.ufDim.count() == 6)
+    assertTiersMatchSilver(root)
+  }
+
+  test("an identical run right after a mark moved extracts 0-row bronze; the next replays") {
+    val root = Files.createTempDirectory("graft-replay-moved").toString
+    val statePath = s"$root/state/state.json"
+    def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    val first = filesUnder(root, "bronze")
+    assert(bronzeRows(root, "bcb_sgs_11") == 4)
+    val (_, jobs2) = withJobCount(run())
+    val second = filesUnder(root, "bronze")
+    assert(jobs2 > 0)
+    for (t <- Seq("bcb_sgs_11.parquet", "anp_raw.parquet"))
+      assert(rewritten(first, second, t), s"$t not extracted")
+    assert(bronzeRows(root, "bcb_sgs_11") == 0)
+    val rec = ExtractRecord.read(spark, s"$root/bronze/${ExtractRecord.Name}")
+    assert(rec.sources.keySet == Set("bcb_sgs_11", "anp_raw"))
+    assert(rec.sources.values.forall(_.rows.contains(0L)))
+    assert(rec.sources("bcb_sgs_11").mark.contains("2024-02-29 00:00:00.000000"))
+    assert(rec.series(ExtractRecord.fileSha256(spark, fixture("bcb_series.csv")))
+      .contains(Seq(11L -> "selic_sgs_11")))
+    val (_, jobs3) = withJobCount(run())
+    assert(jobs3 == 0)
+    assert(filesUnder(root, "bronze") == second)
+  }
+
+  test("a payload byte changed within the mark re-extracts that series alone; no tier is rewritten") {
+    val root = Files.createTempDirectory("graft-replay-byte").toString
+    val statePath = s"$root/state/state.json"
+    val csv = twoSeries(root)
+    def run(ipca: String) = Pipeline.run(spark, withIpca(ipca), cfg, root, csv, Some(statePath))
+    run(ipcaJan)
+    run(ipcaJan)
+    val (bronze, tiers) = (filesUnder(root, "bronze"), tierFiles(root))
+    // the January value (dated at 433's mark) is revised by one byte
+    val (_, jobs) = withJobCount(run(ipcaJan.replace("0,42", "0,43")))
+    assert(jobs > 0)
+    val after = filesUnder(root, "bronze")
+    assert(rewritten(bronze, after, "bcb_sgs_433.parquet"), "433 did not extract")
+    assert(bronzeRows(root, "bcb_sgs_433") == 0)
+    for (t <- Seq("bcb_sgs_11.parquet", "anp_raw.parquet"))
+      assert(under(after, t) == under(bronze, t), s"$t did not replay")
+    assert(tierFiles(root) == tiers, "a tier file was rewritten")
+    val rec = ExtractRecord.read(spark, s"$root/bronze/${ExtractRecord.Name}")
+    assert(rec.sources("bcb_sgs_433").rows.contains(0L))
+    assert(rec.sources("bcb_sgs_433").sha256 == ExtractRecord.sha256(ipcaJan.replace("0,42", "0,43")))
+  }
+
+  test("an ANP drop rewritten at the same length and mtime with one price changed re-extracts ANP") {
+    val root = Files.createTempDirectory("graft-replay-anp").toString
+    val statePath = s"$root/state/state.json"
+    val drop = Paths.get(root, "anp.csv")
+    Files.writeString(drop, fixtureText("anp_semicolon.csv"))
+    val c = cfg.copy(anpBronzeFile = drop.toString)
+    def run() = Pipeline.run(spark, fetcher, c, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    run()
+    val (bronze, tiers) = (filesUnder(root, "bronze"), tierFiles(root))
+    val (size, mtime) = (Files.size(drop), Files.getLastModifiedTime(drop))
+    Files.writeString(drop, fixtureText("anp_semicolon.csv").replace("15/02/2024;6,74", "15/02/2024;6,80"))
+    Files.setLastModifiedTime(drop, mtime)
+    assert(Files.size(drop) == size && Files.getLastModifiedTime(drop) == mtime)
+    run()
+    val after = filesUnder(root, "bronze")
+    assert(rewritten(bronze, after, "anp_raw.parquet"), "ANP did not extract")
+    assert(under(after, "bcb_sgs_11.parquet") == under(bronze, "bcb_sgs_11.parquet"))
+    // the revised row is dated before the mark: no increment, no tier rewrite
+    assert(tierFiles(root) == tiers, "a tier file was rewritten")
+  }
+
+  test("a series whose bronze table was deleted re-extracts") {
+    val root = Files.createTempDirectory("graft-replay-gone").toString
+    val statePath = s"$root/state/state.json"
+    val csv = twoSeries(root)
+    def run() = Pipeline.run(spark, withIpca(ipcaJan), cfg, root, csv, Some(statePath))
+    run()
+    run()
+    val (bronze, tiers) = (filesUnder(root, "bronze"), tierFiles(root))
+    val gone = new org.apache.hadoop.fs.Path(s"$root/bronze/bcb_sgs_433.parquet")
+    gone.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(gone, true)
+    run()
+    val after = filesUnder(root, "bronze")
+    assert(rewritten(bronze, after, "bcb_sgs_433.parquet"), "433 did not extract")
+    assert(bronzeRows(root, "bcb_sgs_433") == 0)
+    assert(under(after, "bcb_sgs_11.parquet") == under(bronze, "bcb_sgs_11.parquet"))
+    assert(tierFiles(root) == tiers, "a tier file was rewritten")
+  }
+
+  test("a mark moved back (state.json reset) re-extracts the rows past it") {
+    val root = Files.createTempDirectory("graft-replay-reset").toString
+    val statePath = s"$root/state/state.json"
+    def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    run()
+    assert(bronzeRows(root, "bcb_sgs_11") == 0)
+    val jan31 = "2024-01-31 00:00:00.000000"
+    IncrementalState.write(statePath, IncrementalState.fromFile(statePath)
+      .copy(bcbLastDate = Some(jan31), bcbSeriesLastDate = Map(11L -> jan31)))
+    val r = run()
+    assert(bronzeRows(root, "bcb_sgs_11") == 2, "the rows past the earlier mark were not read")
+    assert(r.bcbIncrement.count() == 2 && r.bcbSilver.count() == 4)
+    assert(IncrementalState.fromFile(statePath).bcbMark(11).contains("2024-02-29 00:00:00.000000"))
+    assertTiersMatchSilver(root)
+  }
+
+  test("a crash between the state.json and the record writes: the next run extracts, tiers as a clean run's") {
+    val root = Files.createTempDirectory("graft-replay-crash").toString
+    val statePath = s"$root/state/state.json"
+    def run(root: String, f: FixtureFetcher) =
+      Pipeline.run(spark, f, cfg, root, fixture("bcb_series.csv"), Some(s"$root/state/state.json"))
+    run(root, fetcher)
+    val record = Paths.get(root, "bronze", ExtractRecord.Name)
+    val recorded = Files.readString(record)
+    // a directory where the record's tmp goes makes its write fail after state.json
+    val blocker = Paths.get(root, "bronze", ExtractRecord.Name + ".__tmp")
+    Files.createDirectories(blocker)
+    intercept[java.io.IOException](run(root, bcbFetcher(withMarchRow)))
+    assert(IncrementalState.fromFile(statePath).bcbMark(11).contains("2024-03-05 00:00:00.000000"),
+      "state.json was not written before the record")
+    assert(Files.readString(record) == recorded)
+    Files.delete(blocker)
+    val before = filesUnder(root, "bronze")
+    val (r3, jobs) = withJobCount(run(root, bcbFetcher(withMarchRow)))
+    assert(jobs > 0)
+    assert(rewritten(before, filesUnder(root, "bronze"), "bcb_sgs_11.parquet"), "BCB did not extract")
+    assert(rewritten(before, filesUnder(root, "bronze"), "anp_raw.parquet"), "ANP did not extract")
+    val clean = Files.createTempDirectory("graft-replay-clean").toString
+    run(clean, fetcher)
+    val c2 = run(clean, bcbFetcher(withMarchRow))
+    assert(r3.summary == c2.summary)
+    for (t <- Seq("silver/bcb_sgs.parquet", "silver/anp_prices.parquet")) {
+      val (a, b) = (spark.read.parquet(s"$root/$t"), spark.read.parquet(s"$clean/$t"))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$t differs from a clean run's")
+    }
+    assertTiersMatchSilver(root)
+  }
+
+  test("a legacy state.json (global mark only) extracts once, then replays") {
+    val root = Files.createTempDirectory("graft-replay-legacy").toString
+    val statePath = s"$root/state/state.json"
+    def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    val s1 = IncrementalState.fromFile(statePath)
+    def q(v: Option[String]) = v.fold("null")("\"" + _ + "\"")
+    Files.writeString(Paths.get(statePath),
+      s"""{"bcb_last_date": ${q(s1.bcbLastDate)}, "anp_last_period": ${q(s1.anpLastPeriod)}, """ +
+        s""""ibge_last_sync": ${q(s1.ibgeLastSync)}}""")
+    val before = filesUnder(root, "bronze")
+    run()
+    assert(rewritten(before, filesUnder(root, "bronze"), "bcb_sgs_11.parquet"), "BCB did not extract")
+    assert(IncrementalState.fromFile(statePath).bcbSeriesLastDate == s1.bcbSeriesLastDate)
+    val files = filesUnder(root)
+    val (r3, jobs) = withJobCount(run())
+    assert(jobs == 0, s"$jobs Spark jobs ran")
+    assert(filesUnder(root) == files)
+    assert(r3.summary == GoldenSummary)
+  }
+
+  test("each declared read schema equals the parquet footer the pipeline wrote") {
+    val root = Files.createTempDirectory("graft-schemas").toString
+    val statePath = s"$root/state/state.json"
+    val schemas = Pipeline.storeSchemas(spark)
+    def footers() = {
+      for ((path, declared) <- Seq("silver/bcb_sgs.parquet" -> schemas.bcb,
+        "silver/anp_prices.parquet" -> schemas.anp, "bronze/ibge_uf_dim.parquet" -> schemas.dim))
+        assert(spark.read.parquet(s"$root/$path").schema == declared, s"$path drifted")
+    }
+    Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    footers()
+    // merged stores: both silver stores take an increment
+    val r2 = Pipeline.run(spark, bcbFetcher(withMarchRow),
+      cfg.copy(anpBronzeFile = fixture("anp_semicolon_v2.csv")), root, fixture("bcb_series.csv"),
+      Some(statePath))
+    assert(r2.bcbIncrement.count() == 1 && r2.anpIncrement.count() == 2)
+    footers()
   }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
+import graft.pipeline.Pipeline
+
 /** Tiny JSON sidecar for persisted-index geometry (VERDICT r8 #2):
   * [[IvfIndex]]/[[IvfPqIndex]]/[[TextIndex]] builders used to RETURN
   * their `Meta` and probes took it as arguments, so a probe from a
@@ -24,38 +26,22 @@ private[graft] object IndexMeta {
   }
 
   def write(spark: SparkSession, path: String, fields: Map[String, Long]): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val json = fields.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\": " + v }
       .mkString("{", ", ", "}\n")
     // write-then-rename: a crash mid-write (or a probe reading during a
     // rewrite) must never observe a truncated sidecar over a healthy
-    // index (ADVICE r9) — the rename is the single publication point
-    val tmp = new Path(p.getParent,
-      "." + p.getName + ".tmp") // dot-prefixed: invisible to parquet/json readers
-    val out = fs.create(tmp, true) // creates parent dirs, overwrites
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false) // rename target must be free
-    require(fs.rename(tmp, p), s"could not publish index meta at $path")
+    // index (ADVICE r9) — the rename is the single publication point.
+    // The tmp is dot-prefixed: invisible to parquet/json readers.
+    Pipeline.publishText(spark, path, json, "." + _ + ".tmp", "could not publish index meta at")
   }
 
   def read(spark: SparkSession, path: String): Map[String, Long] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"index meta not found at $path — not a built index?")
-    val in = fs.open(p)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val b = new Array[Byte](8192)
-      var n = in.read(b)
-      while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-      buf.toString("UTF-8")
-    } finally in.close()
-    JsonMethods.parse(json) match {
+    val json = Pipeline.readText(spark, path)
+    require(json.nonEmpty, s"index meta not found at $path — not a built index?")
+    JsonMethods.parse(json.get) match {
       case JObject(fields) => fields.collect {
         case (k, JInt(v)) => k -> v.toLong
         case (k, JLong(v)) => k -> v

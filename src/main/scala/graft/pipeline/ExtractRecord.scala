@@ -49,9 +49,10 @@ object ExtractRecord {
   val empty: ExtractRecord = ExtractRecord(None, Map.empty)
 
   /** One source's extract: the SHA-256 of its content, the mark applied,
-    * the rows that passed the mark (None when not counted: the ANP full
-    * path takes no count, and the ANP probe stops at the first row) and
-    * the bronze files it left, as [name, length, modification time]. */
+    * the rows that passed it and reach silver (counted on every extract;
+    * None only in a record written before ANP was counted, which
+    * therefore never replays) and the bronze files it left, as [name,
+    * length, modification time]. */
   final case class Source(sha256: String, mark: Option[String], rows: Option[Long],
                           bronze: JValue)
 
@@ -92,21 +93,14 @@ object ExtractRecord {
   def read(spark: SparkSession, path: String): ExtractRecord =
     Pipeline.readText(spark, path).flatMap(t => Try(fromJson(t)).toOption).getOrElse(empty)
 
-  /** Publish `r` at `path` via a sibling tmp file and a rename; a record
-    * whose text is already there is not rewritten. A crash between the
-    * delete and the rename leaves no record, which only makes the next
-    * run extract. */
+  /** Publish `r` at `path` ([[Pipeline.publishText]]); a record whose
+    * text is already there is not rewritten. A crash between the delete
+    * and the rename leaves no record, which only makes the next run
+    * extract. */
   def write(spark: SparkSession, path: String, r: ExtractRecord): Unit = {
     val text = toJson(r)
-    if (!Pipeline.readText(spark, path).contains(text)) {
-      val p = new Path(path)
-      val fs = TierCommit.fsOf(spark, p)
-      val tmp = new Path(p.getParent, p.getName + ".__tmp")
-      val out = fs.create(tmp, true)
-      try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p)) sys.error(s"extract record: failed to publish $p")
-    }
+    if (!Pipeline.readText(spark, path).contains(text))
+      Pipeline.publishText(spark, path, text, _ + ".__tmp", "extract record: failed to publish")
   }
 
   def sha256(text: String): String =

@@ -3,9 +3,9 @@ package graft.pipeline
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.silver.Silver
 import graft.sources.{BcbSource, CsvDialect, IbgeSource, JsonFetcher}
@@ -192,20 +192,15 @@ object TierCommit {
 
   /** The commit point alone: publish the manifest via tmp + atomic
     * rename. Split from [[commit]] so crash-injection tests can stop the
-    * world here and prove [[heal]] completes the promotion. */
+    * world here and prove [[heal]] completes the promotion. A stale
+    * manifest was healed before staging began. */
   private[graft] def writeManifest(spark: SparkSession, rootDir: String,
                                    targets: Seq[String]): Unit = {
-    val mf = manifestPath(rootDir)
-    val fs = fsOf(spark, mf)
-    val mfTmp = new Path(mf.getParent, mf.getName + ".__tmp")
     val json = targets
       .map(t => "\"" + t.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
       .mkString("{\"targets\": [", ", ", "]}")
-    val out = fs.create(mfTmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    fs.delete(mf, false) // stale manifest was healed before staging began
-    if (!fs.rename(mfTmp, mf))
-      sys.error(s"tier commit: failed to publish manifest $mf")
+    Pipeline.publishText(spark, manifestPath(rootDir).toString, json, _ + ".__tmp",
+      "tier commit: failed to publish manifest")
   }
 
   /** Commit all staged targets atomically: manifest rename = commit point. */
@@ -289,23 +284,17 @@ object TierCommit {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val mf = manifestPath(rootDir)
-    val fs = fsOf(spark, mf)
-    if (!fs.exists(mf)) return false
-    val in = fs.open(mf)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val b = new Array[Byte](8192)
-      var n = in.read(b)
-      while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-      buf.toString("UTF-8")
-    } finally in.close()
-    val targets = (JsonMethods.parse(json) \ "targets") match {
-      case JArray(vs) => vs.collect { case JString(s) => s }
-      case _ => Nil
+    Pipeline.readText(spark, mf.toString) match {
+      case None => false
+      case Some(json) =>
+        val targets = (JsonMethods.parse(json) \ "targets") match {
+          case JArray(vs) => vs.collect { case JString(s) => s }
+          case _ => Nil
+        }
+        targets.foreach(promote(spark, _))
+        fsOf(spark, mf).delete(mf, false)
+        true
     }
-    targets.foreach(promote(spark, _))
-    fs.delete(mf, false)
-    true
   }
 }
 
@@ -329,10 +318,23 @@ object TierCommit {
   *
   * INCREMENTAL TIER MAINTENANCE: a stateful run rebuilds a tier only when
   * its inputs changed.
-  *   - Silver: on the incremental path (mark set, store present) an empty
-  *     increment leaves the store untouched. The BCB increment size is a
-  *     `Dataset.observe` count riding each series' bronze write; ANP pays
-  *     one `isEmpty` probe.
+  *   - Extract: every bronze source (each `bcb_sgs_<id>`, `anp_raw`) goes
+  *     through one step. A `Dataset.observe` count riding its bronze
+  *     write takes the rows past its mark that reach silver (BCB: the
+  *     rows written; ANP: the parsed rows that pass [[Silver.anpValid]]).
+  *     Every stateful run records, last and after state.json, what it
+  *     extracted ([[ExtractRecord]], `bronze/_extract.json`): per source
+  *     the SHA-256 of its content (each BCB payload, the ANP drop), the
+  *     mark applied, that count and its bronze listing; plus the series
+  *     CSV's digest with its parsed list, which stands in for the Spark
+  *     read of a CSV with the same digest. On the incremental path (mark
+  *     set, silver store present) a source whose digest and mark match an
+  *     entry that counted 0 rows, with its bronze listing unchanged,
+  *     replays: no parse, no bronze write, an empty increment typed by
+  *     its store's contract. The same bytes under the same mark give the
+  *     same rows.
+  *   - Silver: both stores merge through one call ([[merge]]). On the
+  *     incremental path an empty increment leaves the store untouched.
   *   - Gold, warehouse, summary.md: every commit stages
   *     [[TierInputsName]] in the same manifest as the tiers. It records
   *     the data files (name, length, modification time) of both silver
@@ -343,19 +345,10 @@ object TierCommit {
   *     the recorded marks. Stateless runs, `forceDimRefresh`, a new
   *     warehouse path, a missing target or a silver store rewritten after
   *     the last commit take the full path.
-  *   - Extract: every stateful run records, last and after state.json,
-  *     what it extracted ([[ExtractRecord]], `bronze/_extract.json`): per
-  *     source the SHA-256 of its content (each BCB payload, the ANP drop),
-  *     the mark applied, the rows that passed it and its bronze listing;
-  *     plus the series CSV's digest with its parsed list, which stands in
-  *     for the Spark read of a CSV with the same digest. On the
-  *     incremental path a source whose digest and mark match an entry
-  *     that counted 0 rows, with its bronze listing unchanged, replays: no
-  *     parse, no bronze write, no ANP probe, an empty typed increment.
-  *     The same bytes under the same mark give the same rows. When every
-  *     source replays, the dimension is fresh and the tier record
-  *     matches, the run submits no Spark job: the tier reads declare
-  *     their schemas ([[storeSchemas]]).
+  *   - When every source replays, the dimension is fresh and the tier
+  *     record matches, the run submits no Spark job: the tier reads
+  *     declare their schemas, the contracts declared beside their writers
+  *     ([[Silver.BcbSchema]], [[Silver.AnpSchema]], [[IbgeSource.DimSchema]]).
   *   - LIMIT: both records cover inputs, not code. After a change to the
   *     tier logic (Silver.buildGold, Summary, the table set), run once
   *     without `statePath` so the new code rebuilds the tiers — the same
@@ -382,6 +375,17 @@ object Pipeline {
   /** The tier-input record under `rootDir`, committed with the tiers. */
   val TierInputsName = "_tier_inputs.json"
 
+  /** A silver store: its path, its contract, its natural key with the
+    * keep-first order of [[merge]], and whether this run is on its
+    * incremental path (mark set, store present). */
+  private final case class Store(path: String, contract: StructType, keys: Seq[String],
+                                 order: Column, incremental: Boolean)
+
+  /** One source's extract: its silver increment, the rows counted past
+    * its mark, and its record entry (stateful runs only). */
+  private final case class Extracted(increment: DataFrame, rows: Long,
+                                     entry: Option[(String, ExtractRecord.Source)])
+
   def run(spark: SparkSession, fetcher: JsonFetcher, cfg: RunConfig,
           rootDir: String, seriesCsvPath: String,
           statePath: Option[String] = None,
@@ -392,136 +396,92 @@ object Pipeline {
     TierCommit.heal(spark, rootDir)
 
     val state = statePath.map(IncrementalState.fromFile).getOrElse(IncrementalState.empty)
-    val schemas = storeSchemas(spark)
-    def readStore(path: String, schema: StructType) = spark.read.schema(schema).parquet(path)
 
     // What the last stateful extract read (ExtractRecord): a source that
     // replays reuses its bronze and runs no job. A stateless run neither
     // reads nor writes the record.
     val recordPath = s"$rootDir/bronze/${ExtractRecord.Name}"
-    val prior = if (statePath.isEmpty) ExtractRecord.empty else ExtractRecord.read(spark, recordPath)
+    val prior = statePath.map(_ => ExtractRecord.read(spark, recordPath))
 
     // ---------- EXTRACT (main.py:31-50) ----------
     // Series control table: enabled flag is case-insensitive {"true","1","yes"} (P3).
     // The same bytes parse to the same list, so a recorded digest stands in for the read.
     val seriesDigest = ExtractRecord.fileSha256(spark, seriesCsvPath)
-    val seriesCfg = prior.series(seriesDigest).getOrElse(
+    val seriesCfg = prior.flatMap(_.series(seriesDigest)).getOrElse(
       spark.read.option("header", "true").csv(seriesCsvPath)
         .filter(lower(col("enabled")).isin("true", "1", "yes"))
         .select(col("series_id").cast("long"), col("series_name"))
         .collect() // control table: O(series), driver-side by design
         .map(r => (r.getAs[Long](0), r.getString(1))).toSeq)
-    // The incremental path (mark set, store present): only here may an
-    // empty increment leave a silver store, and a source replay, as it is.
-    val silverPath = s"$rootDir/silver/bcb_sgs.parquet"
-    val bcbIncremental = state.bcbLastDate.isDefined && pathExists(spark, silverPath)
-    // Partition-parallel fetch (SURVEY §2.1-S1): the reference loops
-    // series sequentially on the driver (main.py:36-41); here each
-    // fetch + bronze write runs on a bounded thread pool, so wall-clock
-    // stays ~flat as the series count grows. SparkSession is
-    // thread-safe; per-series outputs go to disjoint bronze paths. Any
-    // fetch failure propagates (fail-fast, like the sequential loop).
-    // Each series yields its silver frame, its bronze row count, which
-    // a Dataset.observe takes on the bronze write itself (no extra scan),
-    // and its record entry.
-    val bcbFrames = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(8, seriesCfg.length)))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val futures = seriesCfg.map { case (id, name) =>
-          scala.concurrent.Future {
-            val payload = fetcher.fetch(BcbSource.url(id, cfg.startDate, cfg.endDate))
-            val (table, digest, mark) = (s"bcb_sgs_$id", ExtractRecord.sha256(payload), state.bcbMark(id))
-            val bronzePath = s"$rootDir/bronze/$table.parquet"
-            if (bcbIncremental && prior.replays(table, digest, mark, dataFiles(spark, bronzePath)))
-              (Silver.toSilverBcb(BcbSource.fromPayload(spark, "[]", id), name), 0L,
-                table -> prior.sources(table))
-            else {
-              val bronze0 = BcbSource.fromPayload(spark, payload, id)
-              // Incremental: only rows past the series' mark flow downstream.
-              val bronze = mark match {
-                case Some(d) => bronze0.filter(col("date") > lit(d).cast("timestamp"))
-                case None => bronze0
-              }
-              val written = org.apache.spark.sql.Observation()
-              bronze.observe(written, count(lit(1)).as("rows"))
-                .write.mode("overwrite").parquet(bronzePath)
-              // a count Spark did not report reads as "some rows": merge
-              val rows = written.get.get("rows").fold(1L)(_.asInstanceOf[Long])
-              (Silver.toSilverBcb(bronze, name), rows, table ->
-                ExtractRecord.Source(digest, mark, Some(rows), dataFiles(spark, bronzePath)))
-            }
-          }
-        }
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration.Inf)
-        catch { case e: Throwable =>
-          // fail-fast must not leave orphaned futures writing bronze
-          // paths that a retry of run() would race: interrupt the pool
-          // and wait for in-flight writes to wind down before rethrowing
-          pool.shutdownNow()
-          if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES))
-            System.err.println(
-              "[pipeline] WARNING: fetch pool did not quiesce within 5 min; " +
-                "an in-flight bronze write may race a retried run")
-          throw e
-        }
-      } finally pool.shutdown()
-    }
-    val bcbIncrement = bcbFrames.map(_._1).reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemas.bcb))
-
-    // Incremental merge: an increment is rows PAST the high-water mark,
-    // so downstream tiers must see prior history plus the increment —
-    // a full-replace write of just the increment would destroy every
-    // previously loaded row. The silver store is the durable merge
-    // target; it is rewritten via temp-dir-and-swap (Spark cannot
-    // overwrite a path it is reading from), and gold/warehouse/summary
-    // recompute from the merged whole whenever it changed, so their
-    // full-replace writes stay idempotent and correct. An empty increment
-    // leaves the store as it is.
-    // The merge is belt-and-braces idempotent: even if a mark at coarser
-    // granularity than the data (or a same-day revision) lets a row
-    // through twice, the keep-first dedup on the natural key collapses
-    // it — the merged store can never hold duplicate (series_id, date)
-    // rows regardless of mark/timestamp granularity.
-    if (!bcbIncremental) swapWrite(spark, bcbIncrement, silverPath)
-    else if (bcbFrames.map(_._2).sum > 0)
-      swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
-        readStore(silverPath, schemas.bcb).unionByName(bcbIncrement),
-        keys = Seq("series_id", "date"), order = Seq(col("value"))), silverPath)
-    val bcbSilver = readStore(silverPath, schemas.bcb)
 
     // `ibge_last_sync` drives a real skip (the asymmetry vs the BCB/ANP
     // marks closed): the UF dimension changes ~never, so when the state
     // says it was synced TODAY and the bronze copy exists, the refetch is
     // skipped and bronze is served as-is. `forceDimRefresh` (or a stale /
     // absent mark, or a missing bronze file) takes the fetch path.
+    // Resolved before the extract: the ANP increment joins it.
     val today = java.time.LocalDate.now().toString
     val ufDimPath = s"$rootDir/bronze/ibge_uf_dim.parquet"
     val dimFresh = !forceDimRefresh && state.ibgeLastSync.contains(today) &&
       pathExists(spark, ufDimPath)
     val ufDim =
-      if (dimFresh) readStore(ufDimPath, schemas.dim)
+      if (dimFresh) spark.read.schema(IbgeSource.DimSchema).parquet(ufDimPath)
       else {
         val fetched = IbgeSource.fetch(spark, fetcher)
         fetched.write.mode("overwrite").parquet(ufDimPath)
         fetched
       }
 
-    // ---------- TRANSFORM (main.py:53-56) ----------
+    def store(name: String, contract: StructType, mark: Option[String],
+              keys: Seq[String], order: Column) = {
+      val path = s"$rootDir/silver/$name.parquet"
+      Store(path, contract, keys, order, mark.isDefined && pathExists(spark, path))
+    }
+    val bcb = store("bcb_sgs", Silver.BcbSchema, state.bcbLastDate,
+      Seq("series_id", "date"), col("value"))
+    val anp = store("anp_prices", Silver.AnpSchema, state.anpLastPeriod,
+      Seq("date_ref", "uf_sigla", "product"), col("price"))
+
+    // The one extract step, for every bronze source. A stateful run takes
+    // the content's digest first: content replaced after it reads as
+    // changed next time, never as the bytes recorded here. On the
+    // incremental path a source the record proves empty replays.
+    // Otherwise its parse is written to bronze, and a Dataset.observe on
+    // that write (no extra scan) counts the rows `counted` keeps.
+    def extract(s: Store, table: String, mark: Option[String], digest: => String,
+                parse: => DataFrame, counted: DataFrame => Column,
+                increment: DataFrame => DataFrame): Extracted = {
+      val bronzePath = s"$rootDir/bronze/$table.parquet"
+      val seen = prior.map(_ -> digest)
+      seen.collect { case (p, d) if s.incremental &&
+        p.replays(table, d, mark, dataFiles(spark, bronzePath)) => p.sources(table) } match {
+        case Some(entry) => Extracted(empty(spark, s.contract), 0L, Some(table -> entry))
+        case None =>
+          val bronze = parse
+          val written = org.apache.spark.sql.Observation()
+          bronze.observe(written, count(when(counted(bronze), 1)).as("rows"))
+            .write.mode("overwrite").parquet(bronzePath)
+          // a count Spark did not report reads as "some rows": merge
+          val rows = written.get.get("rows").fold(1L)(_.asInstanceOf[Long])
+          Extracted(increment(bronze), rows, seen.map { case (_, d) =>
+            table -> ExtractRecord.Source(d, mark, Some(rows), dataFiles(spark, bronzePath)) })
+      }
+    }
+    def pastMark(c: Column, mark: Option[String]) =
+      mark.fold(lit(true))(d => c > lit(d).cast("timestamp"))
+
+    // Partition-parallel fetch (SURVEY §2.1-S1): the reference loops
+    // series sequentially on the driver (main.py:36-41); here each
+    // fetch + bronze write runs on a bounded thread pool (`onPool`), so
+    // wall-clock stays ~flat as the series count grows. Only rows past a
+    // series' mark flow downstream.
+    //
     // ANP incremental (reference state stub state/state.json:1-5): the
     // bronze CSV is always re-read in full (it is a file drop), but only
     // rows past `anp_last_period` flow into the increment — the same
     // high-water-mark pushdown as the BCB path, applied right after the
     // silver projection so Catalyst pushes the date_ref predicate below
-    // the enrich join. The durable silver store merges increment +
-    // history with the same natural-key dedup as BCB. A drop whose
-    // digest the record holds with 0 rows past the same mark replays.
+    // the enrich join.
     //
     // SEMANTIC TRADE (inherent to any high-water-mark scheme): a later
     // CSV drop that REVISES or backfills a row at date_ref <= mark is
@@ -529,43 +489,27 @@ object Pipeline {
     // skipping old periods. Sources that revise history should run
     // without statePath (full reprocess, the reference's own behavior)
     // or reset state.json; append-only drops get the fast path.
-    def pastAnpMark(df: DataFrame): DataFrame = state.anpLastPeriod match {
-      case Some(p) => df.filter(col("date_ref") > lit(p).cast("timestamp"))
-      case None => df
-    }
-    val anpPath = s"$rootDir/silver/anp_prices.parquet"
-    val anpBronze = s"$rootDir/bronze/anp_raw.parquet"
-    val anpIncremental = state.anpLastPeriod.isDefined && pathExists(spark, anpPath)
-    // digested before the read: a drop replaced after the digest is seen
-    // as changed by the next run, never as the bytes recorded here
-    val anpDigest = statePath.map { _ =>
-      CsvDialect.requireExists(spark, cfg.anpBronzeFile)
-      ExtractRecord.fileSha256(spark, cfg.anpBronzeFile)
-    }
-    val anpReplay = anpIncremental && anpDigest.exists(
-      prior.replays("anp_raw", _, state.anpLastPeriod, dataFiles(spark, anpBronze)))
-    def increment(raw: DataFrame) = pastAnpMark(Silver.enrichUf(Silver.toSilverAnp(raw), ufDim))
-    // the increment, and its row count when one was taken (0 on a replay)
-    val (anpIncrement, anpRows) =
-      if (anpReplay) (increment(emptyAnpRaw(spark)), Some(0L))
-      else {
-        val anpRaw = CsvDialect.read(spark, cfg.anpBronzeFile)
-        anpRaw.write.mode("overwrite").parquet(anpBronze)
-        // the dedup and the left enrich join drop no key, so the rows
-        // before them answer "any new row?" with a scan, not a shuffle
-        (increment(anpRaw),
-          if (anpIncremental && pastAnpMark(Silver.anpRows(anpRaw)).isEmpty) Some(0L) else None)
-      }
-    if (!anpIncremental) swapWrite(spark, anpIncrement, anpPath)
-    else if (!anpRows.contains(0L))
-      swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
-        readStore(anpPath, schemas.anp).unionByName(anpIncrement),
-        keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price"))), anpPath)
-    val anpSilver = readStore(anpPath, schemas.anp)
-    val extracted = ExtractRecord(Some(seriesDigest -> seriesCfg),
-      bcbFrames.map(_._3).toMap ++ anpDigest.map(d => "anp_raw" -> (
-        if (anpReplay) prior.sources("anp_raw")
-        else ExtractRecord.Source(d, state.anpLastPeriod, anpRows, dataFiles(spark, anpBronze)))))
+    val anpMark = state.anpLastPeriod
+    val outs = onPool(seriesCfg.map { case (id, name) => () =>
+      val payload = fetcher.fetch(BcbSource.url(id, cfg.startDate, cfg.endDate))
+      val mark = state.bcbMark(id)
+      extract(bcb, s"bcb_sgs_$id", mark, ExtractRecord.sha256(payload),
+        BcbSource.fromPayload(spark, payload, id).filter(pastMark(col("date"), mark)),
+        _ => lit(true), Silver.toSilverBcb(_, name))
+    } :+ { () =>
+      extract(anp, "anp_raw", anpMark,
+        { CsvDialect.requireExists(spark, cfg.anpBronzeFile)
+          ExtractRecord.fileSha256(spark, cfg.anpBronzeFile) },
+        CsvDialect.read(spark, cfg.anpBronzeFile),
+        raw => { val p = Silver.anpParse(raw); Silver.anpValid(p) && pastMark(p("date_ref"), anpMark) },
+        raw => Silver.enrichUf(Silver.toSilverAnp(raw), ufDim).filter(pastMark(col("date_ref"), anpMark)))
+    })
+    val (bcbOuts, anpOut) = (outs.init, outs.last)
+    val bcbIncrement = bcbOuts.map(_.increment).reduceOption(_ unionByName _)
+      .getOrElse(empty(spark, Silver.BcbSchema))
+    val bcbSilver = merge(spark, bcb, bcbIncrement, bcbOuts.map(_.rows).sum)
+    val anpSilver = merge(spark, anp, anpOut.increment, anpOut.rows)
+    val extracted = ExtractRecord(Some(seriesDigest -> seriesCfg), outs.flatMap(_.entry).toMap)
 
     // ---------- GOLD (main.py:59) ----------
     val gold = Silver.buildGold(bcbSilver, anpSilver)
@@ -590,7 +534,7 @@ object Pipeline {
     val summaryPath = s"$rootDir/gold/summary.md"
     val targets = tables.map(_._1) :+ summaryPath
     val inputs = JObject(
-      "files" -> JObject(Seq(silverPath, anpPath, ufDimPath).map(p => p -> dataFiles(spark, p)): _*),
+      "files" -> JObject(Seq(bcb.path, anp.path, ufDimPath).map(p => p -> dataFiles(spark, p)): _*),
       "targets" -> JArray(targets.map(JString(_)).toList))
     val inputsPath = s"$rootDir/$TierInputsName"
     // the committed record, when it vouches for this run's inputs
@@ -633,7 +577,7 @@ object Pipeline {
       ExtractRecord.write(spark, recordPath, extracted)
     }
 
-    Result(bcbSilver, bcbIncrement, anpSilver, anpIncrement, ufDim, gold, summary)
+    Result(bcbSilver, bcbIncrement, anpSilver, anpOut.increment, ufDim, gold, summary)
   }
 
   /** The marks after this run: per-series BCB max date (plus their max,
@@ -656,30 +600,65 @@ object Pipeline {
       bcbSeriesLastDate = bcbSeries)
   }
 
-  /** The schemas the two silver stores and the UF dimension are written
-    * with, nullable as a parquet read returns them: each is the writing
-    * transform's analyzed output over an empty typed input, so deriving
-    * it runs no job and a change to the writer moves it too. The tier
-    * reads declare them, which spares a schema-inference job per read. */
-  private[graft] final case class StoreSchemas(bcb: StructType, anp: StructType, dim: StructType)
-
-  private[graft] def storeSchemas(spark: SparkSession): StoreSchemas = {
-    val dim = IbgeSource.fromPayload(spark, "[]")
-    def nullable(df: DataFrame) = org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(df.schema)
-    StoreSchemas(
-      bcb = nullable(Silver.toSilverBcb(BcbSource.fromPayload(spark, "[]", 0L), "")),
-      anp = nullable(Silver.enrichUf(Silver.toSilverAnp(emptyAnpRaw(spark)), dim)),
-      dim = nullable(dim))
+  /** Merge this run's `increment` into a silver store and read the store
+    * back under its contract. An increment is rows PAST the high-water
+    * mark, so downstream tiers must see prior history plus the increment:
+    * off the incremental path the increment replaces the store; on it, a
+    * positive count (`rows`) rewrites the store as store ∪ increment,
+    * deduplicated keep-first on the natural key, and an empty increment
+    * leaves the store as it is. The rewrite goes through [[swapWrite]]
+    * (Spark cannot overwrite a path it is reading from), and gold,
+    * warehouse and summary recompute from the merged whole whenever it
+    * changed, so their full-replace writes stay idempotent and correct.
+    * The dedup is belt-and-braces: even if a mark at coarser granularity
+    * than the data (or a same-day revision) lets a row through twice, the
+    * merged store can never hold duplicate natural keys. */
+  private def merge(spark: SparkSession, s: Store, increment: DataFrame, rows: Long): DataFrame = {
+    def read() = spark.read.schema(s.contract).parquet(s.path)
+    if (!s.incremental) swapWrite(spark, increment, s.path)
+    else if (rows > 0)
+      swapWrite(spark, graft.operators.Relational.dedupKeepFirst(
+        read().unionByName(increment), s.keys, Seq(s.order)), s.path)
+    read()
   }
 
-  /** A 0-row ANP drop with the header the resolver maps first: each
-    * rule's first exact name, as a string column like every CSV column. */
-  private def emptyAnpRaw(spark: SparkSession): DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-    StructType(graft.silver.HeaderResolver.AnpRules.map { r =>
-      StructField(r.steps.collectFirst { case graft.silver.HeaderResolver.Exact(n, _*) => n }
-        .getOrElse(sys.error(s"no exact name for ${r.logical}")), StringType)
-    }))
+  /** `tasks`' results in order, run on a pool of at most 8 threads
+    * (SparkSession is thread-safe; each task writes its own bronze path).
+    * Fail-fast: the first failure propagates, like the reference's
+    * sequential loop — but orphaned futures must not keep writing bronze
+    * paths that a retry of run() would race, so the pool is interrupted
+    * and in-flight writes wind down before the rethrow. */
+  private def onPool[T](tasks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, math.min(8, tasks.length)))
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try {
+      val futures = tasks.map(t => scala.concurrent.Future(t()))
+      try scala.concurrent.Await.result(
+        scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
+      catch { case e: Throwable =>
+        pool.shutdownNow()
+        if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES))
+          System.err.println(
+            "[pipeline] WARNING: fetch pool did not quiesce within 5 min; " +
+              "an in-flight bronze write may race a retried run")
+        throw e
+      }
+    } finally pool.shutdown()
+  }
+
+  /** A 0-row frame of `schema` (a local relation: no job). */
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of[Row](), schema)
+
+  /** The schemas the two silver stores and the UF dimension are written
+    * with, nullable as a parquet read returns them: the contracts
+    * declared beside their writers, which the tier reads declare (no
+    * schema-inference job per read). */
+  private[graft] final case class StoreSchemas(bcb: StructType, anp: StructType, dim: StructType)
+
+  private[graft] def storeSchemas(spark: SparkSession): StoreSchemas =
+    StoreSchemas(Silver.BcbSchema, Silver.AnpSchema, IbgeSource.DimSchema)
 
   /** The files under `path` (Hadoop's hidden `_`/`.` files left out), as
     * sorted (name relative to `path`, length, modification time); empty
@@ -708,7 +687,7 @@ object Pipeline {
       JArray(List(JString(n), JInt(len), JInt(t))) }.toList)
 
   /** A small text file's content through the Hadoop FileSystem API. */
-  private[pipeline] def readText(spark: SparkSession, path: String): Option[String] = {
+  private[graft] def readText(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) None
@@ -716,6 +695,21 @@ object Pipeline {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     }
+  }
+
+  /** Publish a small text file at `path`: write the sibling named
+    * `tmpName(name)`, delete `path`, rename. A reader sees the old file,
+    * none, or the new one, never a torn write; a failed rename raises
+    * `failure` followed by the path. */
+  private[graft] def publishText(spark: SparkSession, path: String, text: String,
+                                 tmpName: String => String, failure: String): Unit = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    val tmp = new Path(p.getParent, tmpName(p.getName))
+    val out = fs.create(tmp, true) // creates parent dirs, overwrites
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p)) sys.error(s"$failure $p")
   }
 
   /** Scheme-aware existence check through the Hadoop FileSystem API —

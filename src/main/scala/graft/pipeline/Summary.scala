@@ -6,7 +6,6 @@ import java.util.Locale.ROOT
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Exact
 import graft.operators.Relational
 import graft.silver.Silver
 
@@ -18,7 +17,7 @@ import graft.silver.Silver
   * Everything aggregates in Spark first — only the final handful of rows
   * is collected (the report is inherently driver-side); formatting is
   * locale-pinned (`Locale.ROOT`) so pt-BR JVMs don't flip decimal commas.
-  * The ANP monthly means are the gold marts' exact means (same scale), so
+  * The ANP monthly means are the gold mart's ([[Silver.anpMonthly]]), so
   * the text does not depend on merge order either.
   */
 object Summary {
@@ -75,11 +74,8 @@ object Summary {
       if (valid.isEmpty) {
         lines += "ANP - Sem dados válidos para o período."
       } else {
-        val monthly = valid
-          .withColumn("month", date_trunc("month", col("date_ref")))
-          .groupBy(col("uf_sigla"), col("product"), col("month"))
-          .agg(Exact.exactAvg(col("price"), Silver.GoldAvgScale).as("avg_price"))
-        val mom = Relational.momChange(monthly, Seq("uf_sigla", "product"), "avg_price")
+        val mom = Relational.momChange(Silver.anpMonthly(valid),
+          Seq("uf_sigla", "product"), "avg_price")
         val mx = mom.agg(max(col("month")).as("__mx"))
         val top = Relational.topK(
           mom.join(broadcast(mx), col("month") === col("__mx"))

@@ -1,7 +1,10 @@
 package graft.silver
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.Locale
 import graft.operators.Relational
@@ -11,6 +14,19 @@ import graft.operators.Relational
   * All pure `DataFrame => DataFrame`; Catalyst keeps pushdown freedom.
   */
 object Silver {
+
+  /** The BCB silver contract, [[toSilverBcb]]'s output nullable as a
+    * parquet read returns it: the store's read schema, and the type of
+    * an empty increment. */
+  val BcbSchema: StructType = new StructType()
+    .add("series_id", LongType).add("series_name", StringType)
+    .add("date", TimestampType).add("value", DoubleType)
+
+  /** The ANP silver contract, [[enrichUf]] over [[toSilverAnp]], likewise. */
+  val AnpSchema: StructType = new StructType()
+    .add("uf_sigla", StringType).add("product", StringType)
+    .add("date_ref", TimestampType).add("price", DoubleType)
+    .add("uf_nome", StringType).add("regiao_nome", StringType)
 
   /** BCB silver (transform.py:8-14): attach series_name, dedup on
     * (series_id, date), drop null dates, fixed projection.
@@ -34,18 +50,28 @@ object Silver {
       keys = Seq("date_ref", "uf_sigla", "product"), order = Seq(col("price")))
 
   /** [[toSilverAnp]] before its dedup: every parsed row that passes the
-    * quality filters. Non-empty exactly when the silver is, at the cost
-    * of a scan instead of a shuffle. */
-  def anpRows(raw: DataFrame): DataFrame = {
+    * quality filters. */
+  def anpRows(raw: DataFrame): DataFrame =
+    raw.select(anpParse(raw).map { case (n, c) => c.as(n) }.toSeq: _*).filter(anpValid(col))
+
+  /** The drop's logical columns, by name, as expressions over `raw`'s
+    * physical header (fuzzy-resolved): the parse of [[anpRows]], usable
+    * over the raw rows themselves, e.g. to count on the bronze write. */
+  def anpParse(raw: DataFrame): ListMap[String, Column] = {
     val m = HeaderResolver.resolve(raw.columns.toSeq)
-    raw.select(
-      upper(trim(col(m("uf_sigla")).cast("string"))).as("uf_sigla"),
-      trim(col(m("product")).cast("string")).as("product"),
-      Locale.dayFirstTimestamp(trim(col(m("date_ref")).cast("string"))).as("date_ref"),
-      Locale.localeAwareDouble(trim(col(m("price")).cast("string"))).as("price"))
-      .na.drop(Seq("date_ref", "uf_sigla", "product", "price"))
-      .filter(col("price") > 0)
+    def text(logical: String) = trim(col(m(logical)).cast("string"))
+    ListMap(
+      "uf_sigla" -> upper(text("uf_sigla")),
+      "product" -> text("product"),
+      "date_ref" -> Locale.dayFirstTimestamp(text("date_ref")),
+      "price" -> Locale.localeAwareDouble(text("price")))
   }
+
+  /** The quality filters of [[anpRows]] over parsed columns `c`: no null
+    * (nor a NaN price) and a positive price. */
+  def anpValid(c: String => Column): Column =
+    c("uf_sigla").isNotNull && c("product").isNotNull && c("date_ref").isNotNull &&
+      !isnan(c("price")) && c("price") > 0
 
   /** Enrich ANP silver with the UF dimension (main.py:56, J1): broadcast
     * left join on the 27-row dim. */
@@ -74,8 +100,12 @@ object Silver {
       .groupBy(col("series_id"), col("series_name"), col("month"))
       .agg(graft.functions.Exact.exactAvg(col("value"), GoldAvgScale).as("avg_value"),
         max_by(col("value"), struct(col("date"), col("value"))).as("last_value")),
-    "anp_monthly" -> anpSilver
-      .withColumn("month", date_trunc("month", col("date_ref")))
-      .groupBy(col("uf_sigla"), col("product"), col("month"))
-      .agg(graft.functions.Exact.exactAvg(col("price"), GoldAvgScale).as("avg_price")))
+    "anp_monthly" -> anpMonthly(anpSilver))
+
+  /** The exact monthly mean price per (uf_sigla, product, month): the
+    * `anp_monthly` mart, and the base of the summary's MoM changes. */
+  def anpMonthly(anp: DataFrame): DataFrame = anp
+    .withColumn("month", date_trunc("month", col("date_ref")))
+    .groupBy(col("uf_sigla"), col("product"), col("month"))
+    .agg(graft.functions.Exact.exactAvg(col("price"), GoldAvgScale).as("avg_price"))
 }

@@ -109,6 +109,11 @@ object IbgeSource {
   private val payloadSchema = StructType.fromDDL(
     "id BIGINT, sigla STRING, nome STRING, regiao STRUCT<id: BIGINT, sigla: STRING, nome: STRING>")
 
+  /** The UF dimension contract, [[fromPayload]]'s output nullable as a
+    * parquet read returns it: the read schema of its bronze copy. */
+  val DimSchema: StructType = StructType.fromDDL(
+    "uf_id BIGINT, uf_sigla STRING, uf_nome STRING, regiao_nome STRING")
+
   def fromPayload(spark: SparkSession, payload: String): DataFrame = {
     import spark.implicits._
     spark.read.schema(payloadSchema).json(Seq(payload).toDS())

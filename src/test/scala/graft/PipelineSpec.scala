@@ -731,4 +731,98 @@ class PipelineSpec extends SparkSpec {
     assert(r2.bcbIncrement.count() == 1 && r2.anpIncrement.count() == 2)
     footers()
   }
+
+  // ---- one extract step, declared contracts ----
+
+  test("every stateful run records a row count for each source it extracted, ANP included") {
+    val root = Files.createTempDirectory("graft-counted").toString
+    val statePath = s"$root/state/state.json"
+    def rows() = ExtractRecord.read(spark, s"$root/bronze/${ExtractRecord.Name}")
+      .sources.map { case (k, s) => k -> s.rows }
+    def validAnp(drop: String) = Silver.anpRows(graft.sources.CsvDialect.read(spark, drop)).count()
+    // full path: no mark, so every row that reaches silver counts (ANP
+    // before its dedup: 9 of the 12 raw rows pass the quality filters)
+    Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    assert(validAnp(cfg.anpBronzeFile) == 9)
+    assert(rows() == Map("bcb_sgs_11" -> Some(4L), "anp_raw" -> Some(9L)))
+    // incremental path: only the rows past each mark
+    val r2 = Pipeline.run(spark, bcbFetcher(withMarchRow),
+      cfg.copy(anpBronzeFile = fixture("anp_semicolon_v2.csv")), root, fixture("bcb_series.csv"),
+      Some(statePath))
+    assert(r2.bcbIncrement.count() == 1 && r2.anpIncrement.count() == 2)
+    assert(rows() == Map("bcb_sgs_11" -> Some(1L), "anp_raw" -> Some(2L)))
+  }
+
+  test("a run where only the ANP drop changed, with no row past the mark, runs 2 Spark jobs") {
+    val root = Files.createTempDirectory("graft-anp-only").toString
+    val statePath = s"$root/state/state.json"
+    val drop = Paths.get(root, "anp.csv")
+    Files.writeString(drop, fixtureText("anp_semicolon.csv"))
+    val c = cfg.copy(anpBronzeFile = drop.toString)
+    def run() = Pipeline.run(spark, fetcher, c, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    run()
+    val (bronze, tiers) = (filesUnder(root, "bronze"), tierFiles(root))
+    // a price revised before the mark: the drop's digest changes, its increment does not
+    Files.writeString(drop, fixtureText("anp_semicolon.csv").replace("15/02/2024;6,74", "15/02/2024;6,80"))
+    val (r, jobs) = withJobCount(run())
+    // the CSV header read and the bronze write, which counts the rows past the mark
+    assert(jobs == 2, s"$jobs Spark jobs ran")
+    val after = filesUnder(root, "bronze")
+    assert(rewritten(bronze, after, "anp_raw.parquet"), "ANP did not extract")
+    assert(under(after, "bcb_sgs_11.parquet") == under(bronze, "bcb_sgs_11.parquet"))
+    assert(tierFiles(root) == tiers, "a tier file was rewritten")
+    assert(ExtractRecord.read(spark, s"$root/bronze/${ExtractRecord.Name}")
+      .sources("anp_raw").rows.contains(0L))
+    assert(r.summary == GoldenSummary && r.anpIncrement.isEmpty)
+  }
+
+  test("each declared contract equals its writer's output over an empty input, made nullable") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.asNullable
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import graft.silver.HeaderResolver
+    val dim = IbgeSource.fromPayload(spark, "[]")
+    // a 0-row drop with the header the resolver maps first: each rule's
+    // first exact name, as a string column like every CSV column
+    val drop = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      StructType(HeaderResolver.AnpRules.map { r =>
+        StructField(r.steps.collectFirst { case HeaderResolver.Exact(n, _*) => n }.get, StringType)
+      }))
+    val derived = Seq(
+      Silver.toSilverBcb(BcbSource.fromPayload(spark, "[]", 0L), "") -> Silver.BcbSchema,
+      Silver.enrichUf(Silver.toSilverAnp(drop), dim) -> Silver.AnpSchema,
+      dim -> IbgeSource.DimSchema)
+    for ((writer, contract) <- derived) assert(asNullable(writer.schema) == contract)
+    val declared = Pipeline.storeSchemas(spark)
+    assert(Seq(declared.bcb, declared.anp, declared.dim) == derived.map(_._2))
+  }
+
+  test("a record whose ANP entry holds no count still parses: BCB replays, ANP extracts once, then replays") {
+    val root = Files.createTempDirectory("graft-record-null").toString
+    val statePath = s"$root/state/state.json"
+    def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    run()
+    val record = Paths.get(root, "bronze", ExtractRecord.Name)
+    val counted = ExtractRecord.read(spark, record.toString)
+    // the record as it reads with an ANP entry whose rows were not counted
+    ExtractRecord.write(spark, record.toString, counted.copy(sources = counted.sources
+      .updated("anp_raw", counted.sources("anp_raw").copy(rows = None))))
+    assert(Files.readString(record).matches(""".*"anp_raw":\{[^}]*"rows":null,.*"""))
+    val rec = ExtractRecord.read(spark, record.toString)
+    assert(rec.sources("anp_raw").rows.isEmpty && rec.sources("bcb_sgs_11").rows.contains(0L))
+    val (bronze, tiers) = (filesUnder(root, "bronze"), tierFiles(root))
+    val (_, jobs) = withJobCount(run())
+    assert(jobs > 0)
+    val after = filesUnder(root, "bronze")
+    assert(rewritten(bronze, after, "anp_raw.parquet"), "ANP did not extract")
+    assert(under(after, "bcb_sgs_11.parquet") == under(bronze, "bcb_sgs_11.parquet"), "BCB did not replay")
+    assert(tierFiles(root) == tiers, "a tier file was rewritten")
+    assert(ExtractRecord.read(spark, record.toString).sources("anp_raw").rows.contains(0L))
+    val files = filesUnder(root)
+    val (r4, jobs4) = withJobCount(run())
+    assert(jobs4 == 0, s"$jobs4 Spark jobs ran")
+    assert(filesUnder(root) == files)
+    assert(r4.summary == GoldenSummary)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Benchmark main. Executes every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
@@ -30,30 +29,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *    and the BPE serve path) are additionally timed probe-only against
   *    the already-built index, so the serving-path latency (the pruned
   *    index READ) is a committed number of its own, separate from the
-  *    honest one-shot build+write the registry entry measures.
+  *    honest one-shot build+write the registry entry measures;
+  *  - MEMORY (VERDICT r7 #6): each query's timed runs and extra sample
+  *    are one [[JobProfile]] run, whose max task peakExecutionMemory and
+  *    total spill are the query's `peak_mem` and `spill_bytes` — a
+  *    pressure blowup (round-7's 15x q90 under a contended block
+  *    manager) is attributable from the BENCHOUT artifact alone. Each
+  *    task is charged to the run that submitted its stage, and the
+  *    listener-bus drain runs after the timed region.
   */
-  /** Per-query memory observability (VERDICT r7 #6): max task
-    * peakExecutionMemory and total spill bytes, accumulated from
-    * SparkListenerTaskEnd between resets. Makes a pressure blowup
-    * (round-7's 15x q90 under a contended block manager) attributable
-    * from the BENCHOUT artifact alone. Listener-bus delivery is async,
-    * so a task straggling past the reset can attribute to the next
-    * query — advisory precision, fine for triage. */
-  private final class PeakMemListener extends SparkListener {
-    @volatile private var peak = 0L
-    @volatile private var spill = 0L
-    def reset(): Unit = synchronized { peak = 0L; spill = 0L }
-    def peakExecutionMemory: Long = peak
-    def spillBytes: Long = spill
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
-      val m = te.taskMetrics
-      if (m != null) {
-        peak = math.max(peak, m.peakExecutionMemory)
-        spill += m.memoryBytesSpilled + m.diskBytesSpilled
-      }
-    }
-  }
-
 object Bench {
 
   /** 1-minute system load average — recorded per query and around the
@@ -94,8 +78,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     val spark = GraftSession()
-    val mem = new PeakMemListener
-    spark.sparkContext.addSparkListener(mem)
+    val profile = JobProfile(spark)
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -135,28 +118,30 @@ object Bench {
       System.gc()
       run(q.fn) // untimed warm-up: codegen/JIT compile
       loads(name) = loadAvg() // ambient load entering the timed runs
-      mem.reset() // measure timed runs only, not warm-up JIT churn
-      val times = (1 to iters).map { _ =>
-        // Queries may persist() diamond subtrees; without this the timed
-        // runs would read the warm-up's InMemoryRelation and skip the
-        // very work the bench claims to measure.
-        spark.catalog.clearCache()
-        run(q.fn)
+      // one profiled run over the timed runs, not the warm-up's JIT churn
+      val (all, mem) = profile.run(name) {
+        val times = (1 to iters).map { _ =>
+          // Queries may persist() diamond subtrees; without this the timed
+          // runs would read the warm-up's InMemoryRelation and skip the
+          // very work the bench claims to measure.
+          spark.catalog.clearCache()
+          run(q.fn)
+        }
+        // Sub-second queries are scheduling-latency-bound, where one
+        // stray GC or scheduler hiccup is a 2x outlier — exactly the
+        // band the regression gate's 0.75 s floor sits in. Buy them one
+        // extra sample (pennies on the suite total) so the reported min
+        // is a stable point, not a coin flip.
+        val extra = if (!times.contains(-1.0) && times.min < 1.2) {
+          spark.catalog.clearCache()
+          Seq(run(q.fn))
+        } else Seq.empty
+        times ++ extra
       }
-      // Sub-second queries are scheduling-latency-bound, where one
-      // stray GC or scheduler hiccup is a 2x outlier — exactly the
-      // band the regression gate's 0.75 s floor sits in. Buy them one
-      // extra sample (pennies on the suite total) so the reported min
-      // is a stable point, not a coin flip.
-      val extra = if (!times.contains(-1.0) && times.min < 1.2) {
-        spark.catalog.clearCache()
-        Seq(run(q.fn))
-      } else Seq.empty
-      val all = times ++ extra
       val t = if (all.contains(-1.0)) -1.0 else all.min
       // samples recorded per query (ADVICE r7: the extra-sample rule
       // changes min-statistics — cross-run comparisons need to see it);
-      // peak/spill from the listener attribute pressure blowups.
+      // peak/spill from the profile attribute pressure blowups.
       (name, t, all.size, mem.peakExecutionMemory, mem.spillBytes)
     }
 
@@ -204,7 +189,6 @@ object Bench {
         (builder, if (times.contains(-1.0)) -1.0 else times.min)
       }
 
-    val results2 = defended
     // Seconds are printed at ms precision (r14, VERDICT r13 #4): the
     // driver captures a bounded stdout TAIL, and full-precision doubles
     // made the one-line JSON long enough to truncate mid-line in rounds
@@ -212,17 +196,14 @@ object Bench {
     // UNCHANGED — min-of-2 noop-sink runs — only the printed precision
     // shrinks (a bench resolves nothing below a millisecond anyway).
     def ms(v: Double): Double = if (v < 0) v else math.rint(v * 1000) / 1000
-    val qs = results2.map { case (k, v, _, _, _) => s"\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    val samplesJson = results2.map { case (k, _, n, _, _) => s"\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    val peakJson = results2.map { case (k, _, _, p, _) => s"\"" + k + "\":" + p }
-      .mkString("{", ",", "}")
-    val spillJson = results2.map { case (k, _, _, _, s) => s"\"" + k + "\":" + s }
-      .mkString("{", ",", "}")
-    val loadJson = results2.map { case (k, _, _, _, _) =>
-      s"\"" + k + "\":" + loads.getOrElse(k, -1.0) }
-      .mkString("{", ",", "}")
+    // one JSON object per field, keyed by query name
+    def perQuery(field: ((String, Double, Int, Long, Long)) => Any): String =
+      defended.map(r => s"\"" + r._1 + "\":" + field(r)).mkString("{", ",", "}")
+    val qs = perQuery(r => ms(r._2))
+    val samplesJson = perQuery(_._3)
+    val peakJson = perQuery(_._4)
+    val spillJson = perQuery(_._5)
+    val loadJson = perQuery(r => loads.getOrElse(r._1, -1.0))
     val retriedJson = retried.map { case (k, (suite, retry, l)) =>
       s"\"$k\":{\"suite\":${ms(suite)},\"retry\":${ms(retry)},\"load\":$l}" }
       .mkString("{", ",", "}")
@@ -231,9 +212,9 @@ object Bench {
     // A broken query must not silently vanish from the bench: failed
     // names are reported explicitly (their per-query value is -1), so a
     // smaller total can never masquerade as a speedup.
-    val failed = results2.collect { case (k, v, _, _, _) if v < 0 => k }
+    val failed = defended.collect { case (k, v, _, _, _) if v < 0 => k }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results2.map(_._2).filter(_ >= 0).sum
+    val total = defended.map(_._2).filter(_ >= 0).sum
     val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,""" +
       s""""failed":$failedJson,"samples":$samplesJson,"peak_mem":$peakJson,""" +
       s""""spill_bytes":$spillJson,"load":$loadJson,"retried":$retriedJson,""" +

@@ -39,63 +39,23 @@ object Explain {
         }
       case "profile" :: names :: sfDir :: Nil =>
         // Per-JOB wall-clock profile of queries (dev-only; the bench
-        // never runs this): one untimed warm-up, then a timed run with a
-        // job listener — tells driver-loop queries where their seconds
-        // go (job count x scheduling floor vs one dominant job), which
+        // never runs this): one untimed warm-up, then a timed run through
+        // JobProfile — tells driver-loop queries where their seconds go
+        // (job count x scheduling floor vs one dominant job), which
         // explain() cannot show once subtrees hide behind checkpoints.
-        // Only jobs submitted under the timed run's local property count:
-        // a warm-up job whose end event the listener sees late is not one.
-        val RunKey = "graft.profile.run"
-        val jobs = collection.mutable.ArrayBuffer.empty[(String, Int, Long, String)]
-        val starts = collection.concurrent.TrieMap.empty[Int, (String, Long, String)]
-        // a job is named by the plan part that ran it: the final stage's
-        // operator scope (`WholeStageCodegen (n)`, `Exchange`) and the SQL
-        // execution it belongs to; the call site only when no plan node
-        // built the stage (schema inference, checkpoints)
-        def label(js: org.apache.spark.scheduler.SparkListenerJobStart): String = {
-          val last = js.stageInfos.maxByOption(_.stageId)
-          val exec = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          last.flatMap(org.apache.spark.graftbridge.ScopeBridge.planScope) match {
-            case Some(scope) => exec.fold(scope)(e => s"exec $e: $scope")
-            case None => last.map(_.name).getOrElse("")
-          }
-        }
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            Option(js.properties).flatMap(p => Option(p.getProperty(RunKey)))
-              .foreach { run => starts(js.jobId) = (run, js.time, label(js)) }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            starts.remove(je.jobId).foreach { case (run, t0, nm) =>
-              jobs.synchronized { jobs += ((run, je.jobId, je.time - t0, nm)) } }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        names.split(",").map(_.trim).filter(_.nonEmpty).zipWithIndex.foreach { case (name, i) =>
+        // Only the timed run's jobs count, and the listener bus is
+        // drained before they are listed.
+        val profile = JobProfile(spark)
+        names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
           val fn = Queries.queries(name)
           fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm-up
-          val run = s"$name#$i"
-          spark.sparkContext.setLocalProperty(RunKey, run)
-          val compiled0 = org.apache.spark.graftbridge.ScopeBridge.codegenCompiles
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          // generated classes compiled in the timed run, by any thread of
-          // this JVM: 0 when every codegen body was a cache hit
-          val compiled = org.apache.spark.graftbridge.ScopeBridge.codegenCompiles - compiled0
-          spark.sparkContext.setLocalProperty(RunKey, null)
-          Thread.sleep(1000) // listener bus drain
-          val timed = jobs.synchronized(jobs.filter(_._1 == run).toList)
-          val tot = timed.map(_._3).sum
-          println(f"PROFILE $name wall=$wall%.2f s, ${timed.size} jobs, $compiled classes compiled, " +
-            f"sum(job)=${tot / 1000.0}%.2f s (gap=${wall - tot / 1000.0}%.2f s)")
-          timed.sortBy(_._2).foreach { case (_, id, ms, nm) =>
-            println(f"  job $id%4d ${ms}%6d ms  $nm") }
+          val (_, p) = profile.run(name)(
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+          val tot = p.jobs.map(_.ms).sum
+          println(f"PROFILE $name wall=${p.wallS}%.2f s, ${p.jobs.size} jobs, ${p.compiled} classes compiled, " +
+            f"sum(job)=${tot / 1000.0}%.2f s (gap=${p.wallS - tot / 1000.0}%.2f s)")
+          p.jobs.foreach(j => println(f"  job ${j.id}%4d ${j.ms}%6d ms  ${j.label}"))
         }
-        // deregister: a leaked listener double-counts jobs if another
-        // profiling pass runs in this session (ADVICE r13)
-        spark.sparkContext.removeSparkListener(listener)
       case "audit" :: sfDir :: Nil =>
         // One summary line per query: shuffle/join/agg shape + pushdown.
         println("| query | joins | aggs | exchanges | pushed filters |")

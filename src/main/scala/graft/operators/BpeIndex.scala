@@ -127,11 +127,8 @@ object BpeIndex {
     * tier. */
   def rebuildInPlace(spark: SparkSession, merges: Seq[BpeTrain.Merge],
                      name: String, dir: String): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      graft.pipeline.TierCommit.heal(spark, dir) // finish any prior commit
-      stageRebuildInPlace(spark, merges, name, dir)
-      graft.pipeline.TierCommit.commit(spark, dir, Seq(s"$dir/$name"))
-    }
+    graft.pipeline.TierCommit.replaceInPlace(spark, dir, Seq(s"$dir/$name"))(
+      stageRebuildInPlace(spark, merges, name, dir))
 
   /** The staging half of [[rebuildInPlace]] — split out so the spec
     * can stop the world at the crash point between stage and commit. */

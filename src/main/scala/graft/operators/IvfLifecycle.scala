@@ -162,18 +162,16 @@ trait IvfLifecycle {
     commitInPlace(spark, name, dir, rebuildTargets(name, dir))(
       stageRebuildWith(spark, vectors, name, dir)(geometry))
 
-  /** lock → heal → stage → commit → re-register the payload table. */
+  /** [[TierCommit.replaceInPlace]], then re-register the payload table
+    * under the same lock. */
   private def commitInPlace(spark: SparkSession, name: String, dir: String,
                             targets: Seq[String])(stage: => M): Unit =
-    TierCommit.withWriteLock(spark, dir) {
-      TierCommit.heal(spark, dir) // finish any prior commit
-      val meta = stage
-      TierCommit.commit(spark, dir, targets)
+    TierCommit.replaceInPlace(spark, dir, targets)(stage, (meta: M) => {
       // the catalog's bucket spec must describe the NEW layout (a
       // rebuild may change the bucket count); external DROP keeps files
       spark.sql(s"DROP TABLE IF EXISTS ${name}_$payload")
       ensureTable(spark, name, dir, meta.buckets)
-    }
+    })
 
   /** A rebuild or vacuum leaves no deletions behind: stage an EMPTY
     * ledger, which the same manifest promotes over the old one. */

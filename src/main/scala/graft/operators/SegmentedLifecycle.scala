@@ -176,11 +176,8 @@ trait SegmentedLifecycle {
     * inside seg=0. */
   final def compactInPlace(spark: SparkSession, name: String,
                            dir: String): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      graft.pipeline.TierCommit.heal(spark, dir) // finish any prior commit
-      stageCompactInPlace(spark, name, dir)
-      graft.pipeline.TierCommit.commit(spark, dir, Seq(s"$dir/$name"))
-    }
+    graft.pipeline.TierCommit.replaceInPlace(spark, dir, Seq(s"$dir/$name"))(
+      stageCompactInPlace(spark, name, dir))
 
   /** The staging half of [[compactInPlace]] — split out so specs can
     * stop the world at the crash point between stage and commit. */
@@ -200,11 +197,8 @@ trait SegmentedLifecycle {
   protected final def rebuildInPlaceWith(spark: SparkSession,
                                          data: DataFrame, name: String,
                                          dir: String, meta: M): Unit =
-    graft.pipeline.TierCommit.withWriteLock(spark, dir) {
-      graft.pipeline.TierCommit.heal(spark, dir) // finish any prior commit
-      stageRebuildWith(spark, data, name, dir, meta)
-      graft.pipeline.TierCommit.commit(spark, dir, Seq(s"$dir/$name"))
-    }
+    graft.pipeline.TierCommit.replaceInPlace(spark, dir, Seq(s"$dir/$name"))(
+      stageRebuildWith(spark, data, name, dir, meta))
 
   /** The staging half of [[rebuildInPlaceWith]]. */
   protected final def stageRebuildWith(spark: SparkSession,

@@ -54,7 +54,6 @@ object CuratedCorpus {
     * n_chars) and write corpus + manifest under `outDir`. Returns the
     * manifest as re-read from disk (what a release consumer sees). */
   def write(spark: SparkSession, docs: DataFrame, outDir: String): DataFrame = {
-    TierCommit.heal(spark, outDir) // finish an interrupted commit first
     // Stage 2 drop set: tiny by construction (contaminated train docs).
     // Persisted + materialized so the 5-gram window runs once even
     // though the set feeds both the ledger join and (via the stage-3
@@ -67,12 +66,10 @@ object CuratedCorpus {
       val losers = Curation.nearDupLoserIds(decon)
 
       // Per-doc verdict ledger: one boolean per cascade stage,
-      // cumulative, so the manifest is ONE conditional-sum aggregate
-      // (q48's shape) and the kept set is a filter — no per-stage
-      // recomputation. Funnel flags are pure per-doc functions, so
+      // cumulative. Funnel flags are pure per-doc functions, so
       // computing them corpus-wide gives identical values to computing
       // them on survivors only.
-      val ledger = Curation.funnelFlags(docs)
+      publish(spark, docs, Curation.funnelFlags(docs)
         .withColumn("s_train", col("doc_id") % 10 =!= 0)
         .join(contam.withColumn("__c", lit(true)), Seq("doc_id"), "left")
         .join(losers.withColumn("__l", lit(true)), Seq("doc_id"), "left")
@@ -83,29 +80,39 @@ object CuratedCorpus {
         .withColumn("s_kept",
           col("s_quality") && Curation.mixtureKeep(col("doc_id"), col("source")))
         .select("doc_id", "source", "s_train", "s_decon", "s_dedup",
-          "s_quality", "s_kept")
-        .persist()
-      try {
-        val manifest = ledger.groupBy(col("source")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("s_train"), 1L).otherwise(0L)).as("n_train"),
-          sum(when(col("s_decon"), 1L).otherwise(0L)).as("after_decontam"),
-          sum(when(col("s_dedup"), 1L).otherwise(0L)).as("after_neardup"),
-          sum(when(col("s_quality"), 1L).otherwise(0L)).as("after_quality"),
-          sum(when(col("s_kept"), 1L).otherwise(0L)).as("n_kept"))
-          .orderBy(col("source"))
-        val kept = docs.join(
-          ledger.filter(col("s_kept")).select("doc_id"), Seq("doc_id"), "left_semi")
-
-        // both tables staged, then published by ONE commit point: a
-        // crash anywhere leaves the old corpus beside its old manifest
-        // or (after heal) the new corpus beside its new manifest
-        val (docsOut, manifestOut) = (s"$outDir/docs", s"$outDir/manifest")
-        TierCommit.stageDf(spark, kept, docsOut, partitionBy = Seq("source"))
-        TierCommit.stageDf(spark, manifest, manifestOut)
-        TierCommit.commit(spark, outDir, Seq(docsOut, manifestOut))
-      } finally ledger.unpersist()
+          "s_quality", "s_kept"), outDir)
     } finally contam.unpersist()
     spark.read.parquet(s"$outDir/manifest")
+  }
+
+  /** Publish a curated corpus under `outDir` from its per-doc verdict
+    * `ledger` (doc_id, source and the cumulative stage flags s_train,
+    * s_decon, s_dedup, s_quality, s_kept): `docs/`, the `docs` rows the
+    * ledger keeps, and `manifest/`, ONE conditional-sum aggregate (q48's
+    * shape). The ledger is persisted for those two consumers and
+    * released. Any interrupted commit is healed first; both tables are
+    * staged, then published by ONE commit point: a crash anywhere leaves
+    * the old corpus beside its old manifest or (after heal) the new
+    * corpus beside its new manifest. */
+  private[graft] def publish(spark: SparkSession, docs: DataFrame, ledger: DataFrame,
+                             outDir: String): Unit = {
+    TierCommit.heal(spark, outDir)
+    val verdicts = ledger.persist()
+    try {
+      val manifest = verdicts.groupBy(col("source")).agg(
+        count(lit(1)).as("n_docs"),
+        sum(when(col("s_train"), 1L).otherwise(0L)).as("n_train"),
+        sum(when(col("s_decon"), 1L).otherwise(0L)).as("after_decontam"),
+        sum(when(col("s_dedup"), 1L).otherwise(0L)).as("after_neardup"),
+        sum(when(col("s_quality"), 1L).otherwise(0L)).as("after_quality"),
+        sum(when(col("s_kept"), 1L).otherwise(0L)).as("n_kept"))
+        .orderBy(col("source"))
+      val kept = docs.join(
+        verdicts.filter(col("s_kept")).select("doc_id"), Seq("doc_id"), "left_semi")
+      val (docsOut, manifestOut) = (s"$outDir/docs", s"$outDir/manifest")
+      TierCommit.stageDf(spark, kept, docsOut, partitionBy = Seq("source"))
+      TierCommit.stageDf(spark, manifest, manifestOut)
+      TierCommit.commit(spark, outDir, Seq(docsOut, manifestOut))
+    } finally verdicts.unpersist()
   }
 }

@@ -3,8 +3,6 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import scala.util.Try
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.json4s._
@@ -89,9 +87,9 @@ object ExtractRecord {
   }
 
   /** The record at `path`; [[empty]] (every source extracts) when there is
-    * none or it does not parse. */
+    * none or it cannot be read or parsed ([[Pipeline.readHint]]). */
   def read(spark: SparkSession, path: String): ExtractRecord =
-    Pipeline.readText(spark, path).flatMap(t => Try(fromJson(t)).toOption).getOrElse(empty)
+    Pipeline.readHint(spark, path)(fromJson).getOrElse(empty)
 
   /** Publish `r` at `path` ([[Pipeline.publishText]]); a record whose
     * text is already there is not rewritten. A crash between the delete
@@ -99,7 +97,7 @@ object ExtractRecord {
     * extract. */
   def write(spark: SparkSession, path: String, r: ExtractRecord): Unit = {
     val text = toJson(r)
-    if (!Pipeline.readText(spark, path).contains(text))
+    if (!Pipeline.readHint(spark, path)(identity).contains(text))
       Pipeline.publishText(spark, path, text, _ + ".__tmp", "extract record: failed to publish")
   }
 

@@ -210,6 +210,20 @@ object TierCommit {
     fsOf(spark, manifestPath(rootDir)).delete(manifestPath(rootDir), false)
   }
 
+  /** Replace `targets` under `rootDir` in place: holding the writer lock
+    * ([[withWriteLock]]), finish any prior commit ([[heal]]), run `stage`
+    * (which writes each target at its [[stagePath]]), [[commit]] the
+    * targets as one unit, then run `committed` on the stage's result
+    * before the lock is released. */
+  def replaceInPlace[T](spark: SparkSession, rootDir: String, targets: Seq[String])
+                       (stage: => T, committed: T => Unit = (_: T) => ()): Unit =
+    withWriteLock(spark, rootDir) {
+      heal(spark, rootDir)
+      val staged = stage
+      commit(spark, rootDir, targets)
+      committed(staged)
+    }
+
   val LockName = "_tier_writer.lock"
 
   private def lockPath(rootDir: String) = new Path(rootDir, LockName)
@@ -539,7 +553,7 @@ object Pipeline {
     val inputsPath = s"$rootDir/$TierInputsName"
     // the committed record, when it vouches for this run's inputs
     val unchanged = if (statePath.isEmpty || !dimFresh) None else
-      readText(spark, inputsPath).map(JsonMethods.parse(_))
+      readHint(spark, inputsPath)(JsonMethods.parse(_))
         .filter(rec => JsonMethods.compact(rec \ "inputs") == JsonMethods.compact(inputs) &&
           targets.forall { t => val p = new Path(t); fsOf(spark, p).exists(p) })
         .map(_ \ "marks")
@@ -696,6 +710,13 @@ object Pipeline {
       try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     }
   }
+
+  /** A record that only saves work (the extract record, the tier-input
+    * record), parsed by `parse`: None when it is absent, cannot be read
+    * (a checksum sidecar left stale by an edit outside the FileSystem
+    * API) or does not parse, which only makes the run do that work. */
+  private[graft] def readHint[T](spark: SparkSession, path: String)(parse: String => T): Option[T] =
+    scala.util.Try(readText(spark, path).map(parse)).toOption.flatten
 
   /** Publish a small text file at `path`: write the sibling named
     * `tmpName(name)`, delete `path`, rename. A reader sees the old file,

@@ -8,8 +8,8 @@ import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.util.Utils
 
 /** Reads what Spark keeps behind `private[spark]`: a stage's RDD
-  * operation scopes (`RDDOperationScope`), a thread's local properties
-  * and the generated-class compile count. Like
+  * operation scopes (`RDDOperationScope`), a thread's local properties,
+  * the generated-class compile count and the listener bus's drain. Like
   * [[org.apache.spark.sql.graftbridge.ColumnBridge]], the adapter lives in
   * an org.apache.spark subpackage and modifies no Spark internals. */
 object ScopeBridge {
@@ -51,4 +51,9 @@ object ScopeBridge {
   /** Generated classes compiled in this JVM so far (Janino compiles;
     * a codegen-cache hit compiles none). */
   def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Block until the listener bus of `sc` has delivered every event
+    * posted so far; a `TimeoutException` after `timeoutMillis`. */
+  def drainListenerBus(sc: SparkContext, timeoutMillis: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMillis)
 }

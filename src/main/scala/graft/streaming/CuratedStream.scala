@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, GraphOps, TextOps}
-import graft.pipeline.TierCommit
+import graft.pipeline.CuratedCorpus
 
 /** The STREAMING curated corpus — the incremental form of
   * [[graft.pipeline.CuratedCorpus.write]], composing the three streaming
@@ -74,7 +74,6 @@ object CuratedStream {
     * (no batch input — pure function of the stores, so a replayed batch
     * re-derives identical output). */
   def deriveAndWrite(spark: SparkSession, rootDir: String): Unit = {
-    TierCommit.heal(spark, s"$rootDir/curated") // finish an interrupted commit first
     val docs = spark.read.parquet(s"$rootDir/docs.parquet")
     val counts = spark.read.parquet(s"$rootDir/decontam_counts.parquet")
     val verdicts = spark.read.parquet(s"$rootDir/verdicts.parquet")
@@ -104,9 +103,9 @@ object CuratedStream {
     val losers = clusters.select(col("doc_id"))
       .join(survivors.select(col("doc_id")), Seq("doc_id"), "left_anti")
 
-    // the same per-doc verdict ledger shape as the batch write path —
-    // manifest is ONE conditional-sum aggregate, kept set is a filter
-    val ledger = docs.select(col("doc_id"), col("source"))
+    // the same per-doc verdict ledger as the batch write path, published
+    // the same way
+    CuratedCorpus.publish(spark, docs, docs.select(col("doc_id"), col("source"))
       .withColumn("s_train", !Curation.isEval(col("doc_id")))
       .join(contaminated.withColumn("__c", lit(true)), Seq("doc_id"), "left")
       .join(losers.withColumn("__l", lit(true)), Seq("doc_id"), "left")
@@ -114,25 +113,8 @@ object CuratedStream {
       .withColumn("s_decon", col("s_train") && col("__c").isNull)
       .withColumn("s_dedup", col("s_decon") && col("__l").isNull)
       .withColumn("s_quality", col("s_dedup") && coalesce(col("p_funnel"), lit(false)))
-      .withColumn("s_kept", col("s_quality") && coalesce(col("kept"), lit(false)))
-      .persist()
-    try {
-      val manifest = ledger.groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("s_train"), 1L).otherwise(0L)).as("n_train"),
-        sum(when(col("s_decon"), 1L).otherwise(0L)).as("after_decontam"),
-        sum(when(col("s_dedup"), 1L).otherwise(0L)).as("after_neardup"),
-        sum(when(col("s_quality"), 1L).otherwise(0L)).as("after_quality"),
-        sum(when(col("s_kept"), 1L).otherwise(0L)).as("n_kept"))
-        .orderBy(col("source"))
-      val kept = docs.join(ledger.filter(col("s_kept")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      // one commit point for both tables, as in the batch write path
-      val (docsOut, manifestOut) = (s"$rootDir/curated/docs", s"$rootDir/curated/manifest")
-      TierCommit.stageDf(spark, kept, docsOut, partitionBy = Seq("source"))
-      TierCommit.stageDf(spark, manifest, manifestOut)
-      TierCommit.commit(spark, s"$rootDir/curated", Seq(docsOut, manifestOut))
-    } finally ledger.unpersist()
+      .withColumn("s_kept", col("s_quality") && coalesce(col("kept"), lit(false))),
+      s"$rootDir/curated")
   }
 
   /** Wire a (doc_id, text, source) stream into the curated table. */

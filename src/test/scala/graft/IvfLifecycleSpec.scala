@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, IvfLifecycle, IvfPqIndex, Tombstones, VectorOps}
@@ -132,39 +130,25 @@ class IvfLifecycleSpec extends SparkSpec {
   }
 
   test("both runs each chain under the caller's Spark local properties") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val key = "graft.spec.both"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = seen.add(
-        Option(js.properties).flatMap(p => Option(p.getProperty(key))).getOrElse("-"))
-    }
     def chains() = IvfLifecycle.both(
       spark.range(3).filter(col("id") >= 0).collect().length,
       spark.range(4).filter(col("id") >= 0).collect().length)
-    sc.addSparkListener(listener)
+    // the pooled threads exist before the caller's run sets its property,
+    // so none of them can have inherited it
+    assert(chains() == ((3, 4)))
+    val (_, caller) = JobProfile(spark).run("caller")(assert(chains() == ((3, 4))))
+    // one job per chain
+    assert(caller.jobs.size == 2, s"jobs: ${caller.jobs}")
+    // a thread gets its own properties back after the chain
+    sc.setLocalProperty(key, "caller")
+    val captured = org.apache.spark.graftbridge.ScopeBridge.localProperties()
+    sc.setLocalProperty(key, "own")
     try {
-      // the pooled threads exist before the caller sets the property, so
-      // none of them can have inherited it
-      assert(chains() == ((3, 4)))
-      sc.setLocalProperty(key, "caller")
-      try assert(chains() == ((3, 4))) finally sc.setLocalProperty(key, null)
-      sc.setLocalProperty(key, "end")
-      try spark.range(1).collect() finally sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains("end") && System.nanoTime() < deadline) Thread.sleep(20)
-      // one job per chain
-      assert(seen.asScala.count(_ == "caller") == 2, s"job properties: $seen")
-      // a thread gets its own properties back after the chain
-      sc.setLocalProperty(key, "caller")
-      val captured = org.apache.spark.graftbridge.ScopeBridge.localProperties()
-      sc.setLocalProperty(key, "own")
-      try {
-        assert(org.apache.spark.graftbridge.ScopeBridge.withLocalProperties(captured)(
-          sc.getLocalProperty(key)) == "caller")
-        assert(sc.getLocalProperty(key) == "own")
-      } finally sc.setLocalProperty(key, null)
-    } finally sc.removeSparkListener(listener)
+      assert(org.apache.spark.graftbridge.ScopeBridge.withLocalProperties(captured)(
+        sc.getLocalProperty(key)) == "caller")
+      assert(sc.getLocalProperty(key) == "own")
+    } finally sc.setLocalProperty(key, null)
   }
 }

@@ -480,34 +480,11 @@ class PipelineSpec extends SparkSpec {
 
   // ---- per-source extract replay ----
 
-  /** `body`'s result and the number of Spark jobs it submitted, counted
-    * by a listener on a local property that the body's threads (the
-    * fetch pool included) inherit. A marker job submitted after the body
-    * is awaited: the listener bus delivers in order, so once the marker
-    * is seen, so is every job before it. */
+  /** `body`'s result and the number of Spark jobs it submitted, the
+    * fetch pool's included: one [[JobProfile]] run. */
   private def withJobCount[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val (key, tag) = ("graft.spec.jobs", java.util.UUID.randomUUID().toString)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      val out = body
-      sc.setLocalProperty(key, s"$tag#end")
-      spark.range(1).collect()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(s"$tag#end") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(s"$tag#end"), "the marker job was never seen")
-      (out, seen.asScala.count(_ == tag))
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
+    val (out, profile) = JobProfile(spark).run("spec")(body)
+    (out, profile.jobs.size)
   }
 
   /** Every regular file under `dir` (under `root`, or all of `root`). */
@@ -824,5 +801,58 @@ class PipelineSpec extends SparkSpec {
     assert(jobs4 == 0, s"$jobs4 Spark jobs ran")
     assert(filesUnder(root) == files)
     assert(r4.summary == GoldenSummary)
+  }
+
+  // ---- unreadable records ----
+
+  test("an extract record edited outside the FileSystem API reads as absent: the next run extracts, then replays") {
+    val root = Files.createTempDirectory("graft-record-stale").toString
+    val statePath = s"$root/state/state.json"
+    def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+    run()
+    run()
+    val record = Paths.get(root, "bronze", ExtractRecord.Name)
+    assert(Files.exists(record.resolveSibling(s".${ExtractRecord.Name}.crc")))
+    // the same record plus a newline: its checksum sidecar no longer matches
+    Files.writeString(record, Files.readString(record) + "\n")
+    assert(ExtractRecord.read(spark, record.toString) == ExtractRecord.empty)
+    val before = filesUnder(root, "bronze")
+    val (r, jobs) = withJobCount(run())
+    assert(jobs > 0)
+    for (t <- Seq("bcb_sgs_11.parquet", "anp_raw.parquet"))
+      assert(rewritten(before, filesUnder(root, "bronze"), t), s"$t did not extract")
+    assert(r.summary == GoldenSummary)
+    assert(ExtractRecord.read(spark, record.toString).sources.keySet == Set("bcb_sgs_11", "anp_raw"))
+    val (_, jobs2) = withJobCount(run())
+    assert(jobs2 == 0, s"$jobs2 Spark jobs ran")
+  }
+
+  test("a tier-input record that cannot be read or parsed reads as absent: the next run rebuilds the tiers") {
+    def hadoopWrite(p: Path, text: String): Unit = {
+      val hp = new org.apache.hadoop.fs.Path(p.toString)
+      val out = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(hp, true)
+      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+    }
+    val edits = Seq[(String, Path => Unit)](
+      // the same record plus a newline: its checksum sidecar no longer matches
+      "stale checksum" -> (p => Files.writeString(p, Files.readString(p) + "\n")),
+      // garbage with a matching checksum: only the parse fails
+      "garbage" -> (p => hadoopWrite(p, "not json {")))
+    for ((what, edit) <- edits) {
+      val root = Files.createTempDirectory("graft-inputs-bad").toString
+      val statePath = s"$root/state/state.json"
+      def run() = Pipeline.run(spark, fetcher, cfg, root, fixture("bcb_series.csv"), Some(statePath))
+      run()
+      run()
+      edit(Paths.get(root, Pipeline.TierInputsName))
+      val tiers = tierFiles(root)
+      val r = run()
+      val after = tierFiles(root)
+      for (t <- Seq("gold", "warehouse")) assert(rewritten(tiers, after, t), s"$what: $t was not rebuilt")
+      assert(r.summary == GoldenSummary)
+      assertTiersMatchSilver(root)
+      run()
+      assert(tierFiles(root) == after, s"$what: the rebuilt record did not vouch for the next run")
+    }
   }
 }

@@ -690,20 +690,15 @@ object CorpusQueries {
   // amortizes over every query q91 would otherwise pay a corpus scan
   // for; probe reads |query terms| / |vocabulary| of the index. Bench
   // time includes the build+write (honest one-shot cost).
-  /** (index name, index dir) for the persisted BM25 index — shared by
-    * the build+probe registry query and the probe-only bench twin. */
-  private def bm25Handle(dir: String): (String, String) =
-    ("bm25_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-bm25-index")
 
   private def bm25ProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = bm25Handle(dir)
+    val (name, idxDir) = Queries.indexHandle("bm25", dir)
     graft.operators.TextIndex.probe(spark, name, idxDir, QTerms, topk = 25)
   }
 
   private val q198 = Q(
     (spark, dir) => {
-      val (name, idxDir) = bm25Handle(dir)
+      val (name, idxDir) = Queries.indexHandle("bm25", dir)
       graft.operators.TextIndex.build(spark,
         docs(spark, dir).select(col("doc_id"), col("source"), col("text")),
         name, idxDir)
@@ -750,18 +745,15 @@ object CorpusQueries {
   // total_tokens, and every df over the remaining corpus from scratch,
   // so ANY statistics drift (a stale df, an unsubtracted dl) flips
   // score doubles corpus-wide, not just the deleted rows.
-  private def bm25DelHandle(dir: String): (String, String) =
-    ("bm25d_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-bm25d-index")
 
   private def bm25DeleteProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = bm25DelHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("bm25d", dir)
     graft.operators.TextIndex.probe(spark, name, idxDir, QTerms, topk = 25)
   }
 
   private val q218 = Q(
     (spark, dir) => {
-      val (name, idxDir) = bm25DelHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("bm25d", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       val d = docs(spark, dir)
       graft.operators.TextIndex.build(spark,
@@ -810,19 +802,15 @@ object CorpusQueries {
   // `documents WHERE source IN (...)`.
   private val Bm25PopSources = Seq("src0", "src1", "src2", "src3", "src4")
 
-  private def bm25FiltHandle(dir: String): (String, String) =
-    ("bm25f_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-bm25f-index")
-
   private def bm25FilteredProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = bm25FiltHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("bm25f", dir)
     graft.operators.TextIndex.probeWhere(spark, name, idxDir, QTerms,
       topk = 25, col("source").isin(Bm25PopSources: _*))
   }
 
   private val q221 = Q(
     (spark, dir) => {
-      val (name, idxDir) = bm25FiltHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("bm25f", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.TextIndex.build(spark,
         docs(spark, dir).select(col("doc_id"), col("source"), col("text")),
@@ -1837,10 +1825,6 @@ object CorpusQueries {
   // bytes/vector signature column), the fusion is a 50 vs 50 outer
   // join. Bench time includes both honest one-shot index builds; the
   // probe-only twin carries the serving latency.
-  private def hybHandles(dir: String): (String, String, String) =
-    ("hyb_bm25_" + math.abs(dir.hashCode).toString,
-      "hyb_sig_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-hyb-index")
 
   private def hybQuantized(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
@@ -1849,7 +1833,8 @@ object CorpusQueries {
 
   private[graft] def hybridServeOnly(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (bmName, sigName, idxDir) = hybHandles(dir)
+    val (bmName, idxDir) = Queries.indexHandle("hyb", dir, "_bm25")
+    val (sigName, _) = Queries.indexHandle("hyb", dir, "_sig")
     // lexical leg: persisted BM25 probe, ranked by its own order
     val lex = graft.operators.TextIndex
       .probe(spark, bmName, idxDir, QTerms, topk = RrfTopN)
@@ -1886,7 +1871,8 @@ object CorpusQueries {
 
   private val q212 = Q(
     (spark, dir) => {
-      val (bmName, sigName, idxDir) = hybHandles(dir)
+      val (bmName, idxDir) = Queries.indexHandle("hyb", dir, "_bm25")
+      val (sigName, _) = Queries.indexHandle("hyb", dir, "_sig")
       graft.operators.TextIndex.build(spark,
         docs(spark, dir).select(col("doc_id"), col("source"), col("text")),
         bmName, idxDir)

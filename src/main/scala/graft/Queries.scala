@@ -37,4 +37,13 @@ object Queries {
   def probeOnly: Seq[(String, (SparkSession, String) => DataFrame)] =
     VectorQueries.probeOnly ++ CorpusQueries.probeOnly ++
       TextQueries.probeOnly
+
+  /** (index name, index dir) of the persisted `kind` index over the
+    * warehouse at `dir`: `<kind><role>_<|hash of dir|>` under
+    * `<tmpdir>/graft-<kind>-index`. A builder query and its probe-only
+    * twin open the same handle; `role` tells apart the indexes one kind
+    * keeps side by side in one dir. */
+  private[graft] def indexHandle(kind: String, dir: String, role: String = ""): (String, String) =
+    (kind + role + "_" + math.abs(dir.hashCode).toString,
+      sys.props("java.io.tmpdir") + "/graft-" + kind + "-index")
 }

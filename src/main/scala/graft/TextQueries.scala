@@ -2146,12 +2146,9 @@ object TextQueries {
   // distinct-vocab memo makes repeat words a hash probe), so the
   // per-row cost at 100 TB is one grouped pass, never a per-token
   // encode. Serving twin reads the index and encodes — no training.
-  private def bpeHandle(dir: String): (String, String) =
-    ("bpe_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-bpe-index")
 
   private[graft] def bpeServeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = bpeHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("bpe", dir)
     val table = graft.operators.BpeIndex.table(spark, name, idxDir)
     val sw = docs(spark, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
@@ -2175,7 +2172,7 @@ object TextQueries {
         .filter(col("w") =!= "" && length(col("w")) <= BpeMaxWordLen)
         .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       val merges = graft.operators.BpeTrain.fit(words, BpeTrainRounds)
-      val (name, idxDir) = bpeHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("bpe", dir)
       // the harness is single-writer by construction: clear any stale
       // lock a KILLED prior run left (the operator's no-live-writer
       // assertion — TierCommit.withWriteLock's documented recovery)
@@ -2312,9 +2309,6 @@ object TextQueries {
   // verification over collisions only — independent of corpus size at
   // a fixed collision rate. Bench time includes the honest one-shot
   // build+write; the probe-only twin carries the serving latency.
-  private def ndupHandle(dir: String): (String, String) =
-    ("ndup_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-ndup-index")
 
   private def ndupSplit(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
@@ -2324,7 +2318,7 @@ object TextQueries {
   }
 
   private[graft] def ndupProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = ndupHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ndup", dir)
     graft.operators.NearDupIndex
       .probe(spark, name, idxDir, ndupSplit(spark, dir)._2)
       .orderBy(col("a_id").asc_nulls_first, col("b_id").asc_nulls_first)
@@ -2333,7 +2327,7 @@ object TextQueries {
   private val q210 = Q(
     (spark, dir) => {
       val (history, _) = ndupSplit(spark, dir)
-      val (name, idxDir) = ndupHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ndup", dir)
       // the harness is single-writer by construction: clear any stale
       // lock a KILLED prior run left (the q207 pattern)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
@@ -2381,12 +2375,9 @@ object TextQueries {
   // recursive-CTE encoder's SEGMENTS, then numbers them with
   // list_position against the same vocab list — every digest
   // hash-matched bit for bit.
-  private def bpeIdsHandle(dir: String): (String, String) =
-    ("bpeids_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-bpeids-index")
 
   private[graft] def bpeIdsServeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = bpeIdsHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("bpeids", dir)
     val table = graft.operators.BpeIndex.table(spark, name, idxDir)
     val d = docs(spark, dir)
     val enc = d.select(explode(split(col("text"), " ")).as("w"))
@@ -2419,7 +2410,7 @@ object TextQueries {
         .filter(col("w") =!= "" && length(col("w")) <= BpeMaxWordLen)
         .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       val merges = graft.operators.BpeTrain.fit(words, BpeTrainRounds)
-      val (name, idxDir) = bpeIdsHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("bpeids", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.BpeIndex.rebuildInPlace(spark, merges, name, idxDir)
       bpeIdsServeOnly(spark, dir)
@@ -2484,7 +2475,7 @@ object TextQueries {
     // and the same code path the streaming admission sink serves, so
     // the q214 oracle pins both
     val (_, batch) = ndupSplit(spark, dir)
-    val (name, idxDir) = ndupHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ndup", dir)
     graft.operators.NearDupIndex.admission(spark, name, idxDir, batch)
       .orderBy(col("doc_id").asc_nulls_first)
   }
@@ -2492,7 +2483,7 @@ object TextQueries {
   private val q214 = Q(
     (spark, dir) => {
       val (history, _) = ndupSplit(spark, dir)
-      val (name, idxDir) = ndupHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ndup", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.NearDupIndex
         .rebuildInPlace(spark, history, name, idxDir)
@@ -2542,12 +2533,9 @@ object TextQueries {
   // a broadcast anti-join on the already-pruned posting read — probe
   // cost is unchanged; the physical drop is deferred to the compaction
   // the lifecycle already schedules.
-  private def ndupDelHandle(dir: String): (String, String) =
-    ("ndupd_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-ndupd-index")
 
   private[graft] def ndupDeleteProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = ndupDelHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ndupd", dir)
     graft.operators.NearDupIndex
       .probe(spark, name, idxDir, ndupSplit(spark, dir)._2)
       .orderBy(col("a_id").asc_nulls_first, col("b_id").asc_nulls_first)
@@ -2556,7 +2544,7 @@ object TextQueries {
   private val q219 = Q(
     (spark, dir) => {
       val (history, _) = ndupSplit(spark, dir)
-      val (name, idxDir) = ndupDelHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ndupd", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.NearDupIndex
         .rebuildInPlace(spark, history, name, idxDir)

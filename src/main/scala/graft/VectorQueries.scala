@@ -1957,15 +1957,6 @@ object VectorQueries {
   // pruning, no shuffle, no training. The bench time here includes the
   // build+write (honest one-shot cost); a second probe against the
   // same index is pure read.
-  /** (index name, index dir) for the persisted serving indexes — the
-    * whole handle a probe needs; shared by the build+probe registry
-    * queries and the probe-only bench twins so they can never drift. */
-  private def ivfHandle(dir: String): (String, String) =
-    ("ivf_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-ivf-index")
-  private def ivfPqHandle(dir: String): (String, String) =
-    ("ivfpq_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-ivfpq-index")
 
   private def ivfQueryVecs(spark: SparkSession, dir: String): DataFrame =
     quantized(spark, dir).filter(col("vec_id") < 10)
@@ -1973,14 +1964,14 @@ object VectorQueries {
         col("n2").as("qn2"))
 
   private def ivfProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = ivfHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ivf", dir)
     graft.operators.IvfIndex
       .probe(spark, name, idxDir, ivfQueryVecs(spark, dir), topk = 3)
       .orderBy(col("qid"), col("cos_sim").desc_nulls_last, col("cid"))
   }
 
   private def ivfPqProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = ivfPqHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ivfpq", dir)
     val e = quantized(spark, dir)
     val corpus = e.select(col("vec_id").as("cid"), col("q").as("cq"),
       col("n2").as("cn2"))
@@ -1995,7 +1986,7 @@ object VectorQueries {
     (spark, dir) => {
       // checkpoint the training input once — the ivfTrained discipline
       val e = quantized(spark, dir).localCheckpoint()
-      val (name, idxDir) = ivfHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ivf", dir)
       graft.operators.IvfIndex.build(spark, e, name, idxDir)
       // probe discovers geometry from the persisted meta sidecar —
       // (name, dir) is the whole handle, as a serving frontend has it
@@ -2047,7 +2038,7 @@ object VectorQueries {
     (spark, dir) => {
       // checkpoint the training input once — the ivfTrained discipline
       val e = quantized(spark, dir).localCheckpoint()
-      val (name, idxDir) = ivfPqHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ivfpq", dir)
       graft.operators.IvfPqIndex.build(spark, e, name, idxDir,
         PqM, PqSubDim, PqKsub, PqIters)
       ivfPqProbeOnly(spark, dir)
@@ -2258,12 +2249,9 @@ object VectorQueries {
   // vector bytes are only ever fetched for queries x topk survivors.
   // Bench time includes the pack+write (honest one-shot cost); the
   // probe-only twin carries the serving latency.
-  private def sigHandle(dir: String): (String, String) =
-    ("sig_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-sig-index")
 
   private def sigProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = sigHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("sig", dir)
     graft.operators.SigIndex
       .probe(spark, name, idxDir, ivfQueryVecs(spark, dir), topk = 3)
       .orderBy(col("qid").asc_nulls_first, col("hamming").asc_nulls_first,
@@ -2273,7 +2261,7 @@ object VectorQueries {
   private val q203 = Q(
     (spark, dir) => {
       val e = quantized(spark, dir)
-      val (name, idxDir) = sigHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("sig", dir)
       graft.operators.SigIndex.build(spark, e, name, idxDir)
       sigProbeOnly(spark, dir)
     },
@@ -2308,12 +2296,8 @@ object VectorQueries {
         concat(col("q"), reverse(col("q")), slice(col("q"), 1, 32)).as("q"))
       .withColumn("n2", VectorOps.qnorm2(col("q")))
 
-  private def wideSigHandle(dir: String): (String, String) =
-    ("sigw_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-sigw-index")
-
   private def wideSigProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = wideSigHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("sigw", dir)
     val wq = widenedQuantized(spark, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
     graft.operators.SigIndex
@@ -2325,7 +2309,7 @@ object VectorQueries {
   private val q206 = Q(
     (spark, dir) => {
       val e = widenedQuantized(spark, dir)
-      val (name, idxDir) = wideSigHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("sigw", dir)
       graft.operators.SigIndex.build(spark, e, name, idxDir, nbits = 160)
       wideSigProbeOnly(spark, dir)
     },
@@ -2626,7 +2610,7 @@ object VectorQueries {
   private val FilterSources = Seq("src0", "src1", "src2", "src3", "src4")
 
   private def filteredAnnOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = sigHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("sig", dir)
     val probe = graft.operators.SigIndex
       .probe(spark, name, idxDir, ivfQueryVecs(spark, dir), topk = FilterM)
     // the shortlist (ids AND rescored cosines together) is COLLECTED
@@ -2656,7 +2640,7 @@ object VectorQueries {
   private val q215 = Q(
     (spark, dir) => {
       val e = quantized(spark, dir)
-      val (name, idxDir) = sigHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("sig", dir)
       graft.operators.SigIndex.build(spark, e, name, idxDir)
       filteredAnnOnly(spark, dir)
     },
@@ -2714,12 +2698,9 @@ object VectorQueries {
   // Same 25%-selectivity source set as q215, same 10 queries, k = 3.
   // Oracle: the sign-disagreement ranking restricted to the filtered
   // candidate population, rescored — q202's formula over the subset.
-  private def filtSigHandle(dir: String): (String, String) =
-    ("sigf_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-sigf-index")
 
   private def prefilteredAnnOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = filtSigHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("sigf", dir)
     graft.operators.SigIndex
       .probeWhere(spark, name, idxDir, ivfQueryVecs(spark, dir), topk = 3,
         col("source").isin(FilterSources: _*))
@@ -2732,7 +2713,7 @@ object VectorQueries {
       val src = Tables.documents(spark, dir)
         .select(col("doc_id").as("vec_id"), col("source"))
       val e = quantized(spark, dir).join(src, Seq("vec_id"))
-      val (name, idxDir) = filtSigHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("sigf", dir)
       graft.operators.SigIndex.build(spark, e, name, idxDir)
       prefilteredAnnOnly(spark, dir)
     },
@@ -2780,12 +2761,9 @@ object VectorQueries {
   // minus-deleted — q203's oracle with the deleted population (vec_id
   // ≡ 3 mod 7) excluded from the candidate side. Any tombstone leak or
   // over-delete flips a Hamming row.
-  private def sigDelHandle(dir: String): (String, String) =
-    ("sigd_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-sigd-index")
 
   private def sigDeleteProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = sigDelHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("sigd", dir)
     graft.operators.SigIndex
       .probe(spark, name, idxDir, ivfQueryVecs(spark, dir), topk = 3)
       .orderBy(col("qid").asc_nulls_first, col("hamming").asc_nulls_first,
@@ -2795,7 +2773,7 @@ object VectorQueries {
   private val q217 = Q(
     (spark, dir) => {
       val e = quantized(spark, dir)
-      val (name, idxDir) = sigDelHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("sigd", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.SigIndex.build(spark, e, name, idxDir)
       val delIds = e.filter(pmod(col("vec_id"), lit(7)) === 3)
@@ -2839,12 +2817,9 @@ object VectorQueries {
   // vectors from the candidate cells only. vacuumInPlace (spec-proven)
   // later drops the rows physically — probe answers identical before
   // and after the vacuum, ledger cleared.
-  private def ivfDelHandle(dir: String): (String, String) =
-    ("ivfd_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-ivfd-index")
 
   private def ivfDeleteProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = ivfDelHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ivfd", dir)
     graft.operators.IvfIndex
       .probe(spark, name, idxDir, ivfQueryVecs(spark, dir), topk = 3)
       .orderBy(col("qid"), col("cos_sim").desc_nulls_last, col("cid"))
@@ -2854,7 +2829,7 @@ object VectorQueries {
     (spark, dir) => {
       // checkpoint the training input once — the ivfTrained discipline
       val e = quantized(spark, dir).localCheckpoint()
-      val (name, idxDir) = ivfDelHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ivfd", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.IvfIndex.build(spark, e, name, idxDir)
       val delIds = e.filter(pmod(col("vec_id"), lit(7)) === 3)
@@ -2895,12 +2870,9 @@ object VectorQueries {
   // the build population and excludes the deleted vectors from the
   // candidate set only. Any tombstone leak surfaces as a wrong ADC
   // integer or shortlist member.
-  private def ivfPqDelHandle(dir: String): (String, String) =
-    ("ivfpqd_" + math.abs(dir.hashCode).toString,
-      sys.props("java.io.tmpdir") + "/graft-ivfpqd-index")
 
   private def ivfPqDeleteProbeOnly(spark: SparkSession, dir: String): DataFrame = {
-    val (name, idxDir) = ivfPqDelHandle(dir)
+    val (name, idxDir) = Queries.indexHandle("ivfpqd", dir)
     val e = quantized(spark, dir)
     val corpus = e.select(col("vec_id").as("cid"), col("q").as("cq"),
       col("n2").as("cn2"))
@@ -2915,7 +2887,7 @@ object VectorQueries {
     (spark, dir) => {
       // checkpoint the training input once — the ivfTrained discipline
       val e = quantized(spark, dir).localCheckpoint()
-      val (name, idxDir) = ivfPqDelHandle(dir)
+      val (name, idxDir) = Queries.indexHandle("ivfpqd", dir)
       graft.pipeline.TierCommit.breakLock(spark, idxDir)
       graft.operators.IvfPqIndex.build(spark, e, name, idxDir,
         PqM, PqSubDim, PqKsub, PqIters)

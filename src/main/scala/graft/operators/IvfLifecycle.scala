@@ -336,24 +336,13 @@ object IvfLifecycle {
 
   /** Evaluate `a` and `b` from two driver threads (two independent
     * training or write chains: the second back-fills executors the
-    * first one's round barriers leave idle). BOTH are joined before any
-    * failure is rethrown (ADVICE r13): rethrowing while the sibling
-    * still runs would let the caller release the writer lock with an
-    * orphaned Spark job still writing the staged directory. Each chain
-    * runs under the caller's Spark local properties: the pooled threads
-    * were created by someone else, so without them a job group, a
-    * scheduler pool or a profiler's tag would not reach the jobs. */
+    * first one's round barriers leave idle) through
+    * [[graft.pipeline.Pipeline.forkJoin]]: both are joined before any
+    * failure is rethrown, so the caller never releases the writer lock
+    * with an orphaned Spark job still writing the staged directory, and
+    * each chain runs under the caller's Spark local properties. */
   def both[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.Try
-    import org.apache.spark.graftbridge.ScopeBridge.{localProperties, withLocalProperties}
-    val props = localProperties()
-    val fa = Future(Try(withLocalProperties(props)(a)))
-    val fb = Future(Try(withLocalProperties(props)(b)))
-    val ra = Await.result(fa, Duration.Inf)
-    val rb = Await.result(fb, Duration.Inf)
-    (ra.get, rb.get)
+    val Seq(ra, rb) = graft.pipeline.Pipeline.forkJoin(Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 }

@@ -486,7 +486,7 @@ object Pipeline {
 
     // Partition-parallel fetch (SURVEY §2.1-S1): the reference loops
     // series sequentially on the driver (main.py:36-41); here each
-    // fetch + bronze write runs on a bounded thread pool (`onPool`), so
+    // fetch + bronze write runs on a bounded thread pool (`forkJoin`), so
     // wall-clock stays ~flat as the series count grows. Only rows past a
     // series' mark flow downstream.
     //
@@ -504,7 +504,7 @@ object Pipeline {
     // without statePath (full reprocess, the reference's own behavior)
     // or reset state.json; append-only drops get the fast path.
     val anpMark = state.anpLastPeriod
-    val outs = onPool(seriesCfg.map { case (id, name) => () =>
+    val outs = forkJoin(seriesCfg.map { case (id, name) => () =>
       val payload = fetcher.fetch(BcbSource.url(id, cfg.startDate, cfg.endDate))
       val mark = state.bcbMark(id)
       extract(bcb, s"bcb_sgs_$id", mark, ExtractRecord.sha256(payload),
@@ -636,29 +636,27 @@ object Pipeline {
     read()
   }
 
-  /** `tasks`' results in order, run on a pool of at most 8 threads
-    * (SparkSession is thread-safe; each task writes its own bronze path).
-    * Fail-fast: the first failure propagates, like the reference's
-    * sequential loop — but orphaned futures must not keep writing bronze
-    * paths that a retry of run() would race, so the pool is interrupted
-    * and in-flight writes wind down before the rethrow. */
-  private def onPool[T](tasks: Seq[() => T]): Seq[T] = {
+  /** `tasks`' results in order, run on a pool of at most 8 driver
+    * threads (SparkSession is thread-safe), each task under the caller's
+    * Spark local properties: the pooled threads were created here, so
+    * without them a job group, a scheduler pool or a profiler's tag would
+    * not reach their jobs. Every task is joined before the first failure
+    * in task order is rethrown, with no interrupt and no timeout:
+    * rethrowing while a sibling still runs would leave an orphaned Spark
+    * job writing a path that a retried run, or the caller's next step
+    * under a released lock, would race. */
+  def forkJoin[T](tasks: Seq[() => T]): Seq[T] = {
+    import org.apache.spark.graftbridge.ScopeBridge.{localProperties, withLocalProperties}
+    val props = localProperties()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, math.min(8, tasks.length)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = tasks.map(t => scala.concurrent.Future(t()))
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
-      catch { case e: Throwable =>
-        pool.shutdownNow()
-        if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES))
-          System.err.println(
-            "[pipeline] WARNING: fetch pool did not quiesce within 5 min; " +
-              "an in-flight bronze write may race a retried run")
-        throw e
-      }
+    val joined = try {
+      tasks.map(t => pool.submit(new java.util.concurrent.Callable[scala.util.Try[T]] {
+        def call() =
+          try scala.util.Success(withLocalProperties(props)(t()))
+          catch { case e: Throwable => scala.util.Failure(e) }
+      })).map(_.get)
     } finally pool.shutdown()
+    joined.map(_.get)
   }
 
   /** A 0-row frame of `schema` (a local relation: no job). */

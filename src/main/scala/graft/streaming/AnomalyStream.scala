@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming twin of q79's rolling z-score anomaly detection
   * (EventQueries): each event is scored against its user's trailing
@@ -12,11 +12,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (AnomalyStreamSpec proves flag-set equality across a mid-stream
   * batch split).
   *
-  * In-order replay contract (as NearDupStream): a user's events must
-  * arrive in (tus, event_id) order ACROSS batches; within a batch any
-  * order is fine (the group re-sorts). State per user is a bounded
-  * ring of [[Frame]] longs — O(users) state total, no growth with
-  * stream length.
+  * In-order replay contract ([[StateFold.inOrder]], marks (tus,
+  * event_id)): a user's events must arrive in (tus, event_id) order
+  * ACROSS batches; within a batch any order is fine (the group
+  * re-sorts). An exact redelivery of the last folded event adds no row;
+  * an older event raises (scored against a window that already holds
+  * later events, it would also corrupt the ring). State per user is a
+  * bounded ring of [[Frame]] longs plus the last folded mark — O(users)
+  * state total, no growth with stream length.
   */
 object AnomalyStream {
 
@@ -42,24 +45,25 @@ object AnomalyStream {
     c > 0 && d * d > BigInt(Thresh * Thresh) * c
   }
 
+  /** Per-user state: the trailing window (oldest first) and the last
+    * folded (tus, event_id). */
+  final case class AnomalyState(ring: Seq[Long], lastUs: Long, lastId: Long)
+
   /** rows: (user_id, tus_micros, event_id, vq). Emits one
-    * (user_id, event_id, anom) per input event. */
+    * (user_id, event_id, anom) per folded event. */
   def anomalies(rows: Dataset[(Long, Long, Long, Long)]): Dataset[(Long, Long, Boolean)] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[Long], (Long, Long, Boolean)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[Seq[Long]]) =>
-          var ring = state.getOption.getOrElse(Seq.empty[Long])
-          val out = it.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, _, eventId, vq) =>
-              val flag = isAnomaly(ring, vq)
-              ring = (ring :+ vq).takeRight(Frame)
-              (user, eventId, flag)
-          }
-          state.update(ring)
-          out.iterator
-      }
+    StateFold.keyed(rows, (_: (Long, Long, Long, Long))._1, OutputMode.Append()) {
+      (user: Long, slice: Seq[(Long, Long, Long, Long)], stored: Option[AnomalyState]) =>
+        val out = Seq.newBuilder[(Long, Long, Boolean)]
+        val st = StateFold.inOrder(slice, stored)(r => (r._2, r._3),
+          (_: Option[AnomalyState]).map(s => (s.lastUs, s.lastId))) {
+          case (prev, (_, tus, eventId, vq)) =>
+            val ring = prev.fold(Seq.empty[Long])(_.ring)
+            out += ((user, eventId, isAnomaly(ring, vq)))
+            Some(AnomalyState((ring :+ vq).takeRight(Frame), tus, eventId))
+        }
+        (st, out.result())
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming as-of enrichment — the third as-of form beside the
   * composed batch join (Relational.asofJoinLatest) and the native exec
@@ -19,10 +19,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * row's time IS visible (<=; within a batch the fold orders right
   * before left at equal times, the union+window form's __side rule).
   *
-  * In-order replay contract (as NearDupStream/AnomalyStream): a key's
-  * events — BOTH sides — must arrive in event-time order across
-  * batches; within a batch any order is fine (the group re-sorts).
-  * AsofStreamSpec proves stream == batch across a mid-stream split.
+  * In-order replay contract (the [[StateFold.inOrder]] rule on the
+  * right row's time alone): a key's events — BOTH sides — must arrive
+  * in event-time order across batches; within a batch any order is fine
+  * (the group re-sorts). An event before the latest folded right row
+  * raises: it is exactly the late arrival that would change an answer
+  * (a left event would miss its match, a right one would move the state
+  * back). AsofStreamSpec proves stream == batch across a mid-stream
+  * split.
   *
   * Input rows: (key, time, side, id, value) with side 0 = right
   * (value carrier), side 1 = left (event to enrich; its `value` is
@@ -40,14 +44,14 @@ object AsofStream {
     var st = state
     val out = Seq.newBuilder[(Long, Long, Long, Boolean, Double)]
     // right (side 0) before left (side 1) at equal times: <= semantics
-    events.sortBy(e => (e._2, e._3, e._4)).foreach {
-      case (k, t, 0, _, v) =>
-        st = Some((t, v)) // state only advances (in-order contract)
-      case (k, t, _, id, _) =>
-        st match {
-          case Some((rt, v)) if rt <= t => out += ((id, k, t, true, v))
-          case _                        => out += ((id, k, t, false, 0.0))
-        }
+    events.sortBy(e => (e._2, e._3, e._4)).foreach { case (k, t, side, id, v) =>
+      st.foreach { case (rt, _) =>
+        require(t >= rt, s"late event at $t after the right row at $rt") }
+      if (side == 0) st = Some((t, v)) // state only advances
+      else out += (st match {
+        case Some((_, rv)) => (id, k, t, true, rv)
+        case None          => (id, k, t, false, 0.0)
+      })
     }
     (out.result(), st)
   }
@@ -57,14 +61,9 @@ object AsofStream {
   def enrich(rows: Dataset[(Long, Long, Int, Long, Double)])
       : Dataset[(Long, Long, Long, Boolean, Double)] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double), (Long, Long, Long, Boolean, Double)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, it: Iterator[(Long, Long, Int, Long, Double)],
-         state: GroupState[(Long, Double)]) =>
-          val (out, st) = foldSlice(it.toSeq, state.getOption)
-          st.foreach(state.update)
-          out.iterator
-      }
+    StateFold.keyed(rows, (_: (Long, Long, Int, Long, Double))._1, OutputMode.Append()) {
+      (_: Long, slice: Seq[(Long, Long, Int, Long, Double)], stored: Option[(Long, Double)]) =>
+        foldSlice(slice, stored).swap
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming multi-touch attribution — the incremental twin of q124's
   * batch kernel (operators/Attribution.linearTotals): per user, touch
@@ -19,9 +18,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * arrives — trailing pending touches attribute nothing, matching
   * q124's conv_seq >= 1 filter.
   *
-  * In-order replay contract (the [[SeriesFillStream]] discipline): a
-  * user's events arrive in (time, event_id) order across batches;
-  * within a batch any order is fine (the fold re-sorts). Exact
+  * In-order replay contract ([[StateFold.inOrder]], marks (time,
+  * event_id)): a user's events arrive in (time, event_id) order across
+  * batches; within a batch any order is fine (the fold re-sorts). Exact
   * redelivery of the last-folded event is an idempotent skip; an
   * older or contradictory event fails loudly. [[AttributionStreamSpec]]
   * proves stream == batch per-channel totals across splits — including
@@ -49,55 +48,43 @@ object AttributionStream {
   /** Pure shared kernel: fold one in-order slice of
     * (micros, event_id, event_type, cents). */
   def foldSlice(obs: Seq[(Long, Long, String, Long)],
-                state: Option[AttrState]): AttrState = {
-    var st = state.getOrElse(Empty)
-    obs.sortBy(o => (o._1, o._2)).foreach { case (us, id, tpe, cents) =>
-      if (us == st.lastUs && id == st.lastId) {
-        // exact redelivery of the already-folded event: skip
-      } else {
-        require(us > st.lastUs || (us == st.lastUs && id > st.lastId),
-          s"out-of-order event ($us, $id) after (${st.lastUs}, ${st.lastId})")
-        st = (tpe, cents) match {
-          case (_, c) if c < 0L => st.copy(lastUs = us, lastId = id) // q124 drops
-          case ("purchase", c) =>
-            val m = st.pending.size.toLong
-            if (m == 0L)
-              st.copy(directN = st.directN + 1L,
-                directCents = st.directCents + c, lastUs = us, lastId = id)
-            else {
-              val share = c / m
-              val rem = c - share * m // pinned to the EARLIEST touch
-              var (vn, vc, cn, cc) = (st.viewN, st.viewCents, st.clickN, st.clickCents)
-              st.pending.zipWithIndex.foreach { case (ch, i) =>
-                val amt = share + (if (i == 0) rem else 0L)
-                if (ch == "view") { vn += 1L; vc += amt }
-                else { cn += 1L; cc += amt }
-              }
-              AttrState(Seq.empty, vn, vc, cn, cc,
-                st.directN, st.directCents, us, id)
+                state: Option[AttrState]): AttrState =
+    StateFold.inOrder(obs, state.getOrElse(Empty))(o => (o._1, o._2),
+      st => if (st == Empty) None else Some((st.lastUs, st.lastId))) {
+      case (st, (us, id, tpe, cents)) => (tpe, cents) match {
+        case (_, c) if c < 0L => st.copy(lastUs = us, lastId = id) // q124 drops
+        case ("purchase", c) =>
+          val m = st.pending.size.toLong
+          if (m == 0L)
+            st.copy(directN = st.directN + 1L,
+              directCents = st.directCents + c, lastUs = us, lastId = id)
+          else {
+            val share = c / m
+            val rem = c - share * m // pinned to the EARLIEST touch
+            var (vn, vc, cn, cc) = (st.viewN, st.viewCents, st.clickN, st.clickCents)
+            st.pending.zipWithIndex.foreach { case (ch, i) =>
+              val amt = share + (if (i == 0) rem else 0L)
+              if (ch == "view") { vn += 1L; vc += amt }
+              else { cn += 1L; cc += amt }
             }
-          case (t, _) if t == "view" || t == "click" =>
-            st.copy(pending = st.pending :+ t, lastUs = us, lastId = id)
-          case _ => st.copy(lastUs = us, lastId = id) // non-attribution types
-        }
+            AttrState(Seq.empty, vn, vc, cn, cc,
+              st.directN, st.directCents, us, id)
+          }
+        case (t, _) if t == "view" || t == "click" =>
+          st.copy(pending = st.pending :+ t, lastUs = us, lastId = id)
+        case _ => st.copy(lastUs = us, lastId = id) // non-attribution types
       }
     }
-    st
-  }
 
   /** rows: (user, micros, event_id, event_type, cents). */
   def attribute(rows: Dataset[(Long, Long, Long, String, Long)])
       : Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[AttrState, Out](GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[(Long, Long, Long, String, Long)],
-         state: GroupState[AttrState]) =>
-          val st = foldSlice(it.map(r => (r._2, r._3, r._4, r._5)).toSeq,
-            state.getOption)
-          state.update(st)
-          (user, st.viewN, st.viewCents, st.clickN, st.clickCents,
-            st.directN, st.directCents)
-      }
+    StateFold.keyed(rows, (_: (Long, Long, Long, String, Long))._1) {
+      (user: Long, slice: Seq[(Long, Long, Long, String, Long)], stored: Option[AttrState]) =>
+        val st = foldSlice(slice.map(r => (r._2, r._3, r._4, r._5)), stored)
+        (Some(st), Seq((user, st.viewN, st.viewCents, st.clickN, st.clickCents,
+          st.directN, st.directCents)))
+    }
   }
 }

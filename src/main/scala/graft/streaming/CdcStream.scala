@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming CDC reconciliation — the incremental twin of q121's batch
   * snapshot diff. The closed baseline snapshot loads as INITIAL state
@@ -13,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   *
   * State per key is four longs (baseline n/cents + incremental
   * n/cents) — O(keys) total, O(1) per event. Unlike the in-order twins
-  * ([[SeriesFillStream]], [[CusumStream]]) the fold is COMMUTATIVE
+  * ([[StateFold.inOrder]]) the fold is COMMUTATIVE
   * (count + exact integer cents sum), so there is NO arrival-order
   * contract: any order, any micro-batching — [[CdcStreamSpec]] proves
   * stream == q121-style batch classification across random splits and
@@ -55,13 +54,11 @@ object CdcStream {
                 baseline: KeyValueGroupedDataset[Long, CdcState])
       : Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[CdcState, Out](GroupStateTimeout.NoTimeout(), baseline) {
-        (key: Long, it: Iterator[(Long, Long)], state: GroupState[CdcState]) =>
-          val st = foldSlice(it.map(_._2).toSeq, state.getOption)
-          state.update(st)
-          (key, classify(st), st.addN, st.addCents)
-      }
+    StateFold.keyed(rows, (_: (Long, Long))._1, initial = Some(baseline)) {
+      (key: Long, slice: Seq[(Long, Long)], stored: Option[CdcState]) =>
+        val st = foldSlice(slice.map(_._2), stored)
+        (Some(st), Seq((key, classify(st), st.addN, st.addCents)))
+    }
   }
 
   /** Batch reference the spec holds the stream to: baseline + full

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming one-sided CUSUM — the fixed-target form of q102's batch
   * changepoint detector, folded incrementally: per series, maintain
@@ -19,19 +18,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * the same-target batch window pipeline, and a ScalaCheck law proves
   * split invariance of the kernel).
   *
-  * In-order replay contract (as [[SeriesFillStream]]): a series'
-  * observations arrive in day order across batches; within a batch
-  * any order is fine (the fold re-sorts). Ties on C keep the EARLIEST
-  * peak day (q102's rule).
+  * In-order replay contract ([[StateFold.inOrder]], marks (day, x)): a
+  * series' observations arrive in day order across batches; within a
+  * batch any order is fine (the fold re-sorts). Ties on C keep the
+  * EARLIEST peak day (q102's rule).
   */
 object CusumStream {
 
   /** Per-series state: prefix sum, running min, peak excursion + day,
-    * plus the last-folded (day, x) pair enforcing the in-order replay
-    * contract (the same loud-fail + idempotent-redelivery discipline
-    * as [[SeriesFillStream]]; before round 7 the contract was
-    * documented but unenforced, so a late or duplicate day silently
-    * double-folded into the prefix sum). */
+    * plus the last-folded (day, x) pair, the mark of the in-order
+    * replay contract (before round 7 the contract was documented but
+    * unenforced, so a late or duplicate day silently double-folded
+    * into the prefix sum). */
   final case class CusumState(s: Long, minS: Long, maxC: Long, maxCDay: Int,
                               lastDay: Int, lastX: Long)
 
@@ -44,38 +42,27 @@ object CusumStream {
     * an older day, or the same day with a DIFFERENT value, fails
     * loudly. */
   def foldSlice(obs: Seq[(Int, Long)], state: Option[CusumState],
-                target: Long): CusumState = {
-    var st = state.getOrElse(CusumState(0L, 0L, -1L, -1, Int.MinValue, 0L))
-    obs.sortBy(_._1).foreach { case (day, x) =>
-      if (day == st.lastDay && x == st.lastX) {
-        // exact redelivery of the already-folded observation: skip
-      } else {
-        require(day > st.lastDay,
-          s"out-of-order or contradictory day $day after ${st.lastDay}")
+                target: Long): CusumState =
+    StateFold.inOrder(obs, state.getOrElse(CusumState(0L, 0L, -1L, -1, Int.MinValue, 0L)))(
+      identity, st => if (st.maxC < 0L) None else Some((st.lastDay, st.lastX))) {
+      case (st, (day, x)) =>
         val s = st.s + (x - target)
         val minS = math.min(st.minS, s)
         val c = s - minS
         // strictly-greater keeps the earliest peak day on C ties
-        if (c > st.maxC) st = CusumState(s, minS, c, day, day, x)
-        else st = CusumState(s, minS, st.maxC, st.maxCDay, day, x)
-      }
-    }
-    st
-  }
+        if (c > st.maxC) CusumState(s, minS, c, day, day, x)
+        else CusumState(s, minS, st.maxC, st.maxCDay, day, x)
+    }(Ordering.by(_._1))
 
   /** rows: (series, epochDay, x). Emits the updated peak per touched
     * series (Update-mode semantics). */
   def detect(rows: Dataset[(String, Int, Long)], target: Long): Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[CusumState, Out](GroupStateTimeout.NoTimeout()) {
-        (series: String, it: Iterator[(String, Int, Long)],
-         state: GroupState[CusumState]) =>
-          val st = foldSlice(it.map(r => (r._2, r._3)).toSeq,
-            state.getOption, target)
-          state.update(st)
-          (series, st.maxC, st.maxCDay)
-      }
+    StateFold.keyed(rows, (_: (String, Int, Long))._1) {
+      (series: String, slice: Seq[(String, Int, Long)], stored: Option[CusumState]) =>
+        val st = foldSlice(slice.map(r => (r._2, r._3)), stored, target)
+        (Some(st), Seq((series, st.maxC, st.maxCDay)))
+    }
   }
 
   /** Batch reference the spec holds the stream to: the q102 window

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming telemetry debounce — the incremental twin of q127's
   * session-window form: per (user, event_type), events chaining closer
@@ -12,9 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * buffer at all (the batch session_window materializes the window;
   * the stream never has to).
   *
-  * In-order replay contract (the [[SeriesFillStream]] discipline): a
-  * key's events arrive in (time, event_id) order across batches;
-  * within a batch any order is fine (the fold re-sorts). Exact
+  * In-order replay contract ([[StateFold.inOrder]], marks (time,
+  * event_id)): a key's events arrive in (time, event_id) order across
+  * batches; within a batch any order is fine (the fold re-sorts). Exact
   * redelivery of the last-folded event is an idempotent skip; an older
   * or contradictory event fails loudly. [[DebounceStreamSpec]] proves
   * stream == the batch session-window accounting across splits —
@@ -35,35 +34,24 @@ object DebounceStream {
     * MORE than `gapUs` after the previous event (the q30/q127 strict
     * boundary rule). */
   def foldSlice(obs: Seq[(Long, Long)], state: Option[DebounceState],
-                gapUs: Long): DebounceState = {
-    var st = state.getOrElse(DebounceState(Long.MinValue, Long.MinValue, 0L, 0L))
-    obs.sortBy(identity).foreach { case (us, id) =>
-      if (us == st.lastUs && id == st.lastId) {
-        // exact redelivery of the already-folded event: skip
-      } else {
-        require(us > st.lastUs || (us == st.lastUs && id > st.lastId),
-          s"out-of-order event ($us, $id) after (${st.lastUs}, ${st.lastId})")
+                gapUs: Long): DebounceState =
+    StateFold.inOrder(obs, state.getOrElse(DebounceState(Long.MinValue, Long.MinValue, 0L, 0L)))(
+      identity, st => if (st.nEvents == 0L) None else Some((st.lastUs, st.lastId))) {
+      case (st, (us, id)) =>
         val newBurst = st.nEvents == 0L || us - st.lastUs > gapUs
-        st = DebounceState(us, id, st.nEvents + 1L,
-          st.nKept + (if (newBurst) 1L else 0L))
-      }
+        DebounceState(us, id, st.nEvents + 1L, st.nKept + (if (newBurst) 1L else 0L))
     }
-    st
-  }
 
   /** rows: (user, type, micros, event_id). Emits updated accounting per
     * touched key (Update-mode semantics). */
   def debounce(rows: Dataset[(Long, String, Long, Long)], gapUs: Long)
       : Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(r => (r._1, r._2))
-      .mapGroupsWithState[DebounceState, Out](GroupStateTimeout.NoTimeout()) {
-        (key: (Long, String), it: Iterator[(Long, String, Long, Long)],
-         state: GroupState[DebounceState]) =>
-          val st = foldSlice(it.map(r => (r._3, r._4)).toSeq, state.getOption,
-            gapUs)
-          state.update(st)
-          (key._1, key._2, st.nEvents, st.nKept)
-      }
+    StateFold.keyed(rows, (r: (Long, String, Long, Long)) => (r._1, r._2)) {
+      (key: (Long, String), slice: Seq[(Long, String, Long, Long)],
+       stored: Option[DebounceState]) =>
+        val st = foldSlice(slice.map(r => (r._3, r._4)), stored, gapUs)
+        (Some(st), Seq((key._1, key._2, st.nEvents, st.nKept)))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming exponential moving average — the incremental twin of
   * q140's batch 16-lag window: per series, keep a ring of the last
@@ -18,7 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * The finite-window integer form makes agreement exact — the q140
   * determinism discipline carried into state.
   *
-  * In-order replay contract (as [[SeriesFillStream]]/[[CusumStream]]):
+  * In-order replay contract ([[StateFold.inOrder]], marks (day, x)):
   * observations per series arrive in day order across batches; within a
   * batch any order is fine (the fold re-sorts). Exact redelivery of the
   * already-folded (day, x) pair is an idempotent skip; an older day or
@@ -54,34 +53,23 @@ object EmaStream {
   }
 
   /** Pure shared kernel: fold one in-order slice of (day, x). */
-  def foldSlice(obs: Seq[(Int, Long)], state: Option[EmaState]): EmaState = {
-    var st = state.getOrElse(EmaState(Vector.empty, Int.MinValue, 0L))
-    obs.sortBy(_._1).foreach { case (day, x) =>
-      if (day == st.lastDay && x == st.lastX) {
-        // exact redelivery of the already-folded observation: skip
-      } else {
-        require(day > st.lastDay,
-          s"out-of-order or contradictory day $day after ${st.lastDay}")
-        st = EmaState((st.ring :+ x).takeRight(Window), day, x)
-      }
-    }
-    st
-  }
+  def foldSlice(obs: Seq[(Int, Long)], state: Option[EmaState]): EmaState =
+    StateFold.inOrder(obs, state.getOrElse(EmaState(Vector.empty, Int.MinValue, 0L)))(
+      identity, st => if (st.ring.isEmpty) None else Some((st.lastDay, st.lastX))) {
+      case (st, (day, x)) => EmaState((st.ring :+ x).takeRight(Window), day, x)
+    }(Ordering.by(_._1))
 
   /** rows: (series, epochDay, xCents). Emits the latest EMA per touched
     * series (Update-mode semantics; day = Int.MinValue until any
     * observation arrives). */
   def smooth(rows: Dataset[(String, Int, Long)]): Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[EmaState, Out](GroupStateTimeout.NoTimeout()) {
-        (series: String, it: Iterator[(String, Int, Long)],
-         state: GroupState[EmaState]) =>
-          val st = foldSlice(it.map(r => (r._2, r._3)).toSeq, state.getOption)
-          state.update(st)
-          val (num, den) = weigh(st.ring)
-          (series, st.lastDay, num, den)
-      }
+    StateFold.keyed(rows, (_: (String, Int, Long))._1) {
+      (series: String, slice: Seq[(String, Int, Long)], stored: Option[EmaState]) =>
+        val st = foldSlice(slice.map(r => (r._2, r._3)), stored)
+        val (num, den) = weigh(st.ring)
+        (Some(st), Seq((series, st.lastDay, num, den)))
+    }
   }
 
   /** Batch reference the spec holds the stream to: q140's 16-lag window

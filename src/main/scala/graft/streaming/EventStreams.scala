@@ -74,25 +74,19 @@ object EventStreams {
           col("p_ts") <= col("click_ts") + expr(s"INTERVAL $horizon"))
       .select(col("click_id"), col("user_id"), col("p_ts"), col("value"))
 
-  /** Custom arbitrary-state streaming op (SURVEY §2.10 extension;
-    * `KeyValueGroupedDataset.flatMapGroupsWithState`): running per-user
+  /** Custom arbitrary-state streaming op (SURVEY §2.10 extension; a
+    * commutative [[StateFold.keyed]] fold): running per-user
     * cumulative spend — state the built-in windows cannot express
     * (unbounded accumulation across batches, one state row per user,
     * emitted on every update). Input rows: (user_id, value). */
   def runningUserTotals(events: Dataset[(Long, Double)]): Dataset[(Long, Double, Long)] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Double, Long), (Long, Double, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[(Double, Long)]) =>
-          val (prevSum, prevN) = state.getOption.getOrElse((0.0, 0L))
-          val batch = rows.toSeq
-          val next = (prevSum + batch.map(_._2).sum, prevN + batch.size)
-          state.update(next)
-          Iterator((user, next._1, next._2))
-      }
+    StateFold.keyed(events, (_: (Long, Double))._1) {
+      (user: Long, batch: Seq[(Long, Double)], stored: Option[(Double, Long)]) =>
+        val (prevSum, prevN) = stored.getOrElse((0.0, 0L))
+        val next = (prevSum + batch.map(_._2).sum, prevN + batch.size)
+        (Some(next), Seq((user, next._1, next._2)))
+    }
   }
 
   /** Exactly-once streaming load into a parquet warehouse table —

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming ordered-funnel progression — the incremental twin of
   * q94's batch conversion funnel: per user, track the earliest
@@ -18,9 +17,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * update is monotone — which is exactly why stream == batch for any
   * micro-batching.
   *
-  * In-order replay contract (as [[AsofStream]]/[[SeriesFillStream]]):
-  * a user's events must arrive in event-time order ACROSS batches;
-  * within a batch any order is fine (the fold re-sorts). Ties: an
+  * Replay contract (set semantics in [[StateFold]], not
+  * [[StateFold.inOrder]]): a user's events must arrive in event-time
+  * order ACROSS batches; within a batch any order is fine (the fold
+  * re-sorts), and a redelivered event changes no slot. Ties: an
   * event at EXACTLY the previous stage's time does not advance the
   * funnel (strict `>`, q94's rule). Equal-time events within a stage
   * are harmless — only the first sets the slot.
@@ -32,10 +32,9 @@ object FunnelStream {
 
   /** Per-user state: earliest in-order completion micros per stage
     * index; -1 = not reached. `lastTs` = latest event time folded so
-    * far, used to ENFORCE the in-order-across-batches contract (the
-    * same loud-fail discipline as [[SeriesFillStream]]; before round 7
-    * this contract was documented but unenforced, so a late event
-    * silently corrupted state). Fixed size k+1 — O(users) total. */
+    * far, used to ENFORCE the in-order-across-batches contract (before
+    * round 7 this contract was documented but unenforced, so a late
+    * event silently corrupted state). Fixed size k+1 — O(users) total. */
   final case class FunnelState(t: Seq[Long], lastTs: Long)
 
   /** Output row per touched user: (user, deepest stage reached
@@ -85,16 +84,12 @@ object FunnelStream {
   def progress(rows: Dataset[(Long, Long, Int)], k: Int = Stages.length)
       : Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[FunnelState, Out](GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[(Long, Long, Int)],
-         state: GroupState[FunnelState]) =>
-          val st = foldSlice(it.map(r => (r._2, r._3)).toSeq,
-            state.getOption, k)
-          state.update(st)
-          val (d, ts) = depthOf(st)
-          (user, d, ts)
-      }
+    StateFold.keyed(rows, (_: (Long, Long, Int))._1) {
+      (user: Long, slice: Seq[(Long, Long, Int)], stored: Option[FunnelState]) =>
+        val st = foldSlice(slice.map(r => (r._2, r._3)), stored, k)
+        val (d, ts) = depthOf(st)
+        (Some(st), Seq((user, d, ts)))
+    }
   }
 
   /** Batch reference the spec holds the stream to: q94's chained

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.operators.Postings
 
@@ -29,8 +28,8 @@ import graft.operators.Postings
   * absorbed as at-least-once replays (a posting has no payload to
   * contradict, so redelivery is indistinguishable from — and identical
   * to — the already-folded event; this makes whole-batch replays
-  * idempotent, the [[SeriesFillStream]] discipline without its
-  * contradictory-value case).
+  * idempotent: set semantics, so [[StateFold.keyed]] alone, without
+  * [[StateFold.inOrder]]'s contradictory-value case).
   */
 object PostingsStream {
 
@@ -62,14 +61,11 @@ object PostingsStream {
     * (Update-mode semantics). */
   def maintain(rows: Dataset[(String, Long)]): Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[PostState, Out](GroupStateTimeout.NoTimeout()) {
-        (term: String, it: Iterator[(String, Long)],
-         state: GroupState[PostState]) =>
-          val st = foldSlice(it.map(_._2).toSeq, state.getOption)
-          state.update(st)
-          (term, st.df, st.bytes, st.lastDoc)
-      }
+    StateFold.keyed(rows, (_: (String, Long))._1) {
+      (term: String, slice: Seq[(String, Long)], stored: Option[PostState]) =>
+        val st = foldSlice(slice.map(_._2), stored)
+        (Some(st), Seq((term, st.df, st.bytes, st.lastDoc)))
+    }
   }
 
   /** Batch reference the spec holds the stream to: the q190 kernel. */

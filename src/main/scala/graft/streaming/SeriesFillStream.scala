@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming LOCF gap-fill — the incremental twin of q97's batch
   * calendar regularization: per series, observations arrive in
@@ -25,7 +24,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ([[batchAccounting]]) — the global padding is a presentation join
   * the caller can add from the one-row global span.
   *
-  * In-order replay contract (as [[AsofStream]]/[[AnomalyStream]]):
+  * In-order replay contract ([[StateFold.inOrder]], marks (day, cents)):
   * a series' observations must arrive in day order ACROSS batches
   * (one observation per (series, day) — pre-aggregate the day first);
   * within a batch any order is fine, the group fold re-sorts.
@@ -53,25 +52,17 @@ object SeriesFillStream {
     * genuinely contradictory — an older day, or the same day with a
     * DIFFERENT value — still fails loudly (a silent skip would desync
     * stream and batch). */
-  def foldSlice(obs: Seq[(Int, Long)], state: Option[FillState]): FillState = {
-    var st = state.orNull
-    obs.sortBy(_._1).foreach { case (day, cents) =>
-      if (st == null)
-        st = FillState(day, day, cents, 1L, 0L, cents, 0L)
-      else if (day == st.lastDay && cents == st.lastCents) {
-        // exact redelivery of the already-folded observation: skip
-      } else {
-        require(day > st.lastDay,
-          s"out-of-order or contradictory day $day after ${st.lastDay}")
+  def foldSlice(obs: Seq[(Int, Long)], state: Option[FillState]): FillState =
+    StateFold.inOrder(obs, state)(identity,
+      (_: Option[FillState]).map(st => (st.lastDay, st.lastCents))) {
+      case (None, (day, cents)) => Some(FillState(day, day, cents, 1L, 0L, cents, 0L))
+      case (Some(st), (day, cents)) =>
         val gap = (day - st.lastDay - 1).toLong
-        st = FillState(st.firstDay, day, cents,
+        Some(FillState(st.firstDay, day, cents,
           st.nObs + 1L, st.gapDays + gap,
           st.observedCents + cents,
-          st.carriedCents + gap * st.lastCents)
-      }
-    }
-    st
-  }
+          st.carriedCents + gap * st.lastCents))
+    }(Ordering.by(_._1)).orNull
 
   def accountingOf(series: String, st: FillState): Out = {
     val span = (st.lastDay - st.firstDay + 1).toLong
@@ -83,14 +74,11 @@ object SeriesFillStream {
     * latest row per series is the current answer). */
   def fill(rows: Dataset[(String, Int, Long)]): Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[FillState, Out](GroupStateTimeout.NoTimeout()) {
-        (series: String, it: Iterator[(String, Int, Long)],
-         state: GroupState[FillState]) =>
-          val st = foldSlice(it.map(r => (r._2, r._3)).toSeq, state.getOption)
-          state.update(st)
-          accountingOf(series, st)
-      }
+    StateFold.keyed(rows, (_: (String, Int, Long))._1) {
+      (series: String, slice: Seq[(String, Int, Long)], stored: Option[FillState]) =>
+        val st = foldSlice(slice.map(r => (r._2, r._3)), stored)
+        (Some(st), Seq(accountingOf(series, st)))
+    }
   }
 
   /** The batch reference the spec holds the stream to: the q97 fill

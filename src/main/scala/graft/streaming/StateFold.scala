@@ -1,13 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.pipeline.Pipeline
 
-/** The one micro-batch fold behind the stream operators. An operator
-  * says how a batch merges into its state; this harness owns the rest:
+/** The fold rules of the stream operators, each written once.
+  *
+  * Parquet-state folds ([[fold]]): an operator says how a batch merges
+  * into its state; this harness owns the rest:
   *   1. read the state ([[Pipeline.pathExists]] first heals a swap that
   *      a crash interrupted);
   *   2. require the parameters stamped on the state to be the caller's;
@@ -25,6 +27,21 @@ import graft.pipeline.Pipeline
   *
   * A state with no rows (from an empty first batch) carries no
   * parameters and no high-water, and merges as if there were no state.
+  *
+  * Per-key folds ([[keyed]]) keep one state per key in Spark's state
+  * store, which checkpoints it with the offsets, so a replayed batch
+  * restarts from the state before it. What such a fold must still absorb
+  * is a redelivered or late observation, and its algebra decides how:
+  *   - COMMUTATIVE (Cdc's counts, running totals): any order and any
+  *     micro-batching give the same state;
+  *   - SET SEMANTICS (TopK's best-k set, Postings' doc-id cursor,
+  *     Funnel's earliest stage times): a redelivered observation is
+  *     already in the state and changes nothing.
+  * These two are their own replay rule and use [[keyed]] alone. A fold
+  * that is neither, a prefix fold over positions (Ema, Cusum,
+  * SeriesFill, Debounce, Attribution, Anomaly), folds through
+  * [[inOrder]]: an exact redelivery of the last folded observation is
+  * skipped, any other observation at or before it raises.
   */
 object StateFold {
 
@@ -83,4 +100,50 @@ object StateFold {
         stamps.foldLeft(merge(state)) { case (d, (c, v)) => d.withColumn(c, v) }, path)
     }
   }
+
+  /** Group `rows` by `key` and fold each key's slice of a micro-batch
+    * into its stored state: `fold(key, slice, stored)` returns the state
+    * to store (None removes it) and the rows to emit. The one
+    * `*GroupsWithState` site of the stream operators.
+    *
+    * @param mode    Update for the one-row-per-key operators, Append for
+    *                those that emit per event
+    * @param initial state loaded for its keys before the first batch */
+  def keyed[R, K: Encoder, S: Encoder, O: Encoder](
+      rows: Dataset[R], key: R => K, mode: OutputMode = OutputMode.Update(),
+      initial: Option[KeyValueGroupedDataset[K, S]] = None)
+      (fold: (K, Seq[R], Option[S]) => (Option[S], Seq[O])): Dataset[O] = {
+    val step = (k: K, it: Iterator[R], state: GroupState[S]) => {
+      val (next, out) = fold(k, it.toSeq, state.getOption)
+      next.fold(state.remove())(state.update)
+      out.iterator
+    }
+    val grouped = rows.groupByKey(key)
+    initial.fold(grouped.flatMapGroupsWithState[S, O](mode, GroupStateTimeout.NoTimeout())(step))(
+      init => grouped.flatMapGroupsWithState[S, O](mode, GroupStateTimeout.NoTimeout(), init)(step))
+  }
+
+  /** The in-order rule of the order-dependent per-key folds: fold the
+    * slice `obs` into `state` in position order. An observation whose
+    * mark equals the last folded one is an exact redelivery and is
+    * skipped; any other observation must sit after the last folded
+    * position, or the fold raises (a silent fold would make stream and
+    * batch disagree).
+    *
+    * @param mark what a state remembers of an observation: equal marks
+    *             are the same observation
+    * @param last the last folded mark of a state, None before any
+    * @param pos  the position order of marks
+    * @param step fold one observation */
+  def inOrder[A, M, S](obs: Seq[A], state: S)(mark: A => M, last: S => Option[M])
+      (step: (S, A) => S)(implicit pos: Ordering[M]): S =
+    obs.sortBy(mark).foldLeft(state) { (st, a) =>
+      val m = mark(a)
+      last(st) match {
+        case Some(l) if l == m => st
+        case l =>
+          l.foreach(l => require(pos.gt(m, l), s"out-of-order or contradictory $m after $l"))
+          step(st, a)
+      }
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming bounded top-k per group — the incremental twin of q125's
   * native aggregate (plans/TopKPairs): per group, keep the k best
@@ -41,14 +40,11 @@ object TopKStream {
     * group (Update-mode semantics). */
   def topK(rows: Dataset[(String, Long, Long)], k: Int): Dataset[Out] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_._1)
-      .mapGroupsWithState[TopState, Out](GroupStateTimeout.NoTimeout()) {
-        (g: String, it: Iterator[(String, Long, Long)],
-         state: GroupState[TopState]) =>
-          val st = TopState(foldSlice(it.map(r => (r._2, r._3)).toSeq,
-            state.getOption.map(_.pairs).getOrElse(Seq.empty), k))
-          state.update(st)
-          (g, st.pairs.map(_._1), st.pairs.map(_._2))
-      }
+    StateFold.keyed(rows, (_: (String, Long, Long))._1) {
+      (g: String, slice: Seq[(String, Long, Long)], stored: Option[TopState]) =>
+        val st = TopState(foldSlice(slice.map(r => (r._2, r._3)),
+          stored.map(_.pairs).getOrElse(Seq.empty), k))
+        (Some(st), Seq((g, st.pairs.map(_._1), st.pairs.map(_._2))))
+    }
   }
 }

@@ -93,4 +93,33 @@ class AnomalyStreamSpec extends SparkSpec {
         "within-batch arrival order must not matter (group re-sorts)")
     } finally q.stop()
   }
+
+  /** Feed `batches` to one anomaly query; the rows it emitted. */
+  private def streamed(name: String, batches: Seq[Seq[(Long, Long, Long, Long)]])
+      : Seq[(Long, Long, Boolean)] = {
+    implicit val ctx = spark.sqlContext
+    val input = MemoryStream[(Long, Long, Long, Long)]
+    val q = AnomalyStream.anomalies(input.toDS()).writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      spark.table(name).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    } finally q.stop()
+  }
+
+  test("a late event in a second batch raises") {
+    val (a, b) = rows.filter(_._1 == 1L).splitAt(20)
+    val late = (1L, a(5)._2, 99L, 9000L) // before the last folded event
+    val e = intercept[Exception](streamed("anoms_late", Seq(a, late +: b)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+  }
+
+  test("an exact redelivery of the last event adds no row") {
+    val (a, b) = rows.splitAt(20)
+    val got = streamed("anoms_redeliver", Seq(a, Seq(a.last), b))
+    assert(got.size == rows.size, "the redelivered event must not be scored twice")
+    assert(got.toSet == batchFlags)
+  }
 }

@@ -84,4 +84,14 @@ class AsofStreamSpec extends SparkSpec {
     val (out3, _) = AsofStream.foldSlice(Seq((2L, 5L, 1, 3L, 0.0)), None)
     assert(out3 == Seq((3L, 2L, 5L, false, 0.0)), "no right row yet -> unmatched")
   }
+
+  test("a late event in a second batch raises") {
+    // a left event before the folded right row would miss its match; a
+    // right one would move the state back
+    Seq((1L, 50L, 1, 2L, 0.0), (1L, 50L, 0, 3L, 7.0)).foreach { late =>
+      val e = intercept[Exception](streamed(Seq(Seq((1L, 100L, 0, 1L, 5.0)), Seq(late))))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+    }
+  }
 }

@@ -103,8 +103,10 @@ object StateFold {
 
   /** Group `rows` by `key` and fold each key's slice of a micro-batch
     * into its stored state: `fold(key, slice, stored)` returns the state
-    * to store (None removes it) and the rows to emit. The one
-    * `*GroupsWithState` site of the stream operators.
+    * to store and the rows to emit. The state is None only while a key
+    * has nothing to keep (an as-of key that has seen no right row yet);
+    * the stored state is then left as it is. The one `*GroupsWithState`
+    * site of the stream operators.
     *
     * @param mode    Update for the one-row-per-key operators, Append for
     *                those that emit per event
@@ -115,7 +117,7 @@ object StateFold {
       (fold: (K, Seq[R], Option[S]) => (Option[S], Seq[O])): Dataset[O] = {
     val step = (k: K, it: Iterator[R], state: GroupState[S]) => {
       val (next, out) = fold(k, it.toSeq, state.getOption)
-      next.fold(state.remove())(state.update)
+      next.foreach(state.update)
       out.iterator
     }
     val grouped = rows.groupByKey(key)

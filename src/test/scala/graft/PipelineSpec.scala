@@ -855,4 +855,19 @@ class PipelineSpec extends SparkSpec {
       assert(tierFiles(root) == after, s"$what: the rebuilt record did not vouch for the next run")
     }
   }
+
+  test("forkJoin joins every task before it rethrows the first failure in task order") {
+    import java.util.concurrent.CountDownLatch
+    import java.util.concurrent.atomic.AtomicBoolean
+    val thirdFailed, firstFailed = new CountDownLatch(1)
+    val secondDone = new AtomicBoolean(false)
+    // task 2 fails first in time, task 0 next; task 1 is still running then
+    val e = intercept[IllegalStateException](Pipeline.forkJoin(Seq[() => Int](
+      () => { thirdFailed.await(); firstFailed.countDown(); throw new IllegalStateException("task 0") },
+      () => { firstFailed.await(); Thread.sleep(300); secondDone.set(true); 1 },
+      () => { thirdFailed.countDown(); throw new IllegalArgumentException("task 2") })))
+    assert(e.getMessage == "task 0")
+    assert(secondDone.get, "rethrown before a running task was joined")
+    assert(Pipeline.forkJoin(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
+  }
 }
